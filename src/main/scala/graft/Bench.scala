@@ -9,7 +9,7 @@ object Bench {
     * 0.17 s under count() and 9.4 s when a filter forced it — the
     * benchmark must charge the real price). Iterating the plan's
     * InternalRow RDD materializes every projection and keeps the sort. */
-  private def consume(df: org.apache.spark.sql.DataFrame): Long =
+  private[graft] def consume(df: org.apache.spark.sql.DataFrame): Long =
     df.queryExecution.toRdd.mapPartitions { it =>
       var n = 0L
       while (it.hasNext) { it.next(); n += 1 }

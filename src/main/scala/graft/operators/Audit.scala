@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Data-quality constraint audit (the validation gate a warehouse
   * load runs before publishing — SURVEY §2.10's write-gate protocol
@@ -134,7 +135,9 @@ object Audit {
     * summarized). The fold is counter addition, so the drained store
     * equals the histogram one batch build over the concatenated
     * stream would produce — the streaming drift monitor and the batch
-    * q183 arithmetic cannot drift.
+    * q183 arithmetic cannot drift. The stored counts and the batch's
+    * per-row increments (`cnt = 1`) are summed in ONE
+    * `groupBy(bucket)`, not counted first and merged second.
     *
     * `batchId` (a foreachBatch id) makes the fold replay-idempotent:
     * a batch whose id is already stamped into the store is a no-op
@@ -147,12 +150,11 @@ object Audit {
     val last = Stores.lastApplied(spark, path)
     if (batchId.exists(_ <= last)) return // replayed micro-batch
     val applied = math.max(last, batchId.getOrElse(-1L))
-    val inc = batch
-      .groupBy(col(bucketCol).cast("long").as("bucket"))
-      .agg(count(lit(1)).as("cnt"))
+    val inc = batch.select(col(bucketCol).cast("long").as("bucket"),
+      lit(1L).as("cnt"))
     val merged =
-      if (!Stores.payloadExists(spark, path)) inc
-      else readHistogramStore(spark, path).unionByName(inc)
+      (if (!Stores.payloadExists(spark, path)) inc
+       else readHistogramStore(spark, path).unionByName(inc))
         .groupBy(col("bucket")).agg(sum(col("cnt")).as("cnt"))
     // the merge reads the current generation and commits the next
     // (Stores.commitPayload), so read and write never touch the same
@@ -163,10 +165,14 @@ object Audit {
     }
   }
 
+  /** Schema of a persisted histogram — pinned on every read, so
+    * reading the store launches no schema-inference job. */
+  val HistogramSchema: StructType = new StructType()
+    .add("bucket", LongType).add("cnt", LongType)
+
   def readHistogramStore(spark: org.apache.spark.sql.SparkSession,
                          path: String): DataFrame =
-    Stores.readPayload(spark, path)
-      .select(col("bucket").cast("long"), col("cnt").cast("long"))
+    Stores.readPayload(spark, path, Some(HistogramSchema))
 
   /** Laplace-smoothed population-stability-index terms between a
     * reference histogram and a current one over the dense

@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.Scalars
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 /** Count-Min sketch (Cormode & Muthukrishnan 2005) — the mergeable
   * point-frequency summary that, like [[Kmv]] and unlike SpaceSaving,
@@ -43,7 +44,16 @@ object CountMin {
   /** Per-group sparse cells `(groupCols*, row, pos, cnt)`: each input
     * row increments one cell per sketch row. */
   def sketch(df: DataFrame, groupCols: Seq[String], valueCol: String,
-             depth: Int, width: Int): DataFrame = {
+             depth: Int, width: Int): DataFrame =
+    increments(df, groupCols, valueCol, depth, width)
+      .groupBy((groupCols :+ "row" :+ "pos").map(col): _*)
+      .agg(count(lit(1)).as("cnt"))
+
+  /** The un-aggregated increments `(groupCols*, row, pos)` behind
+    * [[sketch]]: one row per input row and sketch row. */
+  private def increments(df: DataFrame, groupCols: Seq[String],
+                         valueCol: String, depth: Int,
+                         width: Int): DataFrame = {
     require(depth >= 1 && depth <= 16, s"depth=$depth outside [1, 16]")
     require(width >= 2, s"width=$width — need at least 2 buckets")
     val incs = (0 until depth).map(i =>
@@ -52,8 +62,6 @@ object CountMin {
     df.select(groupCols.map(col) :+ explode(array(incs: _*)).as("c"): _*)
       .select(groupCols.map(col) :+ col("c.row").as("row") :+
         col("c.pos").as("pos"): _*)
-      .groupBy((groupCols :+ "row" :+ "pos").map(col): _*)
-      .agg(count(lit(1)).as("cnt"))
   }
 
   /** Merge sketches upward (e.g. month → global): counter addition.
@@ -71,9 +79,19 @@ object CountMin {
     * folds sign with ITS parameters, not the caller's. */
   final case class CountMinStore(cells: DataFrame, depth: Int, width: Int)
 
+  /** Schema of a persisted grid's cells — pinned on every read, so
+    * reading a store launches no schema-inference job. */
+  val CellSchema: StructType = new StructType()
+    .add("row", IntegerType).add("pos", LongType).add("cnt", LongType)
+
   /** Persist a merged grid (no group columns) with its manifest.
     * `applied` stamps the cells write with the highest foreachBatch
     * id folded in ([[Stores]]); -1 for batch-built stores.
+    *
+    * Layout: `<path>/params` is the one-line manifest
+    * `depth=<d> width=<w>` ([[Stores.writeManifest]] — an atomic
+    * marker write, no Spark job), `<path>/cells` the generation store
+    * of `(row, pos, cnt)` cells ([[CellSchema]]).
     *
     * Write ORDER is the crash contract: params first, committed cells
     * second, so the cells commit (a [[Stores.commitPayload]] pointer
@@ -86,9 +104,8 @@ object CountMin {
   def writeStore(cells: DataFrame, path: String, depth: Int,
                  width: Int, applied: Long = -1L,
                  writer: Option[String] = None): Unit = {
-    cells.sparkSession.createDataFrame(Seq((depth, width)))
-      .toDF("depth", "width")
-      .write.mode("overwrite").parquet(s"$path/params")
+    Stores.writeManifest(cells.sparkSession, s"$path/params",
+      "depth" -> depth, "width" -> width)
     writeCells(cells, path, applied, writer)
   }
 
@@ -109,21 +126,27 @@ object CountMin {
     }
 
   /** Read a [[writeStore]] grid back, manifest included (the
-    * idempotence stamp stays out of query plans). */
+    * idempotence stamp stays out of query plans). Zero Spark jobs:
+    * the manifest is a marker read and the cells are read with the
+    * pinned [[CellSchema]]. */
   def readStore(spark: org.apache.spark.sql.SparkSession,
                 path: String): CountMinStore = {
-    val p = spark.read.parquet(s"$path/params").head()
+    val p = Stores.readManifest(spark, s"$path/params").getOrElse(
+      throw new IllegalStateException(s"no Count-Min manifest under $path"))
     CountMinStore(
-      Stores.readPayload(spark, s"$path/cells")
-        .select("row", "pos", "cnt"),
-      p.getAs[Int]("depth"), p.getAs[Int]("width"))
+      Stores.readPayload(spark, s"$path/cells", Some(CellSchema)),
+      p("depth"), p("width"))
   }
 
   /** Fold a batch into a persisted grid by counter addition: create
-    * the store with (`depth`, `width`) when absent, otherwise sketch
+    * the store with (`depth`, `width`) when absent, otherwise address
     * the batch with the MANIFEST's parameters (the caller's are for
     * creation only — a drifted caller cannot corrupt an existing
-    * grid) and commit the merged cells. The merge reads the current
+    * grid) and commit the merged cells. The merge is ONE aggregation:
+    * the stored cells and the batch's per-row increments (`cnt = 1`)
+    * are summed in a single `groupBy(row, pos)` — counter addition
+    * is associative, so this equals sketching the batch and merging
+    * the two grids, minus one shuffle. It reads the current
     * generation and writes the NEXT ([[Stores.commitPayload]]), so
     * the read and the write can never touch the same files; the grid
     * is ≤ depth×width rows, so this is kilobytes.
@@ -151,7 +174,8 @@ object CountMin {
       val store = readStore(spark, path)
       val grown = merge(
         store.cells.unionByName(
-          sketch(batch, Seq.empty, valueCol, store.depth, store.width)),
+          increments(batch, Seq.empty, valueCol, store.depth, store.width)
+            .withColumn("cnt", lit(1L))),
         Seq.empty)
       // manifest immutable: cells only
       writeCells(grown, path, applied, writer)

@@ -4,6 +4,7 @@ import graft.functions.Scalars
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructType}
 
 /** Bottom-k quantile sketch — the mergeable rank/quantile summary
   * completing the sketch family (KMV cardinality / HLL rollup /
@@ -126,7 +127,17 @@ object QuantileSketch {
     * whatever the source key type. */
   final case class QuantileStore(rows: DataFrame, k: Int)
 
-  /** Write ORDER is the crash contract (the [[CountMin.writeStore]]
+  /** Schema of a persisted sample's rows — pinned on every read, so
+    * reading a store launches no schema-inference job. */
+  val RowSchema: StructType = new StructType()
+    .add("h", LongType).add("key", StringType).add("value", DoubleType)
+
+  /** Layout: `<path>/params` is the one-line manifest `k=<k>`
+    * ([[Stores.writeManifest]] — an atomic marker write, no Spark
+    * job), `<path>/rows` the generation store of `(h, key, value)`
+    * sample rows ([[RowSchema]]).
+    *
+    * Write ORDER is the crash contract (the [[CountMin.writeStore]]
     * discipline): params first, committed rows second, so the rows
     * commit (a [[Stores.commitPayload]] pointer flip) is the single
     * commit point — a crash in between leaves no committed rows and
@@ -136,8 +147,7 @@ object QuantileSketch {
   def writeStore(sk: DataFrame, path: String, k: Int,
                  applied: Long = -1L,
                  writer: Option[String] = None): Unit = {
-    sk.sparkSession.createDataFrame(Seq(Tuple1(k))).toDF("k")
-      .write.mode("overwrite").parquet(s"$path/params")
+    Stores.writeManifest(sk.sparkSession, s"$path/params", "k" -> k)
     writeRows(sk, path, applied, writer)
   }
 
@@ -156,24 +166,29 @@ object QuantileSketch {
         .write.mode("overwrite").parquet(dir)
     }
 
+  /** Read a [[writeStore]] sample back, manifest included. Zero Spark
+    * jobs: the manifest is a marker read and the rows are read with
+    * the pinned [[RowSchema]]. */
   def readStore(spark: org.apache.spark.sql.SparkSession,
                 path: String): QuantileStore = {
-    val p = spark.read.parquet(s"$path/params").head()
+    val p = Stores.readManifest(spark, s"$path/params").getOrElse(
+      throw new IllegalStateException(s"no quantile manifest under $path"))
     QuantileStore(
-      Stores.readPayload(spark, s"$path/rows")
-        .select("h", "key", "value"),
-      p.getAs[Int]("k"))
+      Stores.readPayload(spark, s"$path/rows", Some(RowSchema)), p("k"))
   }
 
   /** Fold a batch into a persisted sketch: create the store with the
-    * caller's k when absent, otherwise sketch the batch under the
-    * MANIFEST's k, union with the stored rows, collapse re-folded
-    * keys (a re-ingested key keeps its smallest observed value — a
-    * deterministic policy; callers whose values mutate should version
-    * their keys), and re-take the bottom-k. The merge reads the
-    * current generation and commits the next
-    * ([[Stores.commitPayload]]), so the read and the write can never
-    * touch the same files; the store is ≤ k rows.
+    * caller's k when absent, otherwise re-take the bottom-k under the
+    * MANIFEST's k over the stored rows ∪ the batch's rows, collapsing
+    * re-folded keys (a re-ingested key — within the batch or across
+    * batches — keeps its smallest observed value, a deterministic
+    * policy; callers whose values mutate should version their keys).
+    * Collapse and re-take run as ONE aggregation plus a
+    * TakeOrderedAndProject: a batch key outside the batch's own
+    * bottom-k cannot enter the global one, so pre-sketching the batch
+    * would only add a shuffle. The merge reads the current generation
+    * and commits the next ([[Stores.commitPayload]]), so the read and
+    * the write can never touch the same files; the store is ≤ k rows.
     *
     * `batchId` (a foreachBatch id) makes the fold replay-idempotent:
     * a batch whose id is already stamped into the store is a no-op
@@ -190,26 +205,20 @@ object QuantileSketch {
     val last = Stores.lastApplied(spark, s"$path/rows")
     if (batchId.exists(_ <= last)) return // replayed micro-batch
     val applied = math.max(last, batchId.getOrElse(-1L))
-    // collapse batch-INTERNAL duplicate keys before sketching (the
-    // same min-value policy as the store merge below), so a batch
-    // that re-ingests a key still satisfies sketch()'s unique-key
-    // contract; the batch is the small side, the groupBy is cheap
-    val batchOf = (kk: Int) =>
-      sketch(batch
-        .select(col(keyCol).cast("string").as(keyCol),
-          col(valueCol).cast("double").as(valueCol))
-        .groupBy(col(keyCol)).agg(min(col(valueCol)).as(valueCol)),
-        Seq.empty, keyCol, valueCol, kk)
-    if (!exists) writeStore(batchOf(k), path, k, applied, writer)
+    val key = col(keyCol).cast("string")
+    val rows = batch.select(Scalars.portableHash64(key).as("h"),
+      key.as("key"), col(valueCol).cast("double").as("value"))
+    val collapse = (all: DataFrame, kk: Int) => {
+      require(kk >= 2 && kk <= 1000000, s"k=$kk outside [2, 1e6]")
+      mergeToGlobal(all.groupBy(col("h"), col("key"))
+        .agg(min(col("value")).as("value")), kk)
+    }
+    if (!exists) writeStore(collapse(rows, k), path, k, applied, writer)
     else {
       val store = readStore(spark, path)
-      val grown = mergeToGlobal(
-        store.rows.unionByName(batchOf(store.k))
-          .groupBy(col("h"), col("key"))
-          .agg(min(col("value")).as("value")),
-        store.k)
       // manifest immutable: rows only
-      writeRows(grown, path, applied, writer)
+      writeRows(collapse(store.rows.unionByName(rows), store.k), path,
+        applied, writer)
     }
   }
 }

@@ -6,6 +6,7 @@ import java.util.EnumSet
 import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Commit protocol for the persisted sketch stores
   * ([[CountMin.foldIntoStore]], [[QuantileSketch.foldIntoStore]],
@@ -71,16 +72,25 @@ import org.apache.spark.sql.functions._
   * concurrent folds, or folds concurrent with long readers, against
   * one store root.
   *
-  * For the two-dir stores (payload + params manifest) write ORDER
-  * still matters at creation: params first, committed payload second,
-  * so the pointer flip remains the single commit point. Merge folds
-  * rewrite ONLY the payload (the manifest is immutable after
-  * creation). Net invariant: pointer-present ⇒ a fully written
-  * generation and the params manifest, and the stamp read back
-  * describes exactly what that generation folded. StreamingSpec
-  * exercises all three crash windows (params-without-payload,
-  * generation-without-pointer-flip, and a checkpoint rewound past a
-  * committed fold).
+  * '''Manifests.''' The Count-Min and quantile stores keep their
+  * parameters in `<store>/params`, a one-line `name=value` file
+  * written and read through [[writeManifest]] / [[readManifest]] —
+  * the pointer's own tmp+rename marker idiom, so the manifest costs
+  * no Spark job in either direction. Write ORDER still matters at
+  * creation: manifest first, committed payload second, so the
+  * pointer flip remains the single commit point. Merge folds rewrite
+  * ONLY the payload (the manifest is immutable after creation). Net
+  * invariant: pointer-present ⇒ a fully written generation and the
+  * params manifest, and the stamp read back describes exactly what
+  * that generation folded. StreamingSpec exercises all three crash
+  * windows (params-without-payload, generation-without-pointer-flip,
+  * and a checkpoint rewound past a committed fold).
+  *
+  * '''Zero-job reads.''' Fold-store payloads are read with their
+  * declared schema ([[readPayload]]'s `schema`), so resolving a store
+  * — pointer, manifest, payload plan — launches no Parquet
+  * schema-inference job; only the caller's action over the returned
+  * frame does.
   */
 object Stores {
 
@@ -134,6 +144,22 @@ object Stores {
     try out.write(content.getBytes("UTF-8")) finally out.close()
     ctx.rename(tmp, p, Options.Rename.OVERWRITE)
   }
+
+  /** Write a fold store's parameter manifest as ONE line of
+    * space-separated `name=value` fields through [[writeMarkerFile]]
+    * (atomic, no Spark job). */
+  private[graft] def writeManifest(spark: SparkSession, path: String,
+                                   fields: (String, Int)*): Unit =
+    writeMarkerFile(spark, new Path(path),
+      fields.map { case (k, v) => s"$k=$v" }.mkString(" "))
+
+  /** Read a [[writeManifest]] manifest back; None when absent. */
+  private[graft] def readManifest(spark: SparkSession,
+                                  path: String): Option[Map[String, Int]] =
+    readMarkerFile(spark, new Path(path)).map(_.split("\\s+").map { f =>
+      val Array(k, v) = f.split("=", 2)
+      k -> v.toInt
+    }.toMap)
 
   /** Delete a store root's params manifest, gate generation datasets,
     * and gatelog — a FULL rebuild
@@ -242,15 +268,20 @@ object Stores {
     * read through an explicit root-level file list so a half-migrated
     * root — legacy files plus an uncommitted `g0` from a crashed first
     * generation fold — still reads cleanly (see the migration note in
-    * the object scaladoc). */
-  def readPayload(spark: SparkSession, root: String): DataFrame =
+    * the object scaladoc). With a `schema` the read is pinned to it
+    * and launches no schema-inference job; without one Spark infers
+    * the schema from the footers (one job). */
+  def readPayload(spark: SparkSession, root: String,
+                  schema: Option[StructType] = None): DataFrame = {
+    val reader = schema.fold(spark.read)(spark.read.schema)
     resolvePayload(spark, root) match {
       case None => throw new IllegalStateException(
         s"no committed payload under $root")
       case Some(dir) if dir == root =>
-        spark.read.parquet(legacyPayloadFiles(spark, root): _*)
-      case Some(dir) => spark.read.parquet(dir)
+        reader.parquet(legacyPayloadFiles(spark, root): _*)
+      case Some(dir) => reader.parquet(dir)
     }
+  }
 
   /** Atomically replace the payload under `root`: `write` receives
     * the next generation dir (it must write with `mode("overwrite")`

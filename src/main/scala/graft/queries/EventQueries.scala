@@ -1064,9 +1064,8 @@ object EventQueries {
       IncrementalLoad.cleanStaging(root)
       // the replay stamp now rides the store pointer, not the payload
       val applied = graft.operators.Stores.lastApplied(s, s"$store/cells")
-      graft.operators.Stores.readPayload(s, s"$store/cells")
-        .select(col("row"), col("pos"), col("cnt"),
-          lit(applied).as("applied"))
+      graft.operators.CountMin.readStore(s, store).cells
+        .withColumn("applied", lit(applied))
         .orderBy(col("row"), col("pos"))
     }
   }

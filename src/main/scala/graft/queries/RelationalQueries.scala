@@ -2342,9 +2342,8 @@ object RelationalQueries {
       IncrementalLoad.cleanStaging(root)
       // the replay stamp now rides the store pointer, not the payload
       val applied = graft.operators.Stores.lastApplied(s, s"$store/rows")
-      graft.operators.Stores.readPayload(s, s"$store/rows")
-        .select(col("h"), col("key"), col("value"),
-          lit(applied).as("applied"))
+      graft.operators.QuantileSketch.readStore(s, store).rows
+        .withColumn("applied", lit(applied))
         .orderBy(col("h"), col("key"))
     }
   }

@@ -22,22 +22,33 @@ object IncrementalLoad {
     * two micro-batches) plus the root for store/checkpoint paths —
     * the q216 wire's staging, shared by every end-to-end streaming
     * query so the split/glob/trigger plumbing has one source.
-    * `firstHalf` must be a predicate over non-null columns (a null
-    * evaluation would drop the row from BOTH halves). */
+    *
+    * Both halves are written by ONE `coalesce(1)` job partitioned on
+    * an `a`/`b` tag (`in/graft_half=a`, `in/graft_half=b`). The single
+    * writer task sorts on the tag and finishes the `a` file before it
+    * opens the `b` file, and the file source orders new files by
+    * modification time, ties by path, so the first half is always
+    * micro-batch 0 — the arrival order the first-arrival gates rely
+    * on. A row whose `firstHalf` evaluates to NULL goes to the
+    * SECOND half (never dropped). A half with no rows writes no file,
+    * so the stream then has one micro-batch. */
   def stageTwoFileStream(df: DataFrame, firstHalf: org.apache.spark.sql.Column,
                          tag: String): (DataFrame, java.nio.file.Path) = {
+    import org.apache.spark.sql.functions.{lit, when}
+    val half = "graft_half"
+    require(!df.columns.contains(half),
+      s"stageTwoFileStream reserves the column name $half")
     // crash hygiene first: a prior run of this wire killed mid-drain
     // (JVM death — beyond any try/finally) left its staging and
     // per-run index behind; retire such roots before creating ours
     sweepAgedRoots(tag)
     val root = java.nio.file.Files.createTempDirectory(tag)
-    df.filter(firstHalf).coalesce(1)
-      .write.parquet(root.resolve("in/a").toString)
-    df.filter(!firstHalf).coalesce(1)
-      .write.parquet(root.resolve("in/b").toString)
+    df.withColumn(half, when(firstHalf, lit("a")).otherwise(lit("b")))
+      .coalesce(1).write.partitionBy(half)
+      .parquet(root.resolve("in").toString)
     val stream = df.sparkSession.readStream.schema(df.schema)
       .option("maxFilesPerTrigger", "1")
-      .parquet(root.toString + "/in/*/")
+      .parquet(root.toString + s"/in/$half=*/")
     (stream, root)
   }
 
@@ -558,8 +569,15 @@ object IncrementalLoad {
         "checkpoint's batch ids would replay against the compacted " +
         "store's renumbered horizon — hand off to a NEW checkpoint " +
         "dir")
-    val fields = spark.read.parquet(s"$storePath/params")
-      .schema.fieldNames.toSet
+    // a fold store's manifest is a one-line marker file (no kind
+    // field, so it matches none); a gate store's is a parquet dataset
+    val params = new org.apache.hadoop.fs.Path(s"$storePath/params")
+    val pfs = params.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fields =
+      if (pfs.exists(params) && pfs.getFileStatus(params).isFile)
+        S.readManifest(spark, params.toString).map(_.keySet)
+          .getOrElse(Set.empty[String])
+      else spark.read.parquet(params.toString).schema.fieldNames.toSet
     val kinds = gateStoreKinds.filter(k =>
       fields.contains(k.manifestField))
     require(kinds.size == 1,

@@ -1,0 +1,113 @@
+package graft
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+/** Job budgets for the streaming fold-store path: the number of Spark
+  * jobs each store operation and the q248 wire launch, pinned as
+  * COUNTS (not timings) so an edit that brings back a metadata-only
+  * job — a Parquet manifest write or `head()`, a schema-inference
+  * read, a second merge shuffle, a second staging scan — fails here.
+  * The PlanAuditSpec posture applied to the scheduler layer.
+  */
+class JobBudgetSpec extends SparkSpecBase {
+
+  private val TagKey = "graft.jobBudget"
+
+  /** Spark jobs `body` launches. Jobs are attributed through a local
+    * property (inherited by pooled and streaming threads), so jobs of
+    * other threads never count. The listener bus is asynchronous: a
+    * fence job tagged separately is submitted last, and since the bus
+    * delivers events in order, once its start is seen every earlier
+    * job's start has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val fence = s"$tag-fence"
+    val jobs = new AtomicInteger
+    val fenced = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(TagKey)).orNull match {
+          case `tag` => jobs.incrementAndGet()
+          case `fence` => fenced.countDown()
+          case _ =>
+        }
+    }
+    val prev = sc.getLocalProperty(TagKey)
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(TagKey, tag)
+      body
+      sc.setLocalProperty(TagKey, fence)
+      sc.parallelize(Seq(1), 1).count()
+      assert(fenced.await(60, TimeUnit.SECONDS),
+        "the listener bus did not deliver the fence job")
+      jobs.get
+    } finally {
+      sc.setLocalProperty(TagKey, prev)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def tmp(tag: String): String =
+    java.nio.file.Files.createTempDirectory(tag).toString
+
+  test("CountMin store: create and merge fold in ≤ 2 jobs each, " +
+      "readStore launches none") {
+    import spark.implicits._
+    import graft.operators.CountMin
+    val path = tmp("graft_budget_cm")
+    val b1 = (1L to 400L).map(_ % 37).toDF("v")
+    val b2 = (1L to 300L).map(i => (i * 7) % 41).toDF("v")
+    val create = jobsOf(CountMin.foldIntoStore(b1, "v", path, 4, 64,
+      batchId = Some(0L)))
+    val merge = jobsOf(CountMin.foldIntoStore(b2, "v", path, 4, 64,
+      batchId = Some(1L)))
+    val read = jobsOf(CountMin.readStore(spark, path))
+    val replay = jobsOf(CountMin.foldIntoStore(b2, "v", path, 4, 64,
+      batchId = Some(1L)))
+    assert(create <= 2, s"create fold took $create jobs")
+    assert(merge <= 2, s"merge fold took $merge jobs")
+    assert(read == 0, s"readStore took $read jobs")
+    assert(replay == 0, s"a replayed batch took $replay jobs")
+  }
+
+  test("quantile and histogram stores: folds at their one-shuffle " +
+      "counts, reads launch none") {
+    import spark.implicits._
+    import graft.operators.{Audit, QuantileSketch}
+    val qs = tmp("graft_budget_qs")
+    val q1 = (1L to 300L).map(i => (i, (i * 13 % 97).toDouble))
+      .toDF("key", "v")
+    val q2 = (200L to 500L).map(i => (i, (i * 7 % 89).toDouble))
+      .toDF("key", "v")
+    val qCreate = jobsOf(QuantileSketch.foldIntoStore(q1, "key", "v", qs,
+      40, batchId = Some(0L)))
+    val qMerge = jobsOf(QuantileSketch.foldIntoStore(q2, "key", "v", qs,
+      40, batchId = Some(1L)))
+    val qRead = jobsOf(QuantileSketch.readStore(spark, qs))
+    assert(qCreate <= 2, s"quantile create fold took $qCreate jobs")
+    assert(qMerge <= 2, s"quantile merge fold took $qMerge jobs")
+    assert(qRead == 0, s"quantile readStore took $qRead jobs")
+    val hist = tmp("graft_budget_hist")
+    val h1 = (1L to 100L).map(_ % 11).toDF("bucket")
+    val h2 = (1L to 80L).map(i => (i * 3) % 13).toDF("bucket")
+    val hCreate = jobsOf(Audit.histogramFoldIntoStore(h1, "bucket", hist,
+      batchId = Some(0L)))
+    val hMerge = jobsOf(Audit.histogramFoldIntoStore(h2, "bucket", hist,
+      batchId = Some(1L)))
+    val hRead = jobsOf(Audit.readHistogramStore(spark, hist))
+    assert(hCreate <= 2, s"histogram create fold took $hCreate jobs")
+    assert(hMerge <= 2, s"histogram merge fold took $hMerge jobs")
+    assert(hRead == 0, s"readHistogramStore took $hRead jobs")
+  }
+
+  test("q248 streaming Count-Min wire: build + drain in ≤ 11 jobs") {
+    val q = Queries.byName("q248_streaming_countmin")
+    val n = jobsOf(Bench.consume(q.run(spark, sf)))
+    assert(n <= 11, s"q248 build + drain took $n jobs")
+  }
+}

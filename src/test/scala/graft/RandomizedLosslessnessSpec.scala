@@ -398,4 +398,32 @@ class RandomizedLosslessnessSpec extends SparkSpecBase {
       assertBagEqual(got, want)
     }
   }
+
+  test("one-shuffle Count-Min and histogram store folds ≡ the single " +
+      "batch sketch of the union, cell for cell") {
+    import graft.operators.{Audit, CountMin}
+    val r = new scala.util.Random(20261017L)
+    for (round <- 1 to 3) {
+      // 3–5 batches over a tiny domain: heavy repeats, NULLs, and an
+      // empty batch now and then
+      val batches = Seq.fill(3 + r.nextInt(3)) {
+        Seq.fill(r.nextInt(60)) {
+          if (r.nextInt(6) == 0) None else Some(r.nextInt(9).toLong)
+        }.toDF("v")
+      }
+      val dir = java.nio.file.Files.createTempDirectory("graft_fold_eq")
+      val cm = dir.resolve("cm").toString
+      val hist = dir.resolve("hist").toString
+      batches.zipWithIndex.foreach { case (b, i) =>
+        CountMin.foldIntoStore(b, "v", cm, 3, 16, batchId = Some(i.toLong))
+        Audit.histogramFoldIntoStore(b, "v", hist, batchId = Some(i.toLong))
+      }
+      val union = batches.reduce(_.unionByName(_))
+      assertBagEqual(CountMin.readStore(spark, cm).cells,
+        CountMin.sketch(union, Seq.empty, "v", 3, 16))
+      assertBagEqual(Audit.readHistogramStore(spark, hist),
+        union.groupBy(col("v").cast("long").as("bucket"))
+          .agg(count(lit(1)).as("cnt")))
+    }
+  }
 }

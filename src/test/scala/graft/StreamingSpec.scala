@@ -475,6 +475,35 @@ class StreamingSpec extends SparkSpecBase {
     java.nio.file.Files.deleteIfExists(live)
   }
 
+  test("stageTwoFileStream routes NULL-split rows to the second half: " +
+      "no row is lost and micro-batch 0 is exactly the first half") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val df = Seq[(Long, Option[Long])]((1L, Some(1L)), (2L, Some(9L)),
+      (3L, None), (4L, Some(2L)), (5L, None), (6L, Some(7L)))
+      .toDF("id", "split")
+    val (stream, root) = graft.streaming.IncrementalLoad
+      .stageTwoFileStream(df, col("split") < 5L, "graft_nullsplit")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
+    val q = stream.writeStream
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .option("checkpointLocation", root.resolve("ckpt").toString)
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        b.select("id").collect().foreach(r => seen.add((id, r.getLong(0))))
+      }
+      .start()
+    assert(q.awaitTermination(120000), "staged stream did not drain")
+    val got = seen.asScala.toSeq
+    assert(got.map(_._2).sorted == (1L to 6L),
+      s"rows lost or duplicated by the staging: $got")
+    assert(got.filter(_._1 == 0L).map(_._2).toSet == Set(1L, 4L),
+      s"micro-batch 0 is not exactly the first half: $got")
+    assert(got.filter(_._1 == 1L).map(_._2).toSet == Set(2L, 3L, 5L, 6L),
+      s"NULL-split rows did not arrive in the second half: $got")
+    graft.streaming.IncrementalLoad.cleanStaging(root)
+    java.nio.file.Files.deleteIfExists(root)
+  }
+
   test("streaming Count-Min fold: the drained store equals the batch grid " +
       "over the concatenated stream") {
     import spark.implicits._
@@ -816,8 +845,8 @@ class StreamingSpec extends SparkSpecBase {
     // simulate a creation fold that crashed BETWEEN the params write
     // and the cells write (the commit point): params present, no cells
     val cm = root.resolve("cm").toString
-    spark.createDataFrame(Seq((4, 64))).toDF("depth", "width")
-      .write.parquet(s"$cm/params")
+    graft.operators.Stores.writeManifest(spark, s"$cm/params",
+      "depth" -> 4, "width" -> 64)
     // the replayed creation batch must fold in full — the half-written
     // store reads as absent, not as "batch 0 already applied"
     CountMin.foldIntoStore(b1, "v", cm, 4, 64, batchId = Some(0L))
@@ -831,14 +860,35 @@ class StreamingSpec extends SparkSpecBase {
       .agg(sum(col("cnt"))).head.getLong(0) == 200L * 4)
     // same protocol for the quantile store (rows = commit point)
     val qs = root.resolve("qs").toString
-    spark.createDataFrame(Seq(Tuple1(40))).toDF("k")
-      .write.parquet(s"$qs/params")
+    graft.operators.Stores.writeManifest(spark, s"$qs/params", "k" -> 40)
     val q1 = (1L to 60L).map(i => (i, i.toDouble)).toDF("key", "v")
     QuantileSketch.foldIntoStore(q1, "key", "v", qs, 40,
       batchId = Some(0L))
     val qstore = QuantileSketch.readStore(spark, qs)
     assert(qstore.k == 40 && qstore.rows.count() == 40,
       "the re-folded creation batch must populate the sample")
+  }
+
+  test("handoffCompacted refuses a fold-store root by its kind probe, " +
+      "not with a Parquet read error") {
+    import spark.implicits._
+    import graft.operators.{CountMin, QuantileSketch}
+    val root = java.nio.file.Files.createTempDirectory("graft_foldkind")
+    val cm = root.resolve("cm").toString
+    CountMin.foldIntoStore((1L to 50L).toDF("v"), "v", cm, 4, 32)
+    val qs = root.resolve("qs").toString
+    QuantileSketch.foldIntoStore(
+      (1L to 50L).map(i => (i, i.toDouble)).toDF("key", "v"),
+      "key", "v", qs, 10)
+    Seq(cm, qs).zipWithIndex.foreach { case (store, i) =>
+      val ex = intercept[IllegalArgumentException] {
+        graft.streaming.IncrementalLoad.handoffCompacted(spark, store,
+          root.resolve(s"new$i").toString,
+          root.resolve(s"ckpt$i").toString)
+      }
+      assert(ex.getMessage.contains("none of the registered gate " +
+        "store kinds"), ex.getMessage)
+    }
   }
 
   test("mid-merge crash: a generation written without a pointer flip " +
