@@ -73,6 +73,20 @@ object Relational {
       df.schema)
   }
 
+  /** Total order of a BOUNDED result in one task: `coalesce(1)` then a
+    * local sort, instead of `orderBy`'s range-partitioned sort (a
+    * sampling job, a shuffle-map job and a result job for a few dozen
+    * rows). Same rows, same order, same NULL placement as
+    * `orderBy(cols: _*)`.
+    *
+    * The rule: `coalesce(1)` is narrow, so it merges every partition of
+    * the LAST STAGE, not only the result. The stage feeding it must be
+    * bounded — it ends in an aggregate, a join or union of aggregates,
+    * or a bounded store read. Each call site carries a one-line bound
+    * proof; a result whose bound is not evident keeps `orderBy`. */
+  def orderBounded(df: DataFrame, cols: Column*): DataFrame =
+    df.coalesce(1).sortWithinPartitions(cols: _*)
+
   /** Multi-way inner equi-join fold (J1) — the reference's
     * `reduce(pd.merge, on=key)` over per-indicator series
     * (`weekly_dag.py:393-394`). Catalyst picks broadcast-hash for the

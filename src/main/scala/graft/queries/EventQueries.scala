@@ -1064,9 +1064,11 @@ object EventQueries {
       IncrementalLoad.cleanStaging(root)
       // the replay stamp now rides the store pointer, not the payload
       val applied = graft.operators.Stores.lastApplied(s, s"$store/cells")
-      graft.operators.CountMin.readStore(s, store).cells
-        .withColumn("applied", lit(applied))
-        .orderBy(col("row"), col("pos"))
+      // bound: a store read of d × w = 4 × 64 cells
+      Relational.orderBounded(
+        graft.operators.CountMin.readStore(s, store).cells
+          .withColumn("applied", lit(applied)),
+        col("row"), col("pos"))
     }
   }
 

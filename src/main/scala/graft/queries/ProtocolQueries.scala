@@ -54,9 +54,10 @@ object ProtocolQueries {
     val candidates = monthly(
       o.filter(col("o_orderdate") >= to_timestamp(lit("1996-01-01 00:00:00"))
         && col("o_orderdate") < to_timestamp(lit("1998-01-01 00:00:00"))), 1000)
-    sink.unionByName(
-        Relational.newKeysOnly(candidates, sink, Seq("year", "month")))
-      .orderBy(col("year"), col("month"))
+    // bound: two monthly aggregates and their anti-join, ≤ one row per calendar month
+    Relational.orderBounded(sink.unionByName(
+        Relational.newKeysOnly(candidates, sink, Seq("year", "month"))),
+      col("year"), col("month"))
   }
 
   /** q49: replace-partition upsert intent (§3.3: absent→append,
@@ -97,9 +98,11 @@ object ProtocolQueries {
     val updates = monthly(
       o.filter(col("o_orderdate") >= to_timestamp(lit("1997-01-01 00:00:00"))
         && col("o_orderdate") < to_timestamp(lit("1999-01-01 00:00:00"))), 2)
-    Relational.newKeysOnly(base, updates, Seq("year", "month"))
-      .unionByName(updates)
-      .orderBy(col("year"), col("month"))
+    // bound: two monthly aggregates and their anti-join, ≤ one row per calendar month
+    Relational.orderBounded(
+      Relational.newKeysOnly(base, updates, Seq("year", "month"))
+        .unionByName(updates),
+      col("year"), col("month"))
   }
 
   /** q65: the reference's signature pipeline end to end as ONE
@@ -180,12 +183,12 @@ object ProtocolQueries {
         wide.select(col("year"), col("month"), col("value_ORDERS"),
           col("value_REVENUE")),
         existing, Seq("year", "month")))
-    // 5. read-back aggregate
-    merged.groupBy(col("year"))
+    // 5. read-back aggregate; bound: one row per calendar year
+    Relational.orderBounded(merged.groupBy(col("year"))
       .agg(count(lit(1)).as("n_months"),
         Exact.dsum(col("value_ORDERS")).as("total_orders"),
-        Exact.dsum(col("value_REVENUE")).as("total_revenue"))
-      .orderBy(col("year"))
+        Exact.dsum(col("value_REVENUE")).as("total_revenue")),
+      col("year"))
   }
 
   /** q69: the scraped key-value leg end to end (`weekly_dag.py:56-88`
@@ -215,10 +218,11 @@ object ProtocolQueries {
     val wide = Relational.pivotKV(
       graft.sources.Ingest.keyValueScrape(s, payloads),
       "ticker", "metric", "value", Seq("acctbal", "mktsegment"))
-    wide.groupBy(col("mktsegment"))
+    // bound: an aggregate over the 5-value market-segment dictionary
+    Relational.orderBounded(wide.groupBy(col("mktsegment"))
       .agg(count(lit(1)).as("n"),
-        Exact.dsum(col("acctbal").cast("double")).as("total_bal"))
-      .orderBy(col("mktsegment"))
+        Exact.dsum(col("acctbal").cast("double")).as("total_bal")),
+      col("mktsegment"))
   }
 
   /** q255: the per-entity history union end to end (`daily_dag.py:
@@ -257,7 +261,8 @@ object ProtocolQueries {
       else
         f.select(col("c_custkey").as("k"), col("c_acctbal").as("bal"))
     }
-    graft.sources.Ingest.taggedUnion(Seq(
+    // bound: an aggregate over the 3 tagged entities
+    Relational.orderBounded(graft.sources.Ingest.taggedUnion(Seq(
         "automobile" -> hist("AUTOMOBILE", reversed = false),
         "building" -> hist("BUILDING", reversed = true),
         "machinery" -> hist("MACHINERY", reversed = false)),
@@ -265,8 +270,8 @@ object ProtocolQueries {
       .groupBy(col("entity"))
       .agg(count(lit(1)).as("n_rows"),
         min(col("k")).as("first_key"), max(col("k")).as("last_key"),
-        Exact.dsum(col("bal")).as("total_bal"))
-      .orderBy(col("entity"))
+        Exact.dsum(col("bal")).as("total_bal")),
+      col("entity"))
   }
 
   /** q71: snapshot diff / CDC change classification
@@ -318,12 +323,14 @@ object ProtocolQueries {
       o.filter(col("o_orderdate") < to_timestamp(lit("1999-01-01 00:00:00")))
         .withColumn("p", when(year(col("o_orderdate")) === 1997,
           col("o_totalprice") * 2).otherwise(col("o_totalprice"))))
-    Relational.snapshotDiff(olds, news, Seq("year", "month"))
-      .groupBy(col("change"))
-      .agg(count(lit(1)).as("n"),
-        min(col("year") * 100 + col("month")).cast("int").as("first_ym"),
-        max(col("year") * 100 + col("month")).cast("int").as("last_ym"))
-      .orderBy(col("change"))
+    // bound: an aggregate over the 4 change classes
+    Relational.orderBounded(
+      Relational.snapshotDiff(olds, news, Seq("year", "month"))
+        .groupBy(col("change"))
+        .agg(count(lit(1)).as("n"),
+          min(col("year") * 100 + col("month")).cast("int").as("first_ym"),
+          max(col("year") * 100 + col("month")).cast("int").as("last_ym")),
+      col("change"))
   }
 
   /** q80: CDC APPLY (`Relational.applyChanges` — the merge that lands
@@ -379,14 +386,16 @@ object ProtocolQueries {
       .withColumn("o_orderstatus", lit("N"))
       .withColumn("op", lit("I")).withColumn("seq", lit(1))
     val changes = updates.unionByName(deletes).unionByName(inserts)
-    Relational.applyChanges(o, changes, Seq("o_orderkey"), "op", "seq")
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"),
-        Exact.dsum(col("o_totalprice")).as("total_price"),
-        max(col("o_orderkey")).as("max_key"))
-      .select(col("o_orderstatus").as("status"), col("n"),
-        col("total_price"), col("max_key"))
-      .orderBy(col("status"))
+    // bound: an aggregate over the order-status dictionary (F, O, P, N)
+    Relational.orderBounded(
+      Relational.applyChanges(o, changes, Seq("o_orderkey"), "op", "seq")
+        .groupBy(col("o_orderstatus"))
+        .agg(count(lit(1)).as("n"),
+          Exact.dsum(col("o_totalprice")).as("total_price"),
+          max(col("o_orderkey")).as("max_key"))
+        .select(col("o_orderstatus").as("status"), col("n"),
+          col("total_price"), col("max_key")),
+      col("status"))
   }
 
   /** q84: partial-aggregate maintenance (`Rollups.partials` →
@@ -408,14 +417,16 @@ object ProtocolQueries {
       import graft.operators.Rollups
       val daily = Rollups.partials(Tables.orders(s, dir), "o_orderdate",
         "day", Seq("o_orderpriority"), "o_totalprice")
-      Rollups.reaggregate(daily, "month", Seq("o_orderpriority"))
-        .select(year(col("bucket")).as("year"),
-          month(col("bucket")).as("month"),
-          col("o_orderpriority").as("priority"),
-          col("pcount").as("n"),
-          col("psum").cast("double").as("total"),
-          col("pmin").as("min_price"), col("pmax").as("max_price"))
-        .orderBy(col("year"), col("month"), col("priority"))
+      // bound: an aggregate per calendar month × the 5 priorities
+      Relational.orderBounded(
+        Rollups.reaggregate(daily, "month", Seq("o_orderpriority"))
+          .select(year(col("bucket")).as("year"),
+            month(col("bucket")).as("month"),
+            col("o_orderpriority").as("priority"),
+            col("pcount").as("n"),
+            col("psum").cast("double").as("total"),
+            col("pmin").as("min_price"), col("pmax").as("max_price")),
+        col("year"), col("month"), col("priority"))
   }
 
   /** q92: distinct counts FROM PARTIAL STATE (`Rollups
@@ -448,13 +459,15 @@ object ProtocolQueries {
       .groupBy(date_trunc("month", col("o_orderdate")).as("bucket"),
         col("o_orderpriority"))
       .agg(countDistinct(col("o_custkey")).as("exact_distinct"))
-    monthly.join(exact, Seq("bucket", "o_orderpriority"))
-      .select(col("bucket"), col("o_orderpriority").as("priority"),
-        col("exact_distinct"),
-        (abs(col("est") - col("exact_distinct")) <=
-          greatest(lit(3.0), lit(0.1) * col("exact_distinct")))
-          .as("est_ok"))
-      .orderBy(col("bucket"), col("priority"))
+    // bound: a join of two aggregates per calendar month × the 5 priorities
+    Relational.orderBounded(
+      monthly.join(exact, Seq("bucket", "o_orderpriority"))
+        .select(col("bucket"), col("o_orderpriority").as("priority"),
+          col("exact_distinct"),
+          (abs(col("est") - col("exact_distinct")) <=
+            greatest(lit(3.0), lit(0.1) * col("exact_distinct")))
+            .as("est_ok")),
+      col("bucket"), col("priority"))
   }
 
   /** q99: data-quality constraint audit (`Audit.audit` — the publish
@@ -505,6 +518,8 @@ object ProtocolQueries {
       .select(col("o_orderkey"), (col("o_custkey") + 10000000).as("o_custkey"),
         col("o_orderdate"), lit("9-BOGUS").as("o_orderpriority"),
         (-col("o_totalprice")).as("o_totalprice"))
+    // a union of single-row global aggregates plans as SinglePartition,
+    // so this orderBy already sorts in one task, with no range exchange
     graft.operators.Audit.audit(o.unionByName(bad),
         rowConstraints = Seq(
           "orderdate_not_null" -> col("o_orderdate").isNotNull,

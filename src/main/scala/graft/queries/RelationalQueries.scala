@@ -250,14 +250,15 @@ object RelationalQueries {
        |  ${Exact.sqlSum("CASE WHEN o_orderpriority = '4-NOT SPECIFIED' THEN o_totalprice END")} AS unspecified,
        |  ${Exact.sqlSum("CASE WHEN o_orderpriority = '5-LOW' THEN o_totalprice END")} AS low
        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-    Tables.orders(s, dir)
+    // bound: an aggregate, one row per calendar year
+    Relational.orderBounded(Tables.orders(s, dir)
       .withColumn("year", year(col("o_orderdate")))
       .groupBy(col("year"))
       .pivot("o_orderpriority",
         Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"))
       .agg(Exact.dsum(col("o_totalprice")))
-      .toDF("year", "urgent", "high", "medium", "unspecified", "low")
-      .orderBy(col("year"))
+      .toDF("year", "urgent", "high", "medium", "unspecified", "low"),
+      col("year"))
   }
 
   /** q11: hierarchical rollup (SURVEY §2.4 "absent" — engine ★). Null
@@ -273,14 +274,15 @@ object RelationalQueries {
        |      FROM orders)
        |GROUP BY ROLLUP(year, month)
        |ORDER BY gid, year ASC NULLS FIRST, month ASC NULLS FIRST""".stripMargin) { (s, dir) =>
-    Tables.orders(s, dir)
+    // bound: a rollup aggregate, ≤ months + years + 1 rows
+    Relational.orderBounded(Tables.orders(s, dir)
       .select(year(col("o_orderdate")).as("year"),
         month(col("o_orderdate")).as("month"), col("o_totalprice"))
       .rollup(col("year"), col("month"))
       .agg(grouping_id().cast("long").as("gid"), count(lit(1)).as("n"),
         Exact.dsum(col("o_totalprice")).as("total"))
-      .select(col("gid"), col("year"), col("month"), col("n"), col("total"))
-      .orderBy(col("gid"), col("year").asc_nulls_first, col("month").asc_nulls_first)
+      .select(col("gid"), col("year"), col("month"), col("n"), col("total")),
+      col("gid"), col("year").asc_nulls_first, col("month").asc_nulls_first)
   }
 
   /** q12: distinct aggregation (SURVEY §2.4 ★). Exact COUNT(DISTINCT)
@@ -370,10 +372,11 @@ object RelationalQueries {
     s"""SELECT date_trunc('month', o_orderdate) AS month_start,
        |  COUNT(*) AS n_orders, ${Exact.sqlSum("o_totalprice")} AS total
        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-    Tables.orders(s, dir)
+    // bound: an aggregate, one row per calendar month
+    Relational.orderBounded(Tables.orders(s, dir)
       .groupBy(trunc(col("o_orderdate"), "month").as("month_start"))
-      .agg(count(lit(1)).as("n_orders"), Exact.dsum(col("o_totalprice")).as("total"))
-      .orderBy(col("month_start"))
+      .agg(count(lit(1)).as("n_orders"), Exact.dsum(col("o_totalprice")).as("total")),
+      col("month_start"))
   }
 
   /** q17: multi-series J1 fold + R3 reshape — the reference's
@@ -404,8 +407,9 @@ object RelationalQueries {
       .agg(Exact.dsum(col("o_totalprice")).as("value_REVENUE"))
     val sOpen = o.filter(col("o_orderstatus") === "O")
       .groupBy(col("m")).agg(count(lit(1)).as("value_OPEN"))
-    Relational.multiJoin(Seq(sOrders, sRevenue, sOpen), Seq("m"))
-      .orderBy(col("m"))
+    // bound: a join of three monthly aggregates, one row per calendar month
+    Relational.orderBounded(
+      Relational.multiJoin(Seq(sOrders, sRevenue, sOpen), Seq("m")), col("m"))
   }
 
   /** q18: set operations (SURVEY §2.7 — intersect/except are the

@@ -30,13 +30,14 @@ object Streams {
 
   /** File-source stream over a DIRECTORY of events parquet files (the
     * file stream source requires a directory basePath; tests stage
-    * `events.parquet` into one). A one-off batch footer read picks the
-    * on-disk `ts` flavor so the stream schema matches either vintage of
-    * the table; graft.Tables.normalizeEventTs then lands both on
-    * session-zoned micros. */
+    * `events.parquet` into one). The footer of the directory's first
+    * data file picks the on-disk `ts` flavor on the driver, with no
+    * Spark job ([[graft.Tables.footerSchema]]), so the stream schema
+    * matches either vintage of the table; graft.Tables.normalizeEventTs
+    * then lands both on session-zoned micros. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val onDiskTs = spark.read.parquet(dir).schema("ts").dataType
+    val onDiskTs = graft.Tables.footerSchema(spark, dir)("ts").dataType
     graft.Tables.normalizeEventTs(
       spark.readStream.schema(eventsRawSchema(onDiskTs)).parquet(dir))
   }

@@ -5,11 +5,12 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-/** Job budgets for the streaming fold-store path: the number of Spark
-  * jobs each store operation and the q248 wire launch, pinned as
-  * COUNTS (not timings) so an edit that brings back a metadata-only
-  * job — a Parquet manifest write or `head()`, a schema-inference
-  * read, a second merge shuffle, a second staging scan — fails here.
+/** Job budgets for the streaming fold-store path, the warehouse table
+  * loaders and the warehouse ETL plans: the number of Spark jobs each
+  * launches, pinned as COUNTS (not timings) so an edit that brings back
+  * a metadata-only job — a Parquet manifest write or `head()`, a
+  * schema-inference read, a second merge shuffle, a second staging
+  * scan, a range-partitioned sort of a bounded result — fails here.
   * The PlanAuditSpec posture applied to the scheduler layer.
   */
 class JobBudgetSpec extends SparkSpecBase {
@@ -105,9 +106,45 @@ class JobBudgetSpec extends SparkSpecBase {
     assert(hRead == 0, s"readHistogramStore took $hRead jobs")
   }
 
-  test("q248 streaming Count-Min wire: build + drain in ≤ 11 jobs") {
+  test("q248 streaming Count-Min wire: build + drain in ≤ 8 jobs") {
     val q = Queries.byName("q248_streaming_countmin")
     val n = jobsOf(Bench.consume(q.run(spark, sf)))
-    assert(n <= 11, s"q248 build + drain took $n jobs")
+    assert(n <= 8, s"q248 build + drain took $n jobs")
+  }
+
+  test("every Tables loader, registerViews and eventsStream launch no job") {
+    val loaders: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)] = Seq(
+      "region" -> (Tables.region _), "nation" -> (Tables.nation _),
+      "customer" -> (Tables.customer _), "supplier" -> (Tables.supplier _),
+      "part" -> (Tables.part _), "orders" -> (Tables.orders _),
+      "lineitem" -> (Tables.lineitem _), "events" -> (Tables.events _),
+      "documents" -> (Tables.documents _), "embeddings" -> (Tables.embeddings _))
+    assert(loaders.map(_._1) == Tables.names)
+    loaders.foreach { case (name, load) =>
+      val n = jobsOf(load(spark, sf))
+      assert(n == 0, s"Tables.$name took $n jobs")
+    }
+    val views = jobsOf(Tables.registerViews(spark, sf))
+    assert(views == 0, s"Tables.registerViews took $views jobs")
+    val dir = tmp("graft_budget_stream")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
+      java.nio.file.Paths.get(dir, "events.parquet"))
+    val stream = jobsOf(graft.streaming.Streams.eventsStream(spark, dir))
+    assert(stream == 0, s"Streams.eventsStream took $stream jobs")
+  }
+
+  test("warehouse ETL plans: build + drain at their measured job counts") {
+    // per query: the aggregate's shuffle-map job(s) plus the one result
+    // job that orders the bounded output (no schema inference job, no
+    // range-sort sample and shuffle jobs)
+    val budgets = Seq("q11_rollup_year_month" -> 2, "q17_macro_series_join" -> 6,
+      "q69_kv_scrape_pivot" -> 3, "q48_dedup_append" -> 5,
+      "q49_upsert_partition" -> 5)
+    val over = budgets.map { case (name, budget) =>
+      (name, budget, jobsOf(Bench.consume(Queries.byName(name).run(spark, sf))))
+    }.filter { case (_, budget, n) => n > budget }
+    assert(over.isEmpty, over.map { case (name, budget, n) =>
+      s"$name build + drain took $n jobs (budget $budget)" }.mkString("; "))
   }
 }

@@ -306,6 +306,24 @@ class PlanAuditSpec extends SparkSpecBase {
       s"a curation ranking stage fell back to single-partition:\n$plan")
   }
 
+  test("orderBounded sites order in one task: no range-partitioning sort") {
+    // each query's output is bounded by a calendar or a dictionary (its
+    // call site states the bound), so Relational.orderBounded sorts the
+    // coalesced last stage locally instead of sampling a range exchange
+    Seq("q10_pivot_priority", "q11_rollup_year_month", "q16_monthly_spine",
+      "q17_macro_series_join", "q48_dedup_append", "q49_upsert_partition",
+      "q65_lifecycle", "q69_kv_scrape_pivot", "q71_snapshot_diff",
+      "q80_cdc_apply", "q84_rollup_maintenance", "q92_hll_rollup",
+      "q255_tagged_history_union",
+      "q248_streaming_countmin").foreach { name =>
+      val plan = planOf(name)
+      assert(!plan.contains("rangepartitioning"),
+        s"$name plans a range-partitioned sort:\n$plan")
+      assert(plan.contains("Coalesce 1"),
+        s"$name no longer orders through orderBounded:\n$plan")
+    }
+  }
+
   test("q120/q133 reuse their cached frames instead of re-scanning") {
     // repeatedSpans' hashed-window explode and q133's distinct
     // (month, customer) frame are declared cache points; the plan
