@@ -10,8 +10,8 @@ import org.apache.spark.sql.types._
   * input types. */
 class TablesSpec extends SparkSpecBase {
 
-  private val fixtures = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
-    "/root/testdata/sf0.1", "perfbench/data/sf0.01")
+  private val fixtures = Seq("sf0.001", "sf0.01", "sf0.1")
+    .map(n => s"${new java.io.File(sf).getParent}/$n") :+ "perfbench/data/sf0.01"
 
   test("footer schema equals Spark's inferred schema for every table") {
     for (dir <- fixtures; name <- Tables.names) {
