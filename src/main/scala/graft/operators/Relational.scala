@@ -87,10 +87,49 @@ object Relational {
   def orderBounded(df: DataFrame, cols: Column*): DataFrame =
     df.coalesce(1).sortWithinPartitions(cols: _*)
 
+  /** One named aggregate of a [[Slice]]: `fn` over `input`. */
+  final case class SliceAgg(name: String, fn: Column => Column, input: Column)
+
+  /** A filtered sub-relation for [[sliceAggregate]]: its rows are those
+    * where `filter` is true, and its named aggregates run over them. */
+  final case class Slice(name: String, filter: Column, aggs: SliceAgg*)
+
+  /** Sibling aggregates of ONE relation in one scan and one shuffle:
+    * the fused form of per-slice `filter.groupBy(keys).agg(...)` frames
+    * that a caller would otherwise join ([[multiJoin]]) or anti-join
+    * ([[newKeysOnly]]) on the keys: the per-slice scans, shuffles and
+    * join exchanges collapse into one aggregate.
+    *
+    * `df` is pre-filtered to the OR of the slice filters; one
+    * `groupBy(keys)` then evaluates every slice aggregate over
+    * `when(filter, input)`, so a row feeds exactly the slices whose
+    * filter holds (a NULL filter counts as false, as in `filter`).
+    * Output columns: the keys, then per slice its count and its
+    * aggregates. Per key, column `slice.name` is the slice's row count
+    * — 0 where the separate aggregate would have had no row for the
+    * key, which is what a caller tests to rebuild join semantics: all
+    * slices > 0 for an inner join, "first present slice wins" for the
+    * null-safe `newKeysOnly` ∪ union. Aggregates must ignore NULL
+    * inputs (sum, count, min, max do); their values then equal the
+    * separate aggregates' wherever the slice is present. NULL keys
+    * group together, as in `groupBy`; an inner-join caller drops them. */
+  def sliceAggregate(df: DataFrame, keys: Seq[Column],
+                     slices: Seq[Slice]): DataFrame = {
+    require(slices.nonEmpty, "sliceAggregate needs at least one slice")
+    val aggs = slices.flatMap { s =>
+      count(when(s.filter, lit(1))).as(s.name) +:
+        s.aggs.map(a => a.fn(when(s.filter, a.input)).as(a.name))
+    }
+    df.filter(slices.map(_.filter).reduce(_ || _))
+      .groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+  }
+
   /** Multi-way inner equi-join fold (J1) — the reference's
     * `reduce(pd.merge, on=key)` over per-indicator series
-    * (`weekly_dag.py:393-394`). Catalyst picks broadcast-hash for the
-    * small sides; the fold shape itself imposes no execution order.
+    * (`weekly_dag.py:393-394`) built from SEPARATE relations (series of
+    * one relation fuse with [[sliceAggregate]] instead). Catalyst picks
+    * broadcast-hash for the small sides; the fold shape itself imposes
+    * no execution order.
     */
   def multiJoin(dfs: Seq[DataFrame], keys: Seq[String]): DataFrame =
     dfs.reduce((l, r) => l.join(r, keys, "inner"))

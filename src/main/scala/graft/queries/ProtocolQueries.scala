@@ -3,6 +3,8 @@ package graft.queries
 import graft.{QuerySpec, Tables}
 import graft.functions.Exact
 import graft.operators.Relational
+import graft.operators.Relational.{Slice, SliceAgg}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The reference's warehouse load protocols as PURE queries (SURVEY
@@ -19,7 +21,12 @@ object ProtocolQueries {
     * rows; the candidate batch overlaps 1996–1997. Result = sink ∪
     * anti-joined candidates, aggregated per month. Candidate batch
     * values are perturbed (+1000) so a wrongly-applied overwrite or
-    * double-append is caught by the totals, not just row counts. */
+    * double-append is caught by the totals, not just row counts. Sink
+    * and candidates are slices of one `orders` scan, so one
+    * [[Relational.sliceAggregate]] builds both and the anti-join
+    * becomes a per-month pick: the sink's row where the sink slice is
+    * present, the candidates' otherwise — the null-safe
+    * [[Relational.newKeysOnly]] contract, in one shuffle. */
   val q48DedupAppend: QuerySpec = QuerySpec(
     "q48_dedup_append",
     s"""WITH sink AS (
@@ -42,28 +49,35 @@ object ProtocolQueries {
        |    SELECT 1 FROM sink s WHERE s.year IS NOT DISTINCT FROM c.year
        |      AND s.month IS NOT DISTINCT FROM c.month))
        |SELECT year, month, total FROM merged ORDER BY year, month""".stripMargin) { (s, dir) =>
-    def monthly(df: org.apache.spark.sql.DataFrame, bump: Double) = df
-      .select(year(col("o_orderdate")).as("year"),
-        month(col("o_orderdate")).as("month"),
-        (col("o_totalprice") + bump).as("p"))
-      .groupBy(col("year"), col("month"))
-      .agg(Exact.dsum(col("p")).as("total"))
-    val o = Tables.orders(s, dir)
-    val sink = monthly(
-      o.filter(col("o_orderdate") < to_timestamp(lit("1997-01-01 00:00:00"))), 0)
-    val candidates = monthly(
-      o.filter(col("o_orderdate") >= to_timestamp(lit("1996-01-01 00:00:00"))
-        && col("o_orderdate") < to_timestamp(lit("1998-01-01 00:00:00"))), 1000)
-    // bound: two monthly aggregates and their anti-join, ≤ one row per calendar month
-    Relational.orderBounded(sink.unionByName(
-        Relational.newKeysOnly(candidates, sink, Seq("year", "month"))),
+    // bound: one monthly aggregate, one row per calendar month
+    Relational.orderBounded(dedupAppend(Tables.orders(s, dir)),
       col("year"), col("month"))
+  }
+
+  private def ts(s: String) = to_timestamp(lit(s"$s 00:00:00"))
+  private val monthKeys = Seq(year(col("o_orderdate")).as("year"),
+    month(col("o_orderdate")).as("month"))
+
+  /** q48's merged sink over an `orders`-shaped relation, unordered. */
+  private[graft] def dedupAppend(orders: DataFrame): DataFrame = {
+    val d = col("o_orderdate")
+    Relational.sliceAggregate(orders, monthKeys, Seq(
+        Slice("sink", d < ts("1997-01-01"),
+          SliceAgg("sink_total", Exact.dsum, col("o_totalprice"))),
+        Slice("candidates", d >= ts("1996-01-01") && d < ts("1998-01-01"),
+          SliceAgg("cand_total", Exact.dsum, col("o_totalprice") + 1000.0))))
+      .select(col("year"), col("month"), when(col("sink") > 0,
+        col("sink_total")).otherwise(col("cand_total")).as("total"))
   }
 
   /** q49: replace-partition upsert intent (§3.3: absent→append,
     * changed→replace, identical→no-op): the 1997 partitions arrive
     * re-stated (values bumped), 1998 partitions are new, pre-1997
-    * stays untouched. Result = base anti updates ∪ updates. */
+    * stays untouched. Result = base anti updates ∪ updates: base and
+    * updates are slices of one `orders` scan ([[Relational.sliceAggregate]]),
+    * and each month takes the updates' row where that slice is
+    * present, the base's otherwise. `n` is the chosen slice's presence
+    * count, which is its row count. */
   val q49UpsertPartition: QuerySpec = QuerySpec(
     "q49_upsert_partition",
     s"""WITH base AS (
@@ -86,23 +100,23 @@ object ProtocolQueries {
        |  UNION ALL
        |  SELECT * FROM updates)
        |SELECT year, month, total, n FROM merged ORDER BY year, month""".stripMargin) { (s, dir) =>
-    def monthly(df: org.apache.spark.sql.DataFrame, scale: Double) = df
-      .select(year(col("o_orderdate")).as("year"),
-        month(col("o_orderdate")).as("month"),
-        (col("o_totalprice") * scale).as("p"))
-      .groupBy(col("year"), col("month"))
-      .agg(Exact.dsum(col("p")).as("total"), count(lit(1)).as("n"))
-    val o = Tables.orders(s, dir)
-    val base = monthly(
-      o.filter(col("o_orderdate") < to_timestamp(lit("1998-01-01 00:00:00"))), 1)
-    val updates = monthly(
-      o.filter(col("o_orderdate") >= to_timestamp(lit("1997-01-01 00:00:00"))
-        && col("o_orderdate") < to_timestamp(lit("1999-01-01 00:00:00"))), 2)
-    // bound: two monthly aggregates and their anti-join, ≤ one row per calendar month
-    Relational.orderBounded(
-      Relational.newKeysOnly(base, updates, Seq("year", "month"))
-        .unionByName(updates),
+    // bound: one monthly aggregate, one row per calendar month
+    Relational.orderBounded(upsertPartition(Tables.orders(s, dir)),
       col("year"), col("month"))
+  }
+
+  /** q49's upserted table over an `orders`-shaped relation, unordered. */
+  private[graft] def upsertPartition(orders: DataFrame): DataFrame = {
+    val d = col("o_orderdate")
+    val updated = col("updates") > 0
+    Relational.sliceAggregate(orders, monthKeys, Seq(
+        Slice("base", d < ts("1998-01-01"),
+          SliceAgg("base_total", Exact.dsum, col("o_totalprice"))),
+        Slice("updates", d >= ts("1997-01-01") && d < ts("1999-01-01"),
+          SliceAgg("upd_total", Exact.dsum, col("o_totalprice") * 2.0))))
+      .select(col("year"), col("month"),
+        when(updated, col("upd_total")).otherwise(col("base_total")).as("total"),
+        when(updated, col("updates")).otherwise(col("base")).as("n"))
   }
 
   /** q65: the reference's signature pipeline end to end as ONE

@@ -381,9 +381,13 @@ object RelationalQueries {
 
   /** q17: multi-series J1 fold + R3 reshape — the reference's
     * signature pattern (`weekly_dag.py:382-394`): three per-indicator
-    * monthly series built independently, inner-joined on the month key
-    * into one wide frame. Each series is a tiny aggregate; Catalyst
-    * broadcasts the join sides.
+    * monthly series inner-joined on the month key into one wide frame.
+    * The series are slices of the same `orders` scan, so they fuse into
+    * one [[Relational.sliceAggregate]]: one scan, one shuffle of
+    * month-sized partials, no join. Inner-join semantics are kept by
+    * the presence counts: a month survives only when every series has
+    * a row for it (a month without an `'O'` order is dropped) and its
+    * key is non-NULL (`USING (m)` never matches a NULL month).
     */
   val q17MacroSeriesJoin: QuerySpec = QuerySpec(
     "q17_macro_series_join",
@@ -400,16 +404,23 @@ object RelationalQueries {
        |SELECT m, value_ORDERS, value_REVENUE, value_OPEN
        |FROM s_orders JOIN s_revenue USING (m) JOIN s_open USING (m)
        |ORDER BY m""".stripMargin) { (s, dir) =>
-    val o = Tables.orders(s, dir)
-      .withColumn("m", trunc(col("o_orderdate"), "month"))
-    val sOrders = o.groupBy(col("m")).agg(count(lit(1)).as("value_ORDERS"))
-    val sRevenue = o.groupBy(col("m"))
-      .agg(Exact.dsum(col("o_totalprice")).as("value_REVENUE"))
-    val sOpen = o.filter(col("o_orderstatus") === "O")
-      .groupBy(col("m")).agg(count(lit(1)).as("value_OPEN"))
-    // bound: a join of three monthly aggregates, one row per calendar month
-    Relational.orderBounded(
-      Relational.multiJoin(Seq(sOrders, sRevenue, sOpen), Seq("m")), col("m"))
+    // bound: one monthly aggregate, one row per calendar month
+    Relational.orderBounded(macroSeries(Tables.orders(s, dir)), col("m"))
+  }
+
+  /** q17's wide frame over an `orders`-shaped relation, unordered. The
+    * ORDERS and REVENUE series share the unfiltered slice, whose
+    * presence count is `value_ORDERS` itself (≥ 1 on every month); the
+    * OPEN series is the `'O'` slice, counted the same way. */
+  private[graft] def macroSeries(
+      orders: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import Relational.{Slice, SliceAgg}
+    Relational.sliceAggregate(orders,
+        Seq(trunc(col("o_orderdate"), "month").as("m")), Seq(
+          Slice("value_ORDERS", lit(true),
+            SliceAgg("value_REVENUE", Exact.dsum, col("o_totalprice"))),
+          Slice("value_OPEN", col("o_orderstatus") === "O")))
+      .filter(col("m").isNotNull && col("value_OPEN") > 0)
   }
 
   /** q18: set operations (SURVEY §2.7 — intersect/except are the

@@ -11,7 +11,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * a metadata-only job — a Parquet manifest write or `head()`, a
   * schema-inference read, a second merge shuffle, a second staging
   * scan, a range-partitioned sort of a bounded result — fails here.
-  * The PlanAuditSpec posture applied to the scheduler layer.
+  * The PlanAuditSpec posture applied to the scheduler layer; the
+  * warehouse ETL plans also carry a codegen budget, the number of
+  * classes a warm pass compiles.
   */
 class JobBudgetSpec extends SparkSpecBase {
 
@@ -134,17 +136,38 @@ class JobBudgetSpec extends SparkSpecBase {
     assert(stream == 0, s"Streams.eventsStream took $stream jobs")
   }
 
+  private val warehouseEtl = Seq("q11_rollup_year_month",
+    "q17_macro_series_join", "q69_kv_scrape_pivot", "q48_dedup_append",
+    "q49_upsert_partition")
+
   test("warehouse ETL plans: build + drain at their measured job counts") {
     // per query: the aggregate's shuffle-map job(s) plus the one result
     // job that orders the bounded output (no schema inference job, no
-    // range-sort sample and shuffle jobs)
-    val budgets = Seq("q11_rollup_year_month" -> 2, "q17_macro_series_join" -> 6,
-      "q69_kv_scrape_pivot" -> 3, "q48_dedup_append" -> 5,
-      "q49_upsert_partition" -> 5)
-    val over = budgets.map { case (name, budget) =>
+    // range-sort sample and shuffle jobs); q17/q48/q49 build their
+    // sibling aggregates in one sliceAggregate, so one shuffle-map job
+    val budgets = Seq(2, 2, 3, 2, 2)
+    val over = warehouseEtl.zip(budgets).map { case (name, budget) =>
       (name, budget, jobsOf(Bench.consume(Queries.byName(name).run(spark, sf))))
     }.filter { case (_, budget, n) => n > budget }
     assert(over.isEmpty, over.map { case (name, budget, n) =>
       s"$name build + drain took $n jobs (budget $budget)" }.mkString("; "))
+  }
+
+  test("warehouse ETL plans: a warm pass compiles at most 0 classes") {
+    // Spark's generated-class cache holds 100 entries
+    // (spark.sql.codegen.cache.maxEntries, static) in 4 LRU segments; a
+    // pass whose working set overflows it recompiles classes it
+    // compiled one pass earlier. Counted, not timed: every cache miss
+    // is one compilation on this metric.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      warehouseEtl.foreach(n => Bench.consume(Queries.byName(n).run(spark, sf)))
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = compiles()
+    val warm = compiles()
+    info(s"compiled classes: first pass $first, warm pass $warm")
+    assert(warm <= 0, s"the warm pass compiled $warm classes (first pass $first)")
   }
 }

@@ -324,6 +324,25 @@ class PlanAuditSpec extends SparkSpecBase {
     }
   }
 
+  test("q17/q48/q49 sibling aggregates: one orders scan, one hash " +
+      "exchange, no broadcast") {
+    // each twin's sides are slices of one orders scan, fused by
+    // Relational.sliceAggregate: a second scan, a second shuffle or a
+    // broadcast join side means the fold fell back to separate
+    // aggregates joined on the month
+    Seq("q17_macro_series_join", "q48_dedup_append",
+      "q49_upsert_partition").foreach { name =>
+      val plan = planOf(name)
+      val scans = plan.linesIterator.filter(_.contains("FileScan")).toSeq
+      assert(scans.size == 1 && scans.head.contains("orders.parquet"),
+        s"$name plans ${scans.size} scans, want one orders scan:\n$plan")
+      val hashed = "Exchange hashpartitioning".r.findAllIn(plan).length
+      assert(hashed == 1, s"$name plans $hashed hash exchanges:\n$plan")
+      assert(!plan.contains("BroadcastExchange"),
+        s"$name plans a broadcast:\n$plan")
+    }
+  }
+
   test("q120/q133 reuse their cached frames instead of re-scanning") {
     // repeatedSpans' hashed-window explode and q133's distinct
     // (month, customer) frame are declared cache points; the plan

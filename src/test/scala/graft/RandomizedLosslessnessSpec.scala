@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.Exact
 import graft.operators.{Dedup, EditDistanceJoin, Relational}
 import org.apache.spark.sql.functions._
 
@@ -424,6 +425,95 @@ class RandomizedLosslessnessSpec extends SparkSpecBase {
       assertBagEqual(Audit.readHistogramStore(spark, hist),
         union.groupBy(col("v").cast("long").as("bucket"))
           .agg(count(lit(1)).as("cnt")))
+    }
+  }
+
+  test("sliceAggregate ≡ the multiJoin and newKeysOnly ∪ forms of " +
+      "q17, q48 and q49, and of a NULL-keyed pair of slices") {
+    import graft.queries.{ProtocolQueries, RelationalQueries}
+    import Relational.{Slice, SliceAgg}
+    import org.apache.spark.sql.{Column, DataFrame}
+    val r = new scala.util.Random(20261018L)
+    def at(y: Int, m: Int, d: Int) =
+      java.sql.Timestamp.valueOf(f"$y-$m%02d-$d%02d 00:00:00")
+    // the reference forms: each side its own aggregate, joined on the keys
+    def monthly(o: DataFrame, p: Column) = o
+      .select(year(col("o_orderdate")).as("year"),
+        month(col("o_orderdate")).as("month"), p.as("p"))
+    def ts(v: String) = to_timestamp(lit(s"$v 00:00:00"))
+    val keys = Seq("year", "month")
+    def q17Ref(o: DataFrame) = {
+      val om = o.withColumn("m", trunc(col("o_orderdate"), "month"))
+      Relational.multiJoin(Seq(
+        om.groupBy(col("m")).agg(count(lit(1)).as("value_ORDERS")),
+        om.groupBy(col("m"))
+          .agg(Exact.dsum(col("o_totalprice")).as("value_REVENUE")),
+        om.filter(col("o_orderstatus") === "O")
+          .groupBy(col("m")).agg(count(lit(1)).as("value_OPEN"))), Seq("m"))
+    }
+    def q48Ref(o: DataFrame) = {
+      def side(f: Column, bump: Double) =
+        monthly(o.filter(f), col("o_totalprice") + bump)
+          .groupBy(keys.map(col): _*).agg(Exact.dsum(col("p")).as("total"))
+      val d = col("o_orderdate")
+      val sink = side(d < ts("1997-01-01"), 0)
+      sink.unionByName(Relational.newKeysOnly(
+        side(d >= ts("1996-01-01") && d < ts("1998-01-01"), 1000), sink, keys))
+    }
+    def q49Ref(o: DataFrame) = {
+      def side(f: Column, scale: Double) =
+        monthly(o.filter(f), col("o_totalprice") * scale)
+          .groupBy(keys.map(col): _*)
+          .agg(Exact.dsum(col("p")).as("total"), count(lit(1)).as("n"))
+      val d = col("o_orderdate")
+      val updates = side(d >= ts("1997-01-01") && d < ts("1999-01-01"), 2)
+      Relational.newKeysOnly(side(d < ts("1998-01-01"), 1), updates, keys)
+        .unionByName(updates)
+    }
+    def orders(
+        rows: Seq[(Option[java.sql.Timestamp], Option[String], Option[Double])]) =
+      rows.toDF("o_orderdate", "o_orderstatus", "o_totalprice")
+    def random(n: Int, years: Range) = Seq.fill(n) {
+      val y = years(r.nextInt(years.size)); val m = 1 + r.nextInt(12)
+      // June 1996 never has an 'O' order: q17 must drop that month
+      val status = if (y == 1996 && m == 6) "F" else Seq("O", "F", "P")(r.nextInt(3))
+      (if (r.nextInt(10) == 0) None else Some(at(y, m, 1 + r.nextInt(28))),
+        if (r.nextInt(10) == 0) None else Some(status),
+        if (r.nextInt(10) == 0) None else Some(r.nextInt(100000) / 100.0))
+    }
+    val inputs = Seq(
+      orders(Nil), // empty input: every slice empty
+      orders(random(30, 1995 to 1996)), // no updates, no 1997+ candidates
+      orders(random(30, 1998 to 1999)), // empty sink and base slices
+      orders(random(40, 1995 to 1999).map(o => (o._1, Some("F"), o._3))) // no 'O'
+    ) ++ Seq.fill(4)(orders(random(20 + r.nextInt(60), 1995 to 1999)))
+    inputs.foreach { o =>
+      assertBagEqual(RelationalQueries.macroSeries(o), q17Ref(o))
+      assertBagEqual(ProtocolQueries.dedupAppend(o), q48Ref(o))
+      assertBagEqual(ProtocolQueries.upsertPartition(o), q49Ref(o))
+    }
+    // NULL keys: the pick must match the null-safe anti-join, and the
+    // inner join must drop the NULL key
+    for (round <- 1 to 4) {
+      val df = Seq.fill(r.nextInt(50)) {
+        (if (r.nextInt(4) == 0) None else Some(r.nextInt(6)),
+          r.nextInt(3), if (r.nextInt(8) == 0) None else Some(r.nextInt(50).toLong))
+      }.toDF("k", "side", "v")
+      val slices = Seq(
+        Slice("a", col("side") === 0, SliceAgg("a_v", sum(_), col("v"))),
+        Slice("b", col("side") =!= 2, SliceAgg("b_v", max(_), col("v"))))
+      val fused = Relational.sliceAggregate(df, Seq(col("k")), slices)
+      val a = df.filter(col("side") === 0).groupBy(col("k")).agg(sum(col("v")).as("v"))
+      val b = df.filter(col("side") =!= 2).groupBy(col("k")).agg(max(col("v")).as("v"))
+      assertBagEqual(
+        fused.select(col("k"),
+          when(col("a") > 0, col("a_v")).otherwise(col("b_v")).as("v")),
+        a.unionByName(Relational.newKeysOnly(b, a, Seq("k"))))
+      assertBagEqual(
+        fused.filter(col("k").isNotNull && col("a") > 0 && col("b") > 0)
+          .select(col("k"), col("a_v"), col("b_v")),
+        Relational.multiJoin(Seq(a.withColumnRenamed("v", "a_v"),
+          b.withColumnRenamed("v", "b_v")), Seq("k")))
     }
   }
 }
