@@ -1196,7 +1196,6 @@ object DedupQueries {
         b1.unionByName(b2), col("doc_id") < 6000000, "graft_q251")
       val storePath = root.resolve("store").toString
       val admittedPath = root.resolve("admitted").toString
-      var q: org.apache.spark.sql.streaming.StreamingQuery = null
       // sweep in a FINALLY so a failed drain can't leak the staging,
       // checkpoint, or per-run signature index (megabytes); a run
       // killed outright is retired by the next run's aged-root sweep
@@ -1206,22 +1205,18 @@ object DedupQueries {
       try {
         Dedup.writeMinhashStore(store, "doc_id", "text", storePath,
           k = 3, numHashes = MinhashSql.nH, bands = MinhashSql.bands)
-        q = IncrementalLoad.streamingNearDupGate(s, stream, "text",
-          storePath, admittedPath, root.resolve("ckpt").toString,
-          threshold = 0.5)
-        require(q.awaitTermination(300000), "q251 stream did not drain")
+        IncrementalLoad.awaitDrained(
+          IncrementalLoad.streamingNearDupGate(s, stream, "text",
+            storePath, admittedPath, root.resolve("ckpt").toString,
+            threshold = 0.5),
+          root, Seq("in", "ckpt"), 300000L)
         val applied = graft.operators.Stores.lastApplied(
           s, s"$storePath/gatelog")
         s.read.parquet(admittedPath)
           .select(col("batch").cast("long").as("batch"), col("doc_id"),
             lit(applied).as("applied"))
           .orderBy(col("batch"), col("doc_id"))
-      } finally {
-        if (q != null) { // stop a hung stream before deleting under it
-          try q.stop() catch { case _: Exception => () }
-        }
-        IncrementalLoad.cleanStaging(root, Seq("in", "ckpt", "store"))
-      }
+      } finally IncrementalLoad.cleanStaging(root, Seq("in", "ckpt", "store"))
     }
   }
 

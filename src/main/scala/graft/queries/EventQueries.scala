@@ -1001,7 +1001,9 @@ object EventQueries {
         .option("checkpointLocation", root.resolve("ckpt").toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      require(q.awaitTermination(300000), "q216 stream did not drain")
+      // the returned plan reads only the sink
+      graft.streaming.IncrementalLoad.awaitDrained(q, root,
+        Seq("in", "ckpt"), 300000L)
       val sink = s.read.parquet(root.resolve("sink").toString)
       sink.withColumn("rn", row_number().over(
           Window.partitionBy(col("event_type"))
@@ -1060,8 +1062,7 @@ object EventQueries {
       val q = IncrementalLoad.streamingCountMinFold(
         s, stream, "k", store, root.resolve("ckpt").toString,
         depth = d, width = w)
-      require(q.awaitTermination(300000), "q248 stream did not drain")
-      IncrementalLoad.cleanStaging(root)
+      IncrementalLoad.awaitDrained(q, root, Seq("in", "ckpt"), 300000L)
       // the replay stamp now rides the store pointer, not the payload
       val applied = graft.operators.Stores.lastApplied(s, s"$store/cells")
       // bound: a store read of d × w = 4 × 64 cells

@@ -2353,8 +2353,7 @@ object RelationalQueries {
       val q = IncrementalLoad.streamingQuantileFold(
         s, stream, "key", "v", store, root.resolve("ckpt").toString,
         k = k)
-      require(q.awaitTermination(300000), "q250 stream did not drain")
-      IncrementalLoad.cleanStaging(root)
+      IncrementalLoad.awaitDrained(q, root, Seq("in", "ckpt"), 300000L)
       // the replay stamp now rides the store pointer, not the payload
       val applied = graft.operators.Stores.lastApplied(s, s"$store/rows")
       graft.operators.QuantileSketch.readStore(s, store).rows

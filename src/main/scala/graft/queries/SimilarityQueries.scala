@@ -616,29 +616,24 @@ object SimilarityQueries {
         b1.unionByName(b2), col("vec_id") < 300000, "graft_q252")
       val storePath = root.resolve("store").toString
       val admittedPath = root.resolve("admitted").toString
-      var q: org.apache.spark.sql.streaming.StreamingQuery = null
       // sweep in a FINALLY (the q251 crash-hygiene posture): a failed
       // drain can't leak staging/checkpoint/per-run index; a killed
       // run is retired by the next run's aged-root sweep
       try {
         Similarity.writeIvfStore(store, "vec_id", "embedding", storePath,
           numCells = 16, kmeansIters = 1)
-        q = IncrementalLoad.streamingSemanticGate(s, stream,
-          "embedding", storePath, admittedPath,
-          root.resolve("ckpt").toString, threshold = 0.999)
-        require(q.awaitTermination(300000), "q252 stream did not drain")
+        IncrementalLoad.awaitDrained(
+          IncrementalLoad.streamingSemanticGate(s, stream, "embedding",
+            storePath, admittedPath, root.resolve("ckpt").toString,
+            threshold = 0.999),
+          root, Seq("in", "ckpt"), 300000L)
         val applied = graft.operators.Stores.lastApplied(
           s, s"$storePath/gatelog")
         s.read.parquet(admittedPath)
           .select(col("batch").cast("long").as("batch"), col("vec_id"),
             lit(applied).as("applied"))
           .orderBy(col("batch"), col("vec_id"))
-      } finally {
-        if (q != null) { // stop a hung stream before deleting under it
-          try q.stop() catch { case _: Exception => () }
-        }
-        IncrementalLoad.cleanStaging(root, Seq("in", "ckpt", "store"))
-      }
+      } finally IncrementalLoad.cleanStaging(root, Seq("in", "ckpt", "store"))
     }
   }
 

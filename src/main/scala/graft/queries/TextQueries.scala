@@ -2239,8 +2239,7 @@ object TextQueries {
         val store = root.resolve("store").toString
         val q = IncrementalLoad.streamingDriftFold(
           s, stream, "bucket", store, root.resolve("ckpt").toString)
-        require(q.awaitTermination(300000), "q249 stream did not drain")
-        IncrementalLoad.cleanStaging(root)
+        IncrementalLoad.awaitDrained(q, root, Seq("in", "ckpt"), 300000L)
         val ref = d.select(lenBucket(length(col("text"))).as("bucket"))
           .groupBy(col("bucket")).agg(count(lit(1)).as("cnt"))
         // the replay stamp now rides the store pointer, not the payload

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.{Relational, Sinks}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The reference's scheduled incremental loads (SURVEY §2.10, §3.1-3.3:
@@ -130,6 +130,50 @@ object IncrementalLoad {
       }
     }
 
+  /** Wait up to `timeoutMs` for a wire started with
+    * `Trigger.AvailableNow` to drain, then — drained or not — stop it
+    * and delete its `dirs` under `root` ([[cleanStaging]]). A stream
+    * that did not drain in time (or failed) fails the caller and
+    * leaves neither a running query nor its staging behind. */
+  def awaitDrained(q: StreamingQuery, root: java.nio.file.Path,
+                   dirs: Seq[String], timeoutMs: Long): Unit =
+    try require(q.awaitTermination(timeoutMs),
+      s"stream ${q.id} did not drain within $timeoutMs ms")
+    finally {
+      // stopping a terminated query only logs a failed job-group cancel
+      if (q.isActive) try q.stop() catch { case _: Exception => () }
+      cleanStaging(root, dirs)
+    }
+
+  /** The one stream start every wire shares: `body` runs as the
+    * foreachBatch sink of a `Trigger.AvailableNow` query over
+    * `stream`, checkpointed at `checkpoint`, and receives each
+    * micro-batch REBOUND to `spark`, the wire's caller session.
+    *
+    * Why rebound: Spark runs a streaming query in a clone of its
+    * session (`cloneSession`, a fresh session UUID) and hands
+    * foreachBatch a Dataset of that clone. Jobs issued on it run under
+    * the clone's artifact state, so the executor builds a fresh
+    * isolated session — with its own class loader — for every stream
+    * run, and Spark's generated-class cache, keyed by class loader,
+    * misses on every lookup: each run recompiled byte-identical
+    * classes (q248: 13 per run). The batch's plan is already a
+    * materialized `LogicalRDD`, so rebinding it changes no result; the
+    * batch, the store reads through `batch.sparkSession` and the
+    * writes then all run under the one long-lived caller session. */
+  private def startAvailableNow(spark: SparkSession, stream: DataFrame,
+                                checkpoint: String)
+                               (body: (DataFrame, Long) => Unit)
+      : StreamingQuery =
+    stream.writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        body(GraftSqlShim.ofRows(spark, batch.queryExecution.logical),
+          batchId)
+      }
+      .start()
+
   /** Daily fact load (`daily_dag.py:89-117` semantics, plus the J2
     * dedup the reference forgot on this path — SURVEY §7.5.5):
     * date-part derivation + key-deduped partitioned append. */
@@ -158,15 +202,11 @@ object IncrementalLoad {
                            dateCol: String, keys: Seq[String],
                            warehousePath: String,
                            checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val withParts = Relational.withDateParts(batch, dateCol)
-        Sinks.dedupAppend(spark, withParts, warehousePath,
-          keys, Seq("year", "month"))
-      }
-      .start()
+    startAvailableNow(spark, stream, checkpoint) { (batch, _) =>
+      val withParts = Relational.withDateParts(batch, dateCol)
+      Sinks.dedupAppend(spark, withParts, warehousePath,
+        keys, Seq("year", "month"))
+    }
 
   /** Map a gate incarnation's foreachBatch ids into the store's
     * gatelog generation space. foreachBatch ids restart at 0 with
@@ -233,7 +273,11 @@ object IncrementalLoad {
     * for markers written before the field existed. */
   private final case class IncarnationId(inc: Incarnation,
                                          writer: String,
-                                         adoptBound: Long)
+                                         adoptBound: Long) {
+    /** The writer token a commit carries; none for a legacy
+      * incarnation. */
+    def token: Option[String] = Option(writer).filter(_.nonEmpty)
+  }
 
   private def markerPath(checkpoint: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(checkpoint, "graft-gate-offset")
@@ -470,6 +514,19 @@ object IncrementalLoad {
         "call — so the new incarnation starts from a clean horizon.")
   }
 
+  /** Wire start, shared by the gate and fold shells: pin the
+    * incarnation ([[incarnation]]), refuse a store another writer grew
+    * ([[requireHorizonOwned]]), and seed the intent high-water
+    * [[recordIntent]] advances. */
+  private def startIncarnation(spark: SparkSession, checkpoint: String,
+                               markerRoot: String)
+      : (IncarnationId, java.util.concurrent.atomic.AtomicLong) = {
+    val id = incarnation(spark, checkpoint, markerRoot)
+    requireHorizonOwned(spark, id, markerRoot)
+    (id, new java.util.concurrent.atomic.AtomicLong(
+      id.inc.committedThrough))
+  }
+
   /** Pre-batch intent update: record that this incarnation is about
     * to run `batchId`, BEFORE any store commit — the ownership
     * check's exactness depends on this ordering (a commit can never
@@ -611,44 +668,61 @@ object IncrementalLoad {
                          (admit: (DataFrame, Long) => (Long, Long))
       : StreamingQuery = {
     val gatelog = s"$storePath/gatelog"
-    val id = incarnation(spark, checkpoint, gatelog)
-    requireHorizonOwned(spark, id, gatelog)
-    val inc = id.inc
-    val seen = new java.util.concurrent.atomic.AtomicLong(
-      inc.committedThrough)
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // job labels (thread-local, set on the micro-batch thread) make
-        // the gate's many small jobs attributable in profiles/the UI;
-        // the reset sits in a FINALLY so a thrown admit()/commit can't
-        // leak a stale 'gate …' label onto the stream thread's later
-        // jobs (the retry batch's recordIntent would be mislabeled)
-        val sc = spark.sparkContext
-        recordIntent(spark, checkpoint, id, seen, batchId)
-        val gen = inc.gen(batchId)
-        val last = graft.operators.Stores.lastApplied(spark, gatelog)
-        if (gen == last) requireOwnSlot(spark, id, gatelog, gen)
-        if (gen > last) try {
-          sc.setJobDescription(s"gate admit gen=$gen")
-          val total = admit(batch, gen)
-          sc.setJobDescription(s"gate commit gen=$gen")
-          // the stamp rides the pointer flip, atomic with the running
-          // admitted total; the one-row payload stays for readers
-          // that predate the pointer-stamp protocol
-          graft.operators.Stores.commitPayload(spark, gatelog,
-              Some(gen),
-              Option(id.writer).filter(_.nonEmpty),
-              Some(total)) { dir =>
-            import org.apache.spark.sql.functions.lit
-            graft.operators.Stores.oneRow(spark)
-              .select(lit(gen).as("applied"))
-              .write.mode("overwrite").parquet(dir)
-          }
-        } finally sc.setJobDescription(null)
-      }
-      .start()
+    val (id, seen) = startIncarnation(spark, checkpoint, gatelog)
+    startAvailableNow(spark, stream, checkpoint) { (batch, batchId) =>
+      // job labels (thread-local, set on the micro-batch thread) make
+      // the gate's many small jobs attributable in profiles/the UI;
+      // the reset sits in a FINALLY so a thrown admit()/commit can't
+      // leak a stale 'gate …' label onto the stream thread's later
+      // jobs (the retry batch's recordIntent would be mislabeled)
+      val sc = spark.sparkContext
+      recordIntent(spark, checkpoint, id, seen, batchId)
+      val gen = id.inc.gen(batchId)
+      val last = graft.operators.Stores.lastApplied(spark, gatelog)
+      if (gen == last) requireOwnSlot(spark, id, gatelog, gen)
+      if (gen > last) try {
+        sc.setJobDescription(s"gate admit gen=$gen")
+        val total = admit(batch, gen)
+        sc.setJobDescription(s"gate commit gen=$gen")
+        // the stamp rides the pointer flip, atomic with the running
+        // admitted total; the one-row payload stays for readers
+        // that predate the pointer-stamp protocol
+        graft.operators.Stores.commitPayload(spark, gatelog,
+            Some(gen), id.token, Some(total)) { dir =>
+          import org.apache.spark.sql.functions.lit
+          graft.operators.Stores.oneRow(spark)
+            .select(lit(gen).as("applied"))
+            .write.mode("overwrite").parquet(dir)
+        }
+      } finally sc.setJobDescription(null)
+    }
+  }
+
+  /** The three fold wires' shared foreachBatch shell — the fold-store
+    * twin of [[runGateWire]], against the store's stamp marker
+    * `stampRoot`: incarnation pin + horizon ownership at wire start
+    * (a fresh checkpoint restarts foreachBatch ids at 0, but the
+    * store's stamp horizon survives from prior incarnations — without
+    * the mapping, the new stream's first batches would read as
+    * replays), then per micro-batch intent-before-commit and the
+    * gen == stamp disambiguation, fold-store variant: own crash-window
+    * commit (token matches, or an untagged pre-token commit) replays
+    * as the fold's no-op skip; a foreign post-token stream's commit
+    * fails loudly here instead of silently dropping the batch.
+    * `fold(batch, gen, writer)` folds the batch into the store,
+    * stamping generation `gen` with the writer token. */
+  private def runFoldWire(spark: SparkSession, stream: DataFrame,
+                          stampRoot: String, checkpoint: String)
+                         (fold: (DataFrame, Long, Option[String]) => Unit)
+      : StreamingQuery = {
+    val (id, seen) = startIncarnation(spark, checkpoint, stampRoot)
+    startAvailableNow(spark, stream, checkpoint) { (batch, batchId) =>
+      recordIntent(spark, checkpoint, id, seen, batchId)
+      val gen = id.inc.gen(batchId)
+      if (gen == graft.operators.Stores.lastApplied(spark, stampRoot))
+        requireOwnSlot(spark, id, stampRoot, gen, tolerateUntagged = true)
+      fold(batch, gen, id.token)
+    }
   }
 
   /** Streaming NEAR-dup gate (★ — the nightly-ingest posture run as a
@@ -930,37 +1004,12 @@ object IncrementalLoad {
   def streamingCountMinFold(spark: SparkSession, stream: DataFrame,
                             valueCol: String, storePath: String,
                             checkpoint: String, depth: Int,
-                            width: Int): StreamingQuery = {
-    // the gate wires' incarnation protocol (see incarnation): a fresh
-    // checkpoint restarts foreachBatch ids at 0, but the store's
-    // stamp horizon survives from prior incarnations — without the
-    // mapping, the new stream's first batches would read as replays
-    val id = incarnation(spark, checkpoint, s"$storePath/cells")
-    requireHorizonOwned(spark, id, s"$storePath/cells")
-    val inc = id.inc
-    val seen = new java.util.concurrent.atomic.AtomicLong(
-      inc.committedThrough)
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        recordIntent(spark, checkpoint, id, seen, batchId)
-        val gen = inc.gen(batchId)
-        // the gates' gen == stamp disambiguation, fold-store variant:
-        // own crash-window commit (token matches, or untagged
-        // pre-token commit) replays as foldIntoStore's no-op skip; a
-        // foreign post-token stream's commit fails loudly here
-        // instead of silently dropping the batch
-        if (gen == graft.operators.Stores.lastApplied(
-            spark, s"$storePath/cells"))
-          requireOwnSlot(spark, id, s"$storePath/cells", gen,
-            tolerateUntagged = true)
+                            width: Int): StreamingQuery =
+    runFoldWire(spark, stream, s"$storePath/cells", checkpoint) {
+      (batch, gen, writer) =>
         graft.operators.CountMin.foldIntoStore(batch, valueCol,
-          storePath, depth, width, batchId = Some(gen),
-          writer = Option(id.writer).filter(_.nonEmpty))
-      }
-      .start()
-  }
+          storePath, depth, width, batchId = Some(gen), writer = writer)
+    }
 
   /** Fold every micro-batch into a persisted bottom-k quantile sketch
     * (the [[streamingCountMinFold]] posture for the rank summary).
@@ -976,30 +1025,12 @@ object IncrementalLoad {
   def streamingQuantileFold(spark: SparkSession, stream: DataFrame,
                             keyCol: String, valueCol: String,
                             storePath: String, checkpoint: String,
-                            k: Int): StreamingQuery = {
-    val id = incarnation(spark, checkpoint, s"$storePath/rows")
-    requireHorizonOwned(spark, id, s"$storePath/rows")
-    val inc = id.inc
-    val seen = new java.util.concurrent.atomic.AtomicLong(
-      inc.committedThrough)
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        recordIntent(spark, checkpoint, id, seen, batchId)
-        val gen = inc.gen(batchId)
-        // gen == stamp ownership, fold-store variant (see the
-        // Count-Min wire)
-        if (gen == graft.operators.Stores.lastApplied(
-            spark, s"$storePath/rows"))
-          requireOwnSlot(spark, id, s"$storePath/rows", gen,
-            tolerateUntagged = true)
+                            k: Int): StreamingQuery =
+    runFoldWire(spark, stream, s"$storePath/rows", checkpoint) {
+      (batch, gen, writer) =>
         graft.operators.QuantileSketch.foldIntoStore(batch, keyCol,
-          valueCol, storePath, k, batchId = Some(gen),
-          writer = Option(id.writer).filter(_.nonEmpty))
-      }
-      .start()
-  }
+          valueCol, storePath, k, batchId = Some(gen), writer = writer)
+    }
 
   /** Streaming drift monitor (★ — the q183 PSI monitor run as an
     * ingestion stream would run it: every micro-batch's length
@@ -1015,27 +1046,10 @@ object IncrementalLoad {
     * store write — [[graft.operators.Stores]]). */
   def streamingDriftFold(spark: SparkSession, stream: DataFrame,
                          bucketCol: String, storePath: String,
-                         checkpoint: String): StreamingQuery = {
-    val id = incarnation(spark, checkpoint, storePath)
-    requireHorizonOwned(spark, id, storePath)
-    val inc = id.inc
-    val seen = new java.util.concurrent.atomic.AtomicLong(
-      inc.committedThrough)
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        recordIntent(spark, checkpoint, id, seen, batchId)
-        val gen = inc.gen(batchId)
-        // gen == stamp ownership, fold-store variant (see the
-        // Count-Min wire)
-        if (gen == graft.operators.Stores.lastApplied(spark, storePath))
-          requireOwnSlot(spark, id, storePath, gen,
-            tolerateUntagged = true)
+                         checkpoint: String): StreamingQuery =
+    runFoldWire(spark, stream, storePath, checkpoint) {
+      (batch, gen, writer) =>
         graft.operators.Audit.histogramFoldIntoStore(batch, bucketCol,
-          storePath, batchId = Some(gen),
-          writer = Option(id.writer).filter(_.nonEmpty))
-      }
-      .start()
-  }
+          storePath, batchId = Some(gen), writer = writer)
+    }
 }

@@ -12,8 +12,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * schema-inference read, a second merge shuffle, a second staging
   * scan, a range-partitioned sort of a bounded result — fails here.
   * The PlanAuditSpec posture applied to the scheduler layer; the
-  * warehouse ETL plans also carry a codegen budget, the number of
-  * classes a warm pass compiles.
+  * warehouse ETL plans and the streaming fold wires also carry a
+  * codegen budget, the number of classes a warm pass compiles.
   */
 class JobBudgetSpec extends SparkSpecBase {
 
@@ -153,21 +153,43 @@ class JobBudgetSpec extends SparkSpecBase {
       s"$name build + drain took $n jobs (budget $budget)" }.mkString("; "))
   }
 
+  /** Generated classes compiled by building and draining `names`.
+    * Counted, not timed: every codegen cache miss is one compilation
+    * on this metric. */
+  private def compiles(names: Seq[String]): Long = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    names.foreach(n => Bench.consume(Queries.byName(n).run(spark, sf)))
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
   test("warehouse ETL plans: a warm pass compiles at most 0 classes") {
     // Spark's generated-class cache holds 100 entries
     // (spark.sql.codegen.cache.maxEntries, static) in 4 LRU segments; a
     // pass whose working set overflows it recompiles classes it
-    // compiled one pass earlier. Counted, not timed: every cache miss
-    // is one compilation on this metric.
-    import org.apache.spark.metrics.source.CodegenMetrics
-    def compiles(): Long = {
-      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      warehouseEtl.foreach(n => Bench.consume(Queries.byName(n).run(spark, sf)))
-      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-    }
-    val first = compiles()
-    val warm = compiles()
+    // compiled one pass earlier
+    val first = compiles(warehouseEtl)
+    val warm = compiles(warehouseEtl)
     info(s"compiled classes: first pass $first, warm pass $warm")
     assert(warm <= 0, s"the warm pass compiled $warm classes (first pass $first)")
+  }
+
+  test("streaming fold wires: a warm run compiles at most 0 classes") {
+    // the cache is keyed by class loader; micro-batch jobs issued on
+    // the stream's clone session ran in a fresh executor class loader
+    // per stream run, so every run recompiled its classes (q248: 13).
+    // The gates (q251, q252) are not pinned: one run compiles more
+    // classes than the cache holds, so their warm count depends on what
+    // ran before it in the JVM
+    val over = Seq("q248_streaming_countmin", "q249_streaming_drift",
+        "q250_streaming_quantile").map { n =>
+      val first = compiles(Seq(n))
+      val warm = compiles(Seq(n))
+      info(s"$n compiled classes: first run $first, warm run $warm")
+      (n, first, warm)
+    }.filter(_._3 > 0)
+    assert(over.isEmpty, over.map { case (n, first, warm) =>
+      s"$n: the warm run compiled $warm classes (first run $first)"
+    }.mkString("; "))
   }
 }

@@ -504,6 +504,107 @@ class StreamingSpec extends SparkSpecBase {
     java.nio.file.Files.deleteIfExists(root)
   }
 
+  test("wires rebound to the caller's session keep their progress " +
+      "accounting and the caller thread's job properties") {
+    import spark.implicits._
+    import graft.streaming.IncrementalLoad
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.streamingSpec"
+    val tag = java.util.UUID.randomUUID().toString
+    // the description of every tagged job; the listener bus is
+    // asynchronous, so a separately tagged fence job is awaited last
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        p.map(_.getProperty(key)).orNull match {
+          case `tag` => descs.add(p.map(_.getProperty(
+            "spark.job.description")).getOrElse(""))
+          case "fence" => fenced.countDown()
+          case _ =>
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      // Count-Min wire over two staged halves (7 + 5 rows)
+      val vs = (1L to 12L).map(i => (i, i % 5)).toDF("id", "v")
+      val (stream, root) = IncrementalLoad.stageTwoFileStream(vs,
+        col("id") <= 7L, "graft_rebound_cm")
+      val q = IncrementalLoad.streamingCountMinFold(spark, stream, "v",
+        root.resolve("store").toString, root.resolve("ckpt").toString,
+        depth = 2, width = 8)
+      IncrementalLoad.awaitDrained(q, root, Seq("in", "ckpt", "store"),
+        120000L)
+      // a gate wire, whose micro-batch thread sets its own job labels
+      val groot = java.nio.file.Files.createTempDirectory("graft_rebound_gate")
+      val storePath = groot.resolve("store").toString
+      graft.operators.Dedup.writeMinhashStore(
+        Seq((1L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text"),
+        "doc_id", "text", storePath)
+      val docs = Seq((7001L, "zebra quark lantern voyage ember crystal"))
+        .toDF("doc_id", "text")
+      val (gstream, gin) = IncrementalLoad.stageTwoFileStream(docs,
+        col("doc_id") > 0L, "graft_rebound_gate_in")
+      val gate = IncrementalLoad.streamingNearDupGate(spark, gstream,
+        "text", storePath, groot.resolve("admitted").toString,
+        groot.resolve("ckpt").toString)
+      IncrementalLoad.awaitDrained(gate, groot,
+        Seq("store", "admitted", "ckpt"), 120000L)
+      IncrementalLoad.cleanStaging(gin, Seq("in"))
+      Seq(root, gin, groot).foreach(java.nio.file.Files.deleteIfExists)
+      sc.setLocalProperty(key, "fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      // perfbench's streaming.input_rows reads these figures
+      assert(q.recentProgress.map(_.numInputRows).sum == 12L,
+        q.recentProgress.map(_.numInputRows).mkString(", "))
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    // the micro-batch jobs inherit the caller's tag (only tagged jobs
+    // are recorded), and the labels the gate sets on the micro-batch
+    // thread still reach them
+    import scala.jdk.CollectionConverters._
+    val labels = descs.asScala.toSeq
+    assert(labels.exists(_.startsWith("neardup gate gen=")),
+      s"no tagged gate admit job: $labels")
+    assert(labels.exists(_.startsWith("gate commit gen=")),
+      s"no tagged gate commit job: $labels")
+  }
+
+  test("awaitDrained stops a stream that does not drain in time and " +
+      "removes its staging") {
+    import graft.streaming.IncrementalLoad
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val root = java.nio.file.Files.createTempDirectory("graft_undrained")
+    java.nio.file.Files.createDirectories(root.resolve("in"))
+    java.nio.file.Files.write(root.resolve("in/part-0"), Array[Byte](1))
+    val input = MemoryStream[Long](
+      org.apache.spark.sql.Encoders.scalaLong, spark)
+    input.addData(1L, 2L, 3L)
+    // a processing-time trigger never terminates on its own
+    val q = input.toDF().writeStream.format("noop")
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(100L))
+      .option("checkpointLocation", root.resolve("ckpt").toString)
+      .start()
+    val e = intercept[IllegalArgumentException] {
+      IncrementalLoad.awaitDrained(q, root, Seq("in", "ckpt"), 1000L)
+    }
+    assert(e.getMessage.contains("did not drain"), e.getMessage)
+    assert(!q.isActive, "the undrained stream is still running")
+    assert(!spark.streams.active.exists(_.id == q.id),
+      "the undrained stream is still registered as active")
+    assert(!java.nio.file.Files.exists(root.resolve("in")) &&
+      !java.nio.file.Files.exists(root.resolve("ckpt")),
+      "the staging of an undrained stream survived")
+    java.nio.file.Files.deleteIfExists(root)
+  }
+
   test("streaming Count-Min fold: the drained store equals the batch grid " +
       "over the concatenated stream") {
     import spark.implicits._
