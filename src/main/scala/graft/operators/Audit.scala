@@ -160,7 +160,7 @@ object Audit {
     // (Stores.commitPayload), so read and write never touch the same
     // files and a crash mid-write cannot erase the committed counts;
     // the applied stamp rides the pointer flip itself
-    Stores.commitPayload(spark, path, Some(applied), writer) { dir =>
+    Stores.commitPayload(spark, path, applied, writer) { dir =>
       merged.coalesce(1).write.mode("overwrite").parquet(dir)
     }
   }

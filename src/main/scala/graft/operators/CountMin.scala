@@ -121,7 +121,7 @@ object CountMin {
                          applied: Long,
                          writer: Option[String] = None): Unit =
     Stores.commitPayload(cells.sparkSession, s"$path/cells",
-        Some(applied), writer) { dir =>
+        applied, writer) { dir =>
       cells.write.mode("overwrite").parquet(dir)
     }
 
@@ -135,7 +135,7 @@ object CountMin {
       throw new IllegalStateException(s"no Count-Min manifest under $path"))
     CountMinStore(
       Stores.readPayload(spark, s"$path/cells", Some(CellSchema)),
-      p("depth"), p("width"))
+      p("depth").toInt, p("width").toInt)
   }
 
   /** Fold a batch into a persisted grid by counter addition: create

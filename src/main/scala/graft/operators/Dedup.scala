@@ -433,12 +433,13 @@ object Dedup {
                                 keyCol: String, k: Int, numHashes: Int,
                                 bands: Int)
 
-  /** Write the persisted near-dup index for a corpus: three parquet
-    * datasets under `path` — `buckets` ([[minhashBandBuckets]]),
-    * `shingles` ([[portableShingleHashes]]), and a one-row `params`
-    * manifest (keyCol, k, numHashes, bands, plus the [[HornerC]] /
-    * [[MinhashP]] constants so a library whose arithmetic drifted
-    * refuses the index instead of mis-probing it). The corpus is
+  /** Write the persisted near-dup index for a corpus: two parquet
+    * datasets under `path` — `buckets` ([[minhashBandBuckets]]) and
+    * `shingles` ([[portableShingleHashes]]) — and a one-line `params`
+    * manifest ([[Stores.writeManifest]]: keyCol and its type, k,
+    * numHashes, bands, plus the [[HornerC]] / [[MinhashP]] constants
+    * so a library whose arithmetic drifted refuses the index instead
+    * of mis-probing it). The corpus is
     * signed ONCE, here; nightly batches probe and append without ever
     * re-reading it.
     *
@@ -530,14 +531,11 @@ object Dedup {
             .write.mode("overwrite").parquet(s"$path/buckets")),
         shinglesAction, stampAction))
     }
-    val (nDocs, srcCheck) = stamp
-    spark
-      .createDataFrame(Seq(
-        (keyCol, k, numHashes, bands, HornerC, MinhashP, nDocs,
-          srcCheck)))
-      .toDF("key_col", "k", "num_hashes", "bands", "horner_c",
-        "minhash_p", "n_docs", "src_check")
-      .write.mode("overwrite").parquet(s"$path/params")
+    Stores.writeManifest(spark, s"$path/params", "key_col" -> keyCol,
+      "key_type" -> df.schema(keyCol).dataType.catalogString, "k" -> k,
+      "num_hashes" -> numHashes, "bands" -> bands, "horner_c" -> HornerC,
+      "minhash_p" -> MinhashP, "n_docs" -> stamp._1,
+      "src_check" -> stamp._2)
   }
 
   /** True when `path`'s index carries the optional raw-signature
@@ -558,90 +556,32 @@ object Dedup {
     spark.read.parquet(s"$path/sigs")
 
   /** True when `path` holds a completed index signed over exactly
-    * `corpus`: same doc count AND (when both sides carry one) the
-    * same additive key checksum, so a same-count corpus mutation — a
-    * key swapped for a different key — reads stale instead of
-    * current. The stamps probed are the GROWN ones — the base
-    * manifest's (`n_docs`, `src_check`) plus the committed gate/
-    * append generations' admitted-key stamp, read from the gatelog
-    * POINTER when the commits recorded it (one marker read — no
-    * generation-scan Spark job per probe; pre-stamp gatelogs fall
-    * back to one distinct scan) — so a store grown by
-    * [[appendToMinhashStore]] or the streaming gate stays current
-    * against base ∪ admitted instead of forever reading stale. The
-    * corpus side is one aggregation job (count + checksum together).
-    * False on absent/partial/pre-count stores, so callers fall back
-    * to [[writeMinhashStore]]. */
+    * `corpus`: same doc count AND the same additive key checksum, so a
+    * same-count corpus mutation — a key swapped for a different key —
+    * reads stale instead of current. The stamps probed are the GROWN
+    * ones — the base manifest's (`n_docs`, `src_check`) plus the
+    * committed gate/append generations' admitted-key stamp, read from
+    * the gatelog POINTER ([[Stores.admittedStamp]], one marker read)
+    * — so a store grown by [[appendToMinhashStore]] or the streaming
+    * gate stays current against base ∪ admitted instead of forever
+    * reading stale. The corpus side is one aggregation job (count +
+    * checksum together). False on absent/partial stores, so callers
+    * fall back to [[writeMinhashStore]]. */
   def minhashStoreIsCurrent(corpus: DataFrame, path: String): Boolean =
     try {
-      // Probe the manifest's existence through the Hadoop FS first:
-      // read.parquet on an absent path raises AND error-logs a full
-      // stack trace, which reads as a failure when a cold store is
-      // the normal first-run state. Manifest-field checks run before
-      // any count job.
       val spark = corpus.sparkSession
-      val hp = new org.apache.hadoop.fs.Path(s"$path/params")
-      hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(hp) && {
-        val p = spark.read.parquet(s"$path/params").head()
-        p.schema.fieldNames.contains("n_docs") &&
-          p.getAs[Long]("horner_c") == HornerC &&
-          p.getAs[Long]("minhash_p") == MinhashP && {
-            val keyCol = p.getAs[String]("key_col")
-            val admitted = admittedStamp(spark, path, keyCol)
-            val checkable = p.schema.fieldNames.contains("src_check") &&
-              corpus.columns.contains(keyCol)
-            if (checkable) {
-              val (cn, cc) = Stores.keyStamp(corpus, keyCol)
-              p.getAs[Long]("n_docs") + admitted._1 == cn &&
-                java.lang.Math.floorMod(
-                  p.getAs[Long]("src_check") + admitted._2,
-                  Stores.StampMod) == cc
-            } else
-              p.getAs[Long]("n_docs") + admitted._1 == corpus.count()
-          }
+      Stores.readManifest(spark, s"$path/params").exists { p =>
+        p("horner_c").toLong == HornerC &&
+          p("minhash_p").toLong == MinhashP &&
+          Stores.keyStamp(corpus, p("key_col")) ==
+            Stores.grownStamp(spark, path, p, "n_docs")
       }
     } catch { case _: Exception => false }
-
-  /** The admitted-key stamp (count, checksum) of the store's
-    * committed gate/append generations: the gatelog pointer's running
-    * stamp when the commits recorded one (a single marker read), else
-    * ONE distinct scan over the committed generations — the legacy
-    * path, paid once per pre-stamp store because the next commit
-    * records the migrated total. Both paths count a key ONCE per
-    * batch (the commit path distinct-s the admitted keys before
-    * stamping; this fallback distinct-s (batch, key)), so migration
-    * cannot flip a verdict on a duplicated key. Residue the fallback
-    * cannot recover: an admitted doc too short to emit any bucket row
-    * is invisible to the generation scan, so a pre-stamp store that
-    * admitted such docs underreads here and the probe says STALE —
-    * one spurious rebuild in the safe direction, never a false
-    * "current" (the commit path counts those docs exactly). */
-  private def admittedStamp(spark: org.apache.spark.sql.SparkSession,
-                            path: String, keyCol: String)
-      : (Long, Long) =
-    Stores.lastAdmitted(spark, s"$path/gatelog").getOrElse {
-      val committed = Stores.lastApplied(spark, s"$path/gatelog")
-      gateAppends(spark, path, "buckets")
-        .map(g => Stores.keyStamp(
-          g.filter(col("batch") <= committed)
-            .select(col("batch"), col(keyCol)).distinct(), keyCol))
-        .getOrElse((0L, 0L))
-    }
-
-  /** [[admittedStamp]] for the streaming gate's commit accumulation
-    * (package-private: the gate reads the prior total, adds its
-    * batch, and commits the new total atomically with the
-    * generation). */
-  private[graft] def minhashAdmittedStamp(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, keyCol: String): (Long, Long) =
-    admittedStamp(spark, path, keyCol)
 
   /** Read a [[writeMinhashStore]] index back, validating the manifest
     * against this library's hash constants (see [[MinhashStore]] for
     * why a silent mismatch is unacceptable). Includes gate-COMMITTED
-    * generations only ([[gateAppends]] filtered by the gatelog's
+    * generations only ([[Stores.withGenerations]] up to the gatelog's
     * committed batch id): a generation written by a batch that
     * crashed before its gatelog flip stays invisible to every reader
     * until the stream replays and commits it — the same decide-once
@@ -661,35 +601,31 @@ object Dedup {
     * gate generations. The streaming gate composes this with the
     * generations committed strictly before its own batch id
     * (decide-once replay semantics — see
-    * [[graft.streaming.IncrementalLoad.streamingNearDupGate]]). */
+    * [[graft.streaming.IncrementalLoad.streamingNearDupGate]]).
+    * Launches no Spark job: the manifest is a marker read and both
+    * datasets are read with the schema the manifest's key type
+    * pins. */
   private[graft] def readMinhashStoreBase(
       spark: org.apache.spark.sql.SparkSession,
       path: String): MinhashStore = {
-    val p = spark.read.parquet(s"$path/params").head()
-    val hc = p.getAs[Long]("horner_c")
-    val mp = p.getAs[Long]("minhash_p")
+    val p = Stores.readManifest(spark, s"$path/params").getOrElse(
+      throw new IllegalStateException(s"no MinHash manifest under $path"))
+    val (hc, mp) = (p("horner_c").toLong, p("minhash_p").toLong)
     require(hc == HornerC && mp == MinhashP,
       s"index at $path was signed with (horner_c=$hc, minhash_p=$mp) but " +
         s"this library hashes with ($HornerC, $MinhashP) — a probe would " +
         "find zero candidates and admit every duplicate; re-sign the corpus")
+    import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
+      StructType}
+    val key = new StructType().add(p("key_col"),
+      DataType.fromDDL(p("key_type")))
     MinhashStore(
-      spark.read.parquet(s"$path/buckets"),
-      spark.read.parquet(s"$path/shingles"),
-      p.getAs[String]("key_col"), p.getAs[Int]("k"),
-      p.getAs[Int]("num_hashes"), p.getAs[Int]("bands"))
+      spark.read.schema(key.add("band", IntegerType).add("bucket", LongType))
+        .parquet(s"$path/buckets"),
+      spark.read.schema(key.add("shingle", LongType))
+        .parquet(s"$path/shingles"),
+      p("key_col"), p("k").toInt, p("num_hashes").toInt, p("bands").toInt)
   }
-
-  /** Gate-committed generations of dataset `ds` ("buckets" or
-    * "shingles"): each streaming micro-batch's admitted rows live in
-    * `<path>/<ds>-batches/batch=<id>` — an idempotent per-batch
-    * OVERWRITE, never an append, so a replayed batch rewrites its own
-    * generation instead of duplicating rows. The partition column
-    * `batch` is exposed for the gate's own-batch exclusion. None when
-    * no gate has ever admitted. */
-  private[graft] def gateAppends(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, ds: String): Option[DataFrame] =
-    Stores.gateGenerations(spark, path, ds)
 
   /** Overwrite one gate generation — idempotent for a given batch id
     * by construction. */
@@ -722,18 +658,16 @@ object Dedup {
     // a long-lived store) just to discard the union
     val st = readMinhashStoreBase(spark, path)
     val gatelog = s"$path/gatelog"
-    // prior admitted stamp BEFORE the commit (a pointer read on
-    // stamped stores); the new running total commits atomically with
-    // the generation so staleness probes stay metadata reads
-    val prior = admittedStamp(spark, path, st.keyCol)
+    // prior admitted stamp BEFORE the commit (a pointer read); the new
+    // running total commits atomically with the generation so
+    // staleness probes stay metadata reads
+    val prior = Stores.admittedStamp(spark, path)
     val next = Stores.lastApplied(spark, gatelog) + 1L
-    // per-batch stamp over the batch's DISTINCT keys — the same
-    // semantics the pre-stamp fallback recomputes from generations
-    // (distinct (batch, key)), so a store migrated mid-life cannot
-    // flip currency verdicts on a duplicated key. Computed
-    // CONCURRENTLY with the two generation writes below (guide §2.6 —
-    // three disjoint passes over the batch); the generation is not
-    // visible until the pointer commit that follows them all.
+    // per-batch stamp over the batch's DISTINCT keys, so a key
+    // delivered twice counts once. Computed CONCURRENTLY with the two
+    // generation writes below (guide §2.6 — three disjoint passes over
+    // the batch); the generation is not visible until the pointer
+    // commit that follows them all.
     var batchStamp: (Long, Long) = (0L, 0L)
     // set semantics on the INDEX frames: a doc delivered twice in one
     // batch (a source replay artifact — even with metadata columns
@@ -761,12 +695,8 @@ object Dedup {
       ("appendToMinhashStore: stamp",
         () => { batchStamp = Stores.keyStamp(
           batch.select(col(st.keyCol)).distinct(), st.keyCol) })))
-    val total = Stores.addStamp(prior, batchStamp)
-    Stores.commitPayload(spark, gatelog, Some(next),
-        admitted = Some(total)) { dir =>
-      Stores.oneRow(spark).select(lit(next).as("applied"))
-        .write.mode("overwrite").parquet(dir)
-    }
+    Stores.commitStamp(spark, gatelog, next, None,
+      Some(Stores.addStamp(prior, batchStamp)))
   }
 
   /** Fold every gate-COMMITTED generation into a FRESH base store at
@@ -819,27 +749,7 @@ object Dedup {
       Seq("sigs", "buckets-batches", "shingles-batches"))
     Stores.foldGenerations(spark, path, newPath,
       Seq("buckets" -> base.buckets, "shingles" -> base.shingles))
-    // the compacted manifest's (n_docs, src_check) = the base
-    // manifest's stamp plus the committed generations' admitted-key
-    // stamp (a pointer read on stamped gatelogs; one distinct scan on
-    // pre-stamp ones); a pre-count base manifest falls back to one
-    // distinct over the compacted buckets (exact: every doc carries
-    // `bands` bucket rows)
-    val baseP = spark.read.parquet(s"$path/params").head()
-    val (nDocs, srcCheck) =
-      if (baseP.schema.fieldNames.contains("src_check"))
-        Stores.addStamp(
-          (baseP.getAs[Long]("n_docs"), baseP.getAs[Long]("src_check")),
-          admittedStamp(spark, path, base.keyCol))
-      else Stores.keyStamp(
-        spark.read.parquet(s"$newPath/buckets")
-          .select(col(base.keyCol)).distinct(), base.keyCol)
-    spark.createDataFrame(Seq(
-        (base.keyCol, base.k, base.numHashes, base.bands, HornerC,
-          MinhashP, nDocs, srcCheck)))
-      .toDF("key_col", "k", "num_hashes", "bands", "horner_c",
-        "minhash_p", "n_docs", "src_check")
-      .write.mode("overwrite").parquet(s"$newPath/params")
+    Stores.writeCompactedManifest(spark, path, newPath, "n_docs")
   }
 
   /** The MinHash gate store's

@@ -417,14 +417,15 @@ object Graph {
   //    graph tier: derive the edge set ONCE, read it everywhere) --
 
   /** Persist an (a, b) edge frame as a reusable graph artifact:
-    * `edges` parquet plus a one-row `params` manifest recording the
+    * `edges` parquet plus a one-line `params` manifest
+    * ([[Stores.writeManifest]]) recording the
     * SOURCE row count the build derived from AND the source key
     * column's additive checksum ([[Stores.keyStamp]] — the SAME
     * (count, checksum) currency the MinHash/IVF gate stores stamp, so
     * staleness means one thing across all three store families). The
     * checksum catches any same-count source mutation — including an
-    * interior key swapped for another that a (count, max-key) stamp
-    * reads as current. Cost note: the checksum side of the probe is a
+    * interior key swapped for another, which neither the count nor
+    * the max key moves. Cost note: the checksum side of the probe is a
     * key-column scan folded into the SAME single aggregation as the
     * count (it cannot come from parquet footer statistics the way a
     * max can) — one column of the source table per scheduled probe,
@@ -436,48 +437,34 @@ object Graph {
     * the build amortizes across the whole diagnostic family and every
     * scheduled re-run until the source table actually changes. */
   def writeEdgeStore(edges: DataFrame, path: String,
-                     nSourceRows: Long,
-                     srcCheck: Long = -1L): Unit = {
+                     nSourceRows: Long, srcCheck: Long): Unit = {
+    // the old manifest goes first: a rebuild that crashed mid-write
+    // must not read as current over partially rewritten edges
+    Stores.clearGateState(edges.sparkSession, path, Seq.empty)
     edges.write.mode("overwrite").parquet(s"$path/edges")
-    edges.sparkSession
-      .createDataFrame(Seq((nSourceRows, srcCheck)))
-      .toDF("n_source_rows", "src_check")
-      .write.mode("overwrite").parquet(s"$path/params")
+    Stores.writeManifest(edges.sparkSession, s"$path/params",
+      "n_source_rows" -> nSourceRows, "src_check" -> srcCheck)
   }
 
   /** True when `path` holds a completed edge store built from exactly
     * `nSourceRows` source rows whose key checksum was `srcCheck`
-    * (callers that track no key pass the default −1 on both sides —
-    * the count-only legacy check; −1 is outside [[Stores.keyStamp]]'s
-    * range, so it cannot collide with a real checksum). A manifest
-    * from the retired (count, max-key) stamp era compares count-only
-    * for an untracked caller and reads STALE for a checksum-tracking
-    * one — the one forced rebuild that upgrades it. False on
-    * absent/partial stores, so callers fall back to
-    * [[writeEdgeStore]]. */
+    * ([[Stores.keyStamp]]). False on absent/partial stores, so callers
+    * fall back to [[writeEdgeStore]]. */
   def edgeStoreIsCurrent(spark: org.apache.spark.sql.SparkSession,
                          path: String, nSourceRows: Long,
-                         srcCheck: Long = -1L): Boolean =
-    try {
-      val hp = new org.apache.hadoop.fs.Path(s"$path/params")
-      hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(hp) && {
-        val p = spark.read.parquet(s"$path/params").head()
-        p.getAs[Long]("n_source_rows") == nSourceRows && {
-          if (p.schema.fieldNames.contains("src_check"))
-            p.getAs[Long]("src_check") == srcCheck
-          else srcCheck == -1L
-        }
-      }
-    } catch { case _: Exception => false }
+                         srcCheck: Long): Boolean =
+    try Stores.readManifest(spark, s"$path/params").exists(p =>
+      p("n_source_rows").toLong == nSourceRows &&
+        p("src_check").toLong == srcCheck)
+    catch { case _: Exception => false }
 
   /** Read a persisted edge store's (a, b) frame plus its staleness
     * stamp. */
   def readEdgeStore(spark: org.apache.spark.sql.SparkSession,
                     path: String): (DataFrame, Long) = {
-    val stamp = spark.read.parquet(s"$path/params").head()
-      .getAs[Long]("n_source_rows")
+    val stamp = Stores.readManifest(spark, s"$path/params").getOrElse(
+      throw new IllegalStateException(s"no edge-store manifest under $path"))
     (spark.read.parquet(s"$path/edges").select(col("a"), col("b")),
-      stamp)
+      stamp("n_source_rows").toLong)
   }
 }

@@ -160,7 +160,7 @@ object QuantileSketch {
                         applied: Long,
                         writer: Option[String] = None): Unit =
     Stores.commitPayload(sk.sparkSession, s"$path/rows",
-        Some(applied), writer) { dir =>
+        applied, writer) { dir =>
       sk.select(col("h"), col("key").cast("string").as("key"),
           col("value").cast("double").as("value"))
         .write.mode("overwrite").parquet(dir)
@@ -174,7 +174,8 @@ object QuantileSketch {
     val p = Stores.readManifest(spark, s"$path/params").getOrElse(
       throw new IllegalStateException(s"no quantile manifest under $path"))
     QuantileStore(
-      Stores.readPayload(spark, s"$path/rows", Some(RowSchema)), p("k"))
+      Stores.readPayload(spark, s"$path/rows", Some(RowSchema)),
+      p("k").toInt)
   }
 
   /** Fold a batch into a persisted sketch: create the store with the

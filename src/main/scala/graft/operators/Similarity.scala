@@ -335,14 +335,15 @@ object Similarity {
         col("cell"))
 
   /** Write the persisted semantic-dedup index for a vector corpus:
-    * three parquet datasets under `path` — `centroids` (the
+    * two parquet datasets under `path` — `centroids` (the
     * seed-then-refined cell set, FROZEN at build time: probes and
-    * appends assign against these, the standard IVF posture),
-    * `vectors` (every corpus vector with its cell), and a one-row
-    * `params` manifest (idCol, numCells, kmeansIters, the
-    * [[CosineRoundScale]] the index was signed under, and n_vecs as
-    * the staleness probe). Written LAST: its presence implies the
-    * centroid/vector writes completed. */
+    * appends assign against these, the standard IVF posture) and
+    * `vectors` (every corpus vector with its cell) — and a one-line
+    * `params` manifest ([[graft.operators.Stores.writeManifest]]:
+    * idCol and its type, numCells, kmeansIters, the
+    * [[CosineRoundScale]] the index was signed under, and the corpus
+    * stamp n_vecs/src_check for the staleness probe). Written LAST:
+    * its presence implies the centroid/vector writes completed. */
   def writeIvfStore(vectors: DataFrame, idCol: String, vecCol: String,
                     path: String, numCells: Int = 16,
                     kmeansIters: Int = 1): Unit = {
@@ -375,94 +376,39 @@ object Similarity {
       ("writeIvfStore: stamp",
         () => { stamp = graft.operators.Stores.keyStamp(
           vectors, idCol) })))
-    val (nVecs, srcCheck) = stamp
-    vectors.sparkSession
-      .createDataFrame(Seq(
-        (idCol, numCells, kmeansIters, CosineRoundScale, nVecs,
-          srcCheck)))
-      .toDF("id_col", "num_cells", "kmeans_iters", "round_scale",
-        "n_vecs", "src_check")
-      .write.mode("overwrite").parquet(s"$path/params")
+    graft.operators.Stores.writeManifest(vectors.sparkSession,
+      s"$path/params", "id_col" -> idCol,
+      "id_type" -> vectors.schema(idCol).dataType.catalogString,
+      "num_cells" -> numCells, "kmeans_iters" -> kmeansIters,
+      "round_scale" -> CosineRoundScale, "n_vecs" -> stamp._1,
+      "src_check" -> stamp._2)
   }
 
   /** True when `path` holds a completed index signed over exactly
     * `corpus` under this library's rounding contract (the
     * minhashStoreIsCurrent shape: manifest present, constants match,
-    * counts match). The count probed is the GROWN vector count —
-    * base dataset plus committed append/gate generations (all
-    * parquet-metadata counts) — and unlike the manifest's build-time
-    * n_vecs it therefore goes stale when [[appendToIvfStore]] grows
-    * the index past the original corpus. */
+    * count and id checksum match). The stamp probed is the GROWN one —
+    * the manifest's build-time (n_vecs, src_check) plus the committed
+    * append/gate generations' admitted stamp from the gatelog pointer
+    * — so a store grown past the original corpus is current against
+    * base ∪ admitted. */
   def ivfStoreIsCurrent(corpus: DataFrame, path: String): Boolean =
     try {
       val spark = corpus.sparkSession
-      val hp = new org.apache.hadoop.fs.Path(s"$path/params")
-      hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(hp) && {
-        val p = spark.read.parquet(s"$path/params").head()
-        // manifest-field checks first — a pre-count or drifted-scale
-        // manifest short-circuits before any count job runs
-        p.schema.fieldNames.contains("n_vecs") &&
-          p.getAs[Int]("round_scale") == CosineRoundScale && {
-            val idCol = p.getAs[String]("id_col")
-            // committed gate/append stamp: the gatelog pointer's
-            // running total when recorded (one marker read), else one
-            // scan over the committed generations (the
-            // minhashStoreIsCurrent fallback, paid once per pre-stamp
-            // store)
-            val admitted = admittedVecStamp(spark, path, idCol)
-            val checkable = p.schema.fieldNames.contains("src_check") &&
-              corpus.columns.contains(idCol)
-            if (checkable) {
-              val (cn, cc) = graft.operators.Stores.keyStamp(
-                corpus, idCol)
-              p.getAs[Long]("n_vecs") + admitted._1 == cn &&
-                java.lang.Math.floorMod(
-                  p.getAs[Long]("src_check") + admitted._2,
-                  graft.operators.Stores.StampMod) == cc
-            } else
-              p.getAs[Long]("n_vecs") + admitted._1 == corpus.count()
-          }
+      val S = graft.operators.Stores
+      S.readManifest(spark, s"$path/params").exists { p =>
+        p("round_scale").toInt == CosineRoundScale &&
+          S.keyStamp(corpus, p("id_col")) ==
+            S.grownStamp(spark, path, p, "n_vecs")
       }
     } catch { case _: Exception => false }
-
-  /** The admitted-vector stamp (count, id checksum) of the committed
-    * gate/append generations — pointer-recorded when available, one
-    * generation scan otherwise (see
-    * [[graft.operators.Dedup.minhashStoreIsCurrent]]'s twin). Both
-    * paths count an id once per batch (commit path distinct-s the
-    * admitted ids; the fallback distinct-s (batch, id)); the
-    * fallback's only irrecoverable residue — an admitted row whose
-    * vector produced no store row is invisible to the generation
-    * scan — underreads in the STALE direction (one spurious rebuild,
-    * never a false "current"), mirroring the MinHash twin's
-    * short-doc note. */
-  private def admittedVecStamp(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String): (Long, Long) =
-    graft.operators.Stores.lastAdmitted(spark, s"$path/gatelog")
-      .getOrElse {
-        val committed = graft.operators.Stores.lastApplied(
-          spark, s"$path/gatelog")
-        gateVectors(spark, path)
-          .map(g => graft.operators.Stores.keyStamp(
-            g.filter(col("batch") <= committed)
-              .select(col("batch"), col(idCol)).distinct(), idCol))
-          .getOrElse((0L, 0L))
-      }
-
-  /** [[admittedVecStamp]] for the streaming gate's commit
-    * accumulation. */
-  private[graft] def ivfAdmittedStamp(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String): (Long, Long) =
-    admittedVecStamp(spark, path, idCol)
 
   /** Read a [[writeIvfStore]] index back, refusing one signed under a
     * different rounding contract (a silently drifted probe ranks
     * candidates differently than the index's builder did). Includes
-    * gate-COMMITTED vector generations only ([[gateVectors]] filtered
-    * by the gatelog's committed batch id): a generation written by a
+    * gate-COMMITTED vector generations only
+    * ([[graft.operators.Stores.withGenerations]] up to the gatelog's
+    * committed batch id): a generation written by a
     * batch that crashed before its gatelog flip stays invisible to
     * every reader until the stream replays and commits it — the same
     * decide-once horizon the gate itself probes with. */
@@ -479,33 +425,31 @@ object Similarity {
     * [[appendToIvfStore]] batch appends), without gate generations.
     * The streaming gate composes this with the generations committed
     * strictly before its own batch id (decide-once replay semantics —
-    * see [[graft.streaming.IncrementalLoad.streamingSemanticGate]]). */
+    * see [[graft.streaming.IncrementalLoad.streamingSemanticGate]]).
+    * Launches no Spark job: the manifest is a marker read and both
+    * datasets are read with the schema the manifest's id type pins
+    * (a centroid's cell is the id of the vector that seeded it). */
   private[graft] def readIvfStoreBase(
       spark: org.apache.spark.sql.SparkSession,
       path: String): IvfStore = {
-    val p = spark.read.parquet(s"$path/params").head()
-    val rs = p.getAs[Int]("round_scale")
+    val p = graft.operators.Stores.readManifest(spark, s"$path/params")
+      .getOrElse(throw new IllegalStateException(
+        s"no IVF manifest under $path"))
+    val rs = p("round_scale").toInt
     require(rs == CosineRoundScale,
       s"index at $path was signed at round_scale=$rs but this library " +
         s"rounds at $CosineRoundScale — re-sign the corpus")
+    import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
+      StructType}
+    val idType = DataType.fromDDL(p("id_type"))
+    val vec = ArrayType(DoubleType)
     IvfStore(
-      spark.read.parquet(s"$path/centroids"),
-      spark.read.parquet(s"$path/vectors"),
-      p.getAs[String]("id_col"), p.getAs[Int]("num_cells"),
-      p.getAs[Int]("kmeans_iters"))
+      spark.read.schema(new StructType().add("cell", idType)
+        .add("cent_vec", vec)).parquet(s"$path/centroids"),
+      spark.read.schema(new StructType().add(p("id_col"), idType)
+        .add("vec", vec).add("cell", idType)).parquet(s"$path/vectors"),
+      p("id_col"), p("num_cells").toInt, p("kmeans_iters").toInt)
   }
-
-  /** Gate-committed vector generations: each streaming micro-batch's
-    * admitted vectors live in `<path>/vectors-batches/batch=<id>` —
-    * an idempotent per-batch OVERWRITE, never an append, so a
-    * replayed batch rewrites its own generation instead of
-    * duplicating vectors. The partition column `batch` is exposed for
-    * the gate's own-batch exclusion. None when no gate has ever
-    * admitted. */
-  private[graft] def gateVectors(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[DataFrame] =
-    graft.operators.Stores.gateGenerations(spark, path, "vectors")
 
   /** Overwrite one gate generation — idempotent for a given batch id
     * by construction. */
@@ -538,7 +482,7 @@ object Similarity {
     // prior admitted stamp BEFORE the commit; the running total
     // commits atomically with the generation (the
     // appendToMinhashStore discipline)
-    val prior = admittedVecStamp(spark, path, st.idCol)
+    val prior = graft.operators.Stores.admittedStamp(spark, path)
     val next = graft.operators.Stores.lastApplied(spark, gatelog) + 1L
     // set semantics on the INDEX frame (the appendToMinhashStore
     // rule): an id delivered twice in one batch — even with metadata
@@ -561,14 +505,8 @@ object Similarity {
         // distinct ids per batch — the appendToMinhashStore stamp rule
         () => { batchStamp = graft.operators.Stores.keyStamp(
           batch.select(col(st.idCol)).distinct(), st.idCol) })))
-    val total = graft.operators.Stores.addStamp(prior, batchStamp)
-    graft.operators.Stores.commitPayload(spark, gatelog, Some(next),
-        admitted = Some(total)) {
-      dir =>
-        graft.operators.Stores.oneRow(spark)
-          .select(lit(next).as("applied"))
-          .write.mode("overwrite").parquet(dir)
-    }
+    graft.operators.Stores.commitStamp(spark, gatelog, next, None,
+      Some(graft.operators.Stores.addStamp(prior, batchStamp)))
   }
 
   /** Fold every gate-COMMITTED vector generation into a FRESH base
@@ -615,24 +553,8 @@ object Similarity {
       ("compactIvfStore: vectors",
         () => { graft.operators.Stores.foldGenerations(spark, path,
           newPath, Seq("vectors" -> base.vectors)); () })))
-    // the compacted manifest's (n_vecs, src_check) = the base
-    // manifest's stamp plus the committed admitted-vector stamp (a
-    // pointer read on stamped gatelogs); a pre-checksum base manifest
-    // falls back to one stamp scan over the compacted dataset
-    val baseP = spark.read.parquet(s"$path/params").head()
-    val (nVecs, srcCheck) =
-      if (baseP.schema.fieldNames.contains("src_check"))
-        graft.operators.Stores.addStamp(
-          (baseP.getAs[Long]("n_vecs"), baseP.getAs[Long]("src_check")),
-          admittedVecStamp(spark, path, base.idCol))
-      else graft.operators.Stores.keyStamp(
-        spark.read.parquet(s"$newPath/vectors"), base.idCol)
-    spark.createDataFrame(Seq(
-        (base.idCol, base.numCells, base.kmeansIters, CosineRoundScale,
-          nVecs, srcCheck)))
-      .toDF("id_col", "num_cells", "kmeans_iters", "round_scale",
-        "n_vecs", "src_check")
-      .write.mode("overwrite").parquet(s"$newPath/params")
+    graft.operators.Stores.writeCompactedManifest(spark, path, newPath,
+      "n_vecs")
   }
 
   /** The IVF gate store's [[graft.operators.Stores.GateStoreKind]]

@@ -23,9 +23,10 @@ import org.apache.spark.sql.types.StructType
   * it back is a one-file read, not a payload scan. A replayed batch
   * (id ≤ the stamp read back) is skipped; a batch that failed before
   * its pointer flipped left the old stamp in place and re-folds
-  * normally. Stores written before the pointer carried the stamp keep
-  * working: [[lastApplied]] falls back to the legacy `applied` column
-  * those payloads embed.
+  * normally. A root without a pointer reads as −1: nothing committed.
+  * The gate stores' `gatelog` is a pointer with no payload at all
+  * ([[commitStamp]]): its stamp is the committed horizon of the
+  * store's generation dirs.
   *
   * '''Atomic replace.''' A merge fold must REPLACE the payload, and a
   * plain `mode("overwrite")` is delete-then-write: a crash mid-
@@ -52,16 +53,6 @@ import org.apache.spark.sql.types.StructType
   *    dir lingers until the next fold's sweep — garbage, never
   *    corruption.
   *
-  * '''Legacy migration.''' A store written by a pre-generation caller
-  * holds its payload as plain parquet files directly under `root`.
-  * The first generation fold over such a store writes `g0` INSIDE
-  * that root, so root transiently mixes files and a g-dir; to keep
-  * every crash window readable, legacy payloads are always read
-  * through an EXPLICIT root-level file list (never directory
-  * discovery, which trips over the mixed layout), and the post-flip
-  * sweep removes the superseded root-level files once `g0` is
-  * committed.
-  *
   * '''Concurrency contract.''' The protocol assumes the repo's
   * single-writer, serialized-use discipline (foreachBatch serializes
   * micro-batches; registry queries run a store's lifecycle
@@ -72,13 +63,13 @@ import org.apache.spark.sql.types.StructType
   * concurrent folds, or folds concurrent with long readers, against
   * one store root.
   *
-  * '''Manifests.''' The Count-Min and quantile stores keep their
-  * parameters in `<store>/params`, a one-line `name=value` file
-  * written and read through [[writeManifest]] / [[readManifest]] —
-  * the pointer's own tmp+rename marker idiom, so the manifest costs
-  * no Spark job in either direction. Write ORDER still matters at
-  * creation: manifest first, committed payload second, so the
-  * pointer flip remains the single commit point. Merge folds rewrite
+  * '''Manifests.''' Every store keeps its parameters in
+  * `<store>/params`, a one-line `name=value` file written and read
+  * through [[writeManifest]] / [[readManifest]] — the pointer's own
+  * tmp+rename marker idiom, so the manifest costs no Spark job in
+  * either direction. Write ORDER still matters at creation: manifest
+  * first, committed payload second, so the pointer flip remains the
+  * single commit point. Merge folds rewrite
   * ONLY the payload (the manifest is immutable after creation). Net
   * invariant: pointer-present ⇒ a fully written generation and the
   * params manifest, and the stamp read back describes exactly what
@@ -145,20 +136,27 @@ object Stores {
     ctx.rename(tmp, p, Options.Rename.OVERWRITE)
   }
 
-  /** Write a fold store's parameter manifest as ONE line of
+  /** Write a store's parameter manifest as ONE line of
     * space-separated `name=value` fields through [[writeMarkerFile]]
-    * (atomic, no Spark job). */
+    * (atomic, no Spark job). A value holding whitespace or `=` (a
+    * column name, say) could not be read back, so it is refused. */
   private[graft] def writeManifest(spark: SparkSession, path: String,
-                                   fields: (String, Int)*): Unit =
-    writeMarkerFile(spark, new Path(path),
-      fields.map { case (k, v) => s"$k=$v" }.mkString(" "))
+                                   fields: (String, Any)*): Unit =
+    writeMarkerFile(spark, new Path(path), fields.map { case (k, v) =>
+      val value = v.toString
+      require(value.nonEmpty &&
+          !value.exists(c => c == '=' || c.isWhitespace),
+        s"manifest field $k=\"$value\" at $path is empty or holds " +
+          "whitespace or '='")
+      s"$k=$value"
+    }.mkString(" "))
 
   /** Read a [[writeManifest]] manifest back; None when absent. */
   private[graft] def readManifest(spark: SparkSession,
-                                  path: String): Option[Map[String, Int]] =
+                                  path: String): Option[Map[String, String]] =
     readMarkerFile(spark, new Path(path)).map(_.split("\\s+").map { f =>
       val Array(k, v) = f.split("=", 2)
-      k -> v.toInt
+      k -> v
     }.toMap)
 
   /** Delete a store root's params manifest, gate generation datasets,
@@ -195,25 +193,24 @@ object Stores {
     }
   }
 
-  /** One parsed pointer: committed generation, the optional `applied`
-    * stamp, the optional writer token, and the optional running
-    * admitted-key stamp (count, checksum) — each absent on pointers
-    * written before that field moved into the pointer, or by callers
-    * that never stamp it. */
-  private final case class Pointer(gen: Long, applied: Option[Long],
+  /** One parsed pointer: committed generation, the `applied` stamp,
+    * the optional writer token, and the optional running admitted-key
+    * stamp (count, checksum) — absent on commits that do not carry
+    * them. */
+  private final case class Pointer(gen: Long, applied: Long,
                                    writer: Option[String],
                                    admitted: Option[(Long, Long)])
 
   /** Parse the pointer file. Field layout is positional
-    * (`gen [applied [writer [admittedCount admittedCheck]]]`); a
-    * commit that carries admitted counts but no writer token writes
-    * `-` in the writer slot so the positions stay unambiguous. Reads
-    * through [[readMarkerFile]] — one single-file read idiom. */
+    * (`gen applied [writer [admittedCount admittedCheck]]`); a commit
+    * that carries admitted counts but no writer token writes `-` in
+    * the writer slot so the positions stay unambiguous. Reads through
+    * [[readMarkerFile]] — one single-file read idiom. */
   private def readPointer(spark: SparkSession, root: String)
       : Option[Pointer] =
     readMarkerFile(spark, new Path(root, PtrName)).map { content =>
       val parts = content.split("\\s+").toSeq
-      Pointer(parts.head.toLong, parts.lift(1).map(_.toLong),
+      Pointer(parts(0).toLong, parts(1).toLong,
         parts.lift(2).filter(_ != "-"),
         (parts.lift(3), parts.lift(4)) match {
           case (Some(n), Some(c)) => Some((n.toLong, c.toLong))
@@ -225,128 +222,81 @@ object Stores {
   private def currentGen(spark: SparkSession, root: String): Option[Long] =
     readPointer(spark, root).map(_.gen)
 
-  /** Root-level parquet part-files of a pre-generation (legacy)
-    * payload — listed explicitly so the read survives a `g<N>` dir
-    * coexisting under the same root (the migration crash window:
-    * directory discovery on the mixed layout fails; an explicit file
-    * list cannot). Empty when root holds no legacy payload. */
-  private def legacyPayloadFiles(spark: SparkSession,
-                                 root: String): Seq[String] = {
-    val rp = new Path(root)
-    val ctx = fc(spark, rp)
-    if (!ctx.util().exists(rp)) Seq.empty
-    else ctx.util().listStatus(rp).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString)
-  }
-
   /** The committed payload dir under `root`: the generation the
-    * pointer names, or (for a store written by a pre-generation
-    * caller) `root` itself when it holds a plain parquet dataset.
-    * None ⇒ the store is absent or uncommitted. NOTE: resolve-then-
-    * read is only safe under the single-writer contract above — a
-    * concurrent fold's sweep can delete a resolved generation. */
+    * pointer names. None ⇒ the store is absent or uncommitted. NOTE:
+    * resolve-then-read is only safe under the single-writer contract
+    * above — a concurrent fold's sweep can delete a resolved
+    * generation. */
   def resolvePayload(spark: SparkSession, root: String): Option[String] =
-    currentGen(spark, root) match {
-      case Some(g) => Some(s"$root/g$g")
-      case None =>
-        val rp = new Path(root)
-        val ctx = fc(spark, rp)
-        val legacy = ctx.util().exists(rp) &&
-          ctx.util().listStatus(rp).exists { st =>
-            val n = st.getPath.getName
-            st.isFile && (n == "_SUCCESS" || n.endsWith(".parquet"))
-          }
-        if (legacy) Some(root) else None
-    }
+    currentGen(spark, root).map(g => s"$root/g$g")
 
   /** True when `root` holds a committed payload. */
   def payloadExists(spark: SparkSession, root: String): Boolean =
     resolvePayload(spark, root).isDefined
 
-  /** Read the committed payload. Legacy (pre-generation) payloads are
-    * read through an explicit root-level file list so a half-migrated
-    * root — legacy files plus an uncommitted `g0` from a crashed first
-    * generation fold — still reads cleanly (see the migration note in
-    * the object scaladoc). With a `schema` the read is pinned to it
-    * and launches no schema-inference job; without one Spark infers
-    * the schema from the footers (one job). */
+  /** Read the committed payload. With a `schema` the read is pinned
+    * to it and launches no schema-inference job; without one Spark
+    * infers the schema from the footers (one job). */
   def readPayload(spark: SparkSession, root: String,
-                  schema: Option[StructType] = None): DataFrame = {
-    val reader = schema.fold(spark.read)(spark.read.schema)
-    resolvePayload(spark, root) match {
-      case None => throw new IllegalStateException(
-        s"no committed payload under $root")
-      case Some(dir) if dir == root =>
-        reader.parquet(legacyPayloadFiles(spark, root): _*)
-      case Some(dir) => reader.parquet(dir)
-    }
-  }
+                  schema: Option[StructType] = None): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).parquet(
+      resolvePayload(spark, root).getOrElse(throw new IllegalStateException(
+        s"no committed payload under $root")))
 
   /** Atomically replace the payload under `root`: `write` receives
     * the next generation dir (it must write with `mode("overwrite")`
     * so a garbage dir from a crashed prior attempt at the same
     * number is clobbered), then the pointer flips — carrying
-    * `applied` when given, so the replay stamp commits atomically
-    * with the data it describes — then superseded payloads (older
-    * generation dirs AND any root-level legacy files) are best-effort
+    * `applied`, so the replay stamp commits atomically with the data
+    * it describes — then superseded generation dirs are best-effort
     * swept. The flip is the commit point; everything before it leaves
     * the current generation committed and everything after it is
     * garbage collection. Single-writer only (object scaladoc). */
-  def commitPayload(spark: SparkSession, root: String,
-                    applied: Option[Long] = None,
-                    writer: Option[String] = None,
-                    admitted: Option[(Long, Long)] = None)
+  def commitPayload(spark: SparkSession, root: String, applied: Long,
+                    writer: Option[String] = None)
                    (write: String => Unit): Unit = {
     val next = currentGen(spark, root).getOrElse(-1L) + 1L
     write(s"$root/g$next")
-    flipPointer(spark, root, next, applied, writer, admitted)
+    flipPointer(spark, root, next, applied, writer, None)
     val rp = new Path(root)
     val ctx = fc(spark, rp)
     ctx.util().listStatus(rp).foreach { st =>
       val n = st.getPath.getName
-      val staleGen = st.isDirectory && n.length > 1 && n.head == 'g' &&
-        n.tail.forall(_.isDigit) && n != s"g$next"
-      // a legacy payload superseded by its first generation fold:
-      // root-level files other than the pointer pair (and their
-      // checksum siblings) are garbage once a generation is committed
-      val staleLegacy = st.isFile && !n.contains(PtrName)
-      if (staleGen || staleLegacy)
+      if (st.isDirectory && n.length > 1 && n.head == 'g' &&
+          n.tail.forall(_.isDigit) && n != s"g$next")
         try ctx.delete(st.getPath, true)
         catch { case _: java.io.IOException => () }
     }
   }
+
+  /** Commit a pointer-only stamp: the gate stores' `gatelog`, whose
+    * only content is the committed horizon `applied` of the store's
+    * generation dirs, the writer token and the running admitted-key
+    * stamp. No payload is written, so the commit is one marker rename
+    * and launches no Spark job; the pointer's generation field repeats
+    * `applied`. */
+  private[graft] def commitStamp(spark: SparkSession, root: String,
+                                 applied: Long, writer: Option[String],
+                                 admitted: Option[(Long, Long)]): Unit =
+    flipPointer(spark, root, applied, applied, writer, admitted)
 
   /** Single-file atomic pointer flip via [[writeMarkerFile]] (the
     * shared tmp+rename-OVERWRITE idiom; on local disk FileContext is
     * `LocalFs` — a `ChecksumFs` that DOES write `.crc` siblings, but
     * its create(OVERWRITE) and rename keep the crc pair consistent,
     * so no stale sibling can poison a later read). Content: the
-    * generation number, plus the `applied` stamp and the writer
-    * token when the commit carries them (a writer without a stamp is
-    * inexpressible — the writers that tag identity always stamp).
-    * A commit carrying the running admitted-key stamp appends
-    * `count check` after the writer slot (`-` when untagged), so the
-    * admitted total commits atomically with the generation it
-    * describes. */
+    * generation number and the `applied` stamp, plus the writer
+    * token when the commit carries one. A commit carrying the running
+    * admitted-key stamp appends `count check` after the writer slot
+    * (`-` when untagged), so the admitted total commits atomically
+    * with the generation it describes. */
   private def flipPointer(spark: SparkSession, root: String,
-                          gen: Long, applied: Option[Long],
-                          writer: Option[String] = None,
-                          admitted: Option[(Long, Long)] = None): Unit = {
-    // the positional layout cannot encode admitted without applied —
-    // fail loudly rather than silently dropping the running total (a
-    // lost stamp degrades every later probe to a generation scan and
-    // undercounts once a commit re-records it)
-    require(applied.isDefined || (writer.isEmpty && admitted.isEmpty),
-      s"pointer commit at $root carries a writer/admitted stamp " +
-        "without an applied stamp — the positional pointer layout " +
-        "cannot encode that; stamp applied as well")
-    val content = applied match {
-      case None => gen.toString
-      case Some(a) => admitted match {
-        case None => writer.fold(s"$gen $a")(w => s"$gen $a $w")
-        case Some((n, c)) => s"$gen $a ${writer.getOrElse("-")} $n $c"
-      }
+                          gen: Long, applied: Long,
+                          writer: Option[String],
+                          admitted: Option[(Long, Long)]): Unit = {
+    val content = admitted match {
+      case None => writer.fold(s"$gen $applied")(w => s"$gen $applied $w")
+      case Some((n, c)) => s"$gen $applied ${writer.getOrElse("-")} $n $c"
     }
     writeMarkerFile(spark, new Path(root, PtrName), content)
   }
@@ -359,45 +309,26 @@ object Stores {
   def lastWriter(spark: SparkSession, root: String): Option[String] =
     readPointer(spark, root).flatMap(_.writer)
 
-  /** The running admitted-key stamp (count, checksum) of the latest
-    * commit, when it carried one — lets the gate stores' staleness
-    * probes ([[graft.operators.Dedup.minhashStoreIsCurrent]] /
-    * [[graft.operators.Similarity.ivfStoreIsCurrent]]) answer from
-    * ONE marker read instead of a distinct-count Spark job over every
-    * committed generation (thousands of leaf dirs on a long-lived
-    * gate store — the very listing cost compaction exists to
-    * retire). None on pre-stamp pointers; probes then fall back to
-    * the generation scan. */
-  def lastAdmitted(spark: SparkSession, root: String)
-      : Option[(Long, Long)] =
-    readPointer(spark, root).flatMap(_.admitted)
+  /** The running admitted-key stamp (count, checksum) of a gate store's
+    * committed gate/append generations, read from its gatelog pointer
+    * — ONE marker read instead of a distinct-count Spark job over every
+    * committed generation (thousands of leaf dirs on a long-lived gate
+    * store — the very listing cost compaction exists to retire). Every
+    * gatelog commit carries it, so no gatelog means no committed
+    * generation: (0, 0). The staleness probes
+    * ([[graft.operators.Dedup.minhashStoreIsCurrent]] /
+    * [[graft.operators.Similarity.ivfStoreIsCurrent]]), the compactors
+    * and the gate commits read it. */
+  def admittedStamp(spark: SparkSession, storePath: String)
+      : (Long, Long) =
+    readPointer(spark, s"$storePath/gatelog").flatMap(_.admitted)
+      .getOrElse((0L, 0L))
 
-  /** Highest foreachBatch id already folded into the committed
-    * payload: the pointer's own stamp when present (one file read —
-    * the committed path for every store written by this version),
-    * else the legacy `applied` column embedded in older payloads;
-    * -1 when the store is absent or was never stamped. */
+  /** Highest foreachBatch id (or gatelog generation) committed under
+    * `root`: the pointer's stamp, one file read; -1 when the store is
+    * absent. */
   def lastApplied(spark: SparkSession, root: String): Long =
-    readPointer(spark, root) match {
-      case Some(Pointer(_, Some(a), _, _)) => a
-      case _ =>
-        resolvePayload(spark, root) match {
-          case None => -1L
-          case Some(_) =>
-            val df = readPayload(spark, root)
-            if (!df.columns.contains("applied")) -1L
-            else df.agg(coalesce(max(col("applied")), lit(-1L)))
-              .head().getLong(0)
-        }
-    }
-
-  /** Stamp a payload frame with the id it reflects (constant column).
-    * LEGACY: new folds carry the stamp in the pointer instead
-    * ([[commitPayload]]'s `applied`); kept so pre-pointer-stamp
-    * payloads — and the crash-simulation fixtures that mimic them —
-    * still construct. */
-  def stamp(df: DataFrame, applied: Long): DataFrame =
-    df.withColumn("applied", lit(applied))
+    readPointer(spark, root).fold(-1L)(_.applied)
 
   /** Modulus of the additive key checksum (2^61 − 1, Mersenne prime):
     * large enough that a same-count corpus mutation collides only by
@@ -499,6 +430,32 @@ object Stores {
     committed
   }
 
+  /** A gate store's GROWN corpus stamp: its manifest `p`'s
+    * (`countField`, `src_check`) plus the committed generations'
+    * [[admittedStamp]] — the stamp of base ∪ admitted, which the
+    * staleness probes compare against the corpus. */
+  private[graft] def grownStamp(spark: SparkSession, storePath: String,
+                                p: Map[String, String],
+                                countField: String): (Long, Long) =
+    addStamp((p(countField).toLong, p("src_check").toLong),
+      admittedStamp(spark, storePath))
+
+  /** The compaction's LAST write, after [[foldGenerations]]: the
+    * source root's manifest at `newPath` with its [[grownStamp]] as
+    * the corpus stamp, so the compacted root's staleness probe
+    * accepts exactly base ∪ admitted. */
+  private[graft] def writeCompactedManifest(spark: SparkSession,
+                                            storePath: String,
+                                            newPath: String,
+                                            countField: String): Unit = {
+    val p = readManifest(spark, s"$storePath/params").getOrElse(
+      throw new IllegalStateException(s"no manifest under $storePath"))
+    val (n, c) = grownStamp(spark, storePath, p, countField)
+    writeManifest(spark, s"$newPath/params",
+      (p ++ Map(countField -> n.toString, "src_check" -> c.toString))
+        .toSeq: _*)
+  }
+
   /** Number of gate generation dirs of dataset `ds` under a store
     * root — one filesystem listing, no Spark job. This is the
     * operational "when do I compact?" probe: each admitting
@@ -569,15 +526,6 @@ object Stores {
         errs.headOption.foreach(e => throw e)
       } finally pool.shutdown()
     }
-
-  /** One-row, ONE-partition frame for the single-row payload/marker
-    * writes ([[commitPayload]] callers): `spark.range(1)` inherits
-    * `defaultParallelism` partitions, so every gate/append commit was
-    * launching a 32-task job (31 empty) to write one row — ~0.2 s of
-    * pure task-scheduling overhead per commit at any scale. */
-  private[graft] def oneRow(spark: SparkSession)
-      : org.apache.spark.sql.Dataset[java.lang.Long] =
-    spark.range(0L, 1L, 1L, 1)
 
   /** True when any of the store's generation datasets has accumulated
     * at least `threshold` generation dirs — the default compaction

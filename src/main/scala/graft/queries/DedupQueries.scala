@@ -1318,8 +1318,8 @@ object DedupQueries {
               root.resolve("compacted").resolve(d)),
             s"compacted root must not carry $d")
         val idx = Dedup.readMinhashStore(s, croot)
-        val nDocs = s.read.parquet(s"$croot/params").head()
-          .getAs[Long]("n_docs")
+        val nDocs = graft.operators.Stores.readManifest(s, s"$croot/params")
+          .get("n_docs").toLong
         // the probe checkpoints eagerly, so sweeping the temp root in
         // the finally cannot pull the store out from under the plan
         Dedup.minhashNearDupAgainstStore(probe, "text", idx,
@@ -2092,8 +2092,8 @@ object DedupQueries {
           k = 3, numHashes = nH, bands = MinhashSql.bands,
           withSignatures = true)
       val st = Dedup.readMinhashStore(s, path)
-      val nDocs = s.read.parquet(s"$path/params").head()
-        .getAs[Long]("n_docs")
+      val nDocs = graft.operators.Stores.readManifest(s, s"$path/params")
+        .get("n_docs").toLong
       // cached: lshCandidatePairs reads the signature frame on BOTH
       // self-join sides per swept setting (it deliberately holds no
       // internal cache — the caller owns the lifetime), and the three

@@ -737,8 +737,8 @@ object SimilarityQueries {
               root.resolve("compacted").resolve(d)),
             s"compacted root must not carry $d")
         val idx = Similarity.readIvfStore(s, croot)
-        val nVecs = s.read.parquet(s"$croot/params").head()
-          .getAs[Long]("n_vecs")
+        val nVecs = graft.operators.Stores.readManifest(s, s"$croot/params")
+          .get("n_vecs").toLong
         // materialize before the finally sweeps the store out from
         // under the (otherwise lazy) probe plan
         Similarity.semanticDedupAgainstStore(probe, "embedding", idx,

@@ -226,71 +226,47 @@ object IncrementalLoad {
     * to the same generation ids), while a fresh checkpoint computes a
     * fresh offset aligned past the store's current horizon. A fresh
     * store (no gatelog) resolves to offset 0, i.e. generation ids
-    * equal batch ids — the pre-offset layout, so existing stores,
-    * oracles, and fixtures read identically. The fold wires
+    * equal batch ids. The fold wires
     * (Count-Min / quantile / drift) share the protocol against their
-    * stores' own stamp markers — batch folds never advance the stamp,
-    * but a prior stream incarnation does, which is the same trap.
+    * stores' own stamp markers — a stream incarnation advances the
+    * stamp too, which is the same trap.
     *
-    * Two further cases the marker covers:
-    *  - A checkpoint written by the PRE-offset protocol (commits
-    *    exist, no marker) resolves to offset 0 — the exact legacy
-    *    mapping — so upgrading never renumbers a half-drained
-    *    incarnation's replayed batch (a fresh offset there would map
-    *    a committed batch to a NEW generation above the stamp and
-    *    double-fold it).
-    *  - The marker also records the incarnation's INTENT high-water:
-    *    the largest batch id this incarnation has STARTED, written
-    *    (atomically) at the top of every foreachBatch, BEFORE any
-    *    store commit. Intent-before-commit makes the ownership test
-    *    exact: every generation this incarnation can ever have
-    *    stamped is ≤ `offset + intentThrough`, so at wire start a
-    *    store stamp beyond that bound proves ANOTHER WRITER grew the
-    *    store while this checkpoint was live — batch appends between
-    *    incarnation runs, or a second stream — and
-    *    [[requireHorizonOwned]] fails the wire LOUDLY instead of
-    *    letting the shadowed generations silently swallow batches.
-    *    Crash windows replay cleanly: intent-written-but-uncommitted
-    *    re-runs the batch (its generation is still above the stamp),
-    *    committed-but-checkpoint-uncommitted re-delivers and skips
-    *    (its generation equals the stamp). Recovery from the loud
-    *    failure: hand off with a fresh checkpoint (and a compacted
-    *    root — [[graft.operators.Dedup.compactMinhashStore]]). */
+    * The marker is written before the stream starts, so a checkpoint
+    * with committed batches but no marker was not written by a wire:
+    * it is refused, because a fresh offset would map a committed
+    * batch to a NEW generation above the stamp and fold it twice.
+    *
+    * The marker also records the incarnation's INTENT high-water: the
+    * largest batch id this incarnation has STARTED, written
+    * (atomically) at the top of every foreachBatch, BEFORE any store
+    * commit. Intent-before-commit makes the ownership test exact:
+    * every generation this incarnation can ever have stamped is
+    * ≤ `offset + intentThrough`, so at wire start a store stamp
+    * beyond that bound proves ANOTHER WRITER grew the store while this
+    * checkpoint was live — batch appends between incarnation runs, or
+    * a second stream — and [[requireHorizonOwned]] fails the wire
+    * LOUDLY instead of letting the shadowed generations silently
+    * swallow batches. Crash windows replay cleanly:
+    * intent-written-but-uncommitted re-runs the batch (its generation
+    * is still above the stamp), committed-but-checkpoint-uncommitted
+    * re-delivers and skips (its generation equals the stamp).
+    * Recovery from the loud failure: hand off with a fresh checkpoint
+    * (and a compacted root —
+    * [[graft.operators.Dedup.compactMinhashStore]]). `writer` is the
+    * token the incarnation's commits carry ([[writerToken]]). */
   private final case class Incarnation(offset: Long,
-                                       committedThrough: Long) {
+                                       committedThrough: Long,
+                                       writer: String) {
     def gen(batchId: Long): Long = offset + batchId
-  }
-
-  /** `adoptBound` is the store stamp observed when a markerless
-    * (pre-upgrade) checkpoint was adopted, CLAMPED to one slot past
-    * the committed horizon — the pre-upgrade protocol's maximal crash
-    * window (it flips exactly one stamp per lost commit). The clamp
-    * matters: recording the raw stamp would make the adoption-time
-    * horizon check tautological, silently tolerating a store another
-    * writer had grown arbitrarily far before the upgrade. Recorded in
-    * the marker at adoption so it survives restarts. −1 for
-    * token-carrying incarnations (their intent bound is exact) and
-    * for markers written before the field existed. */
-  private final case class IncarnationId(inc: Incarnation,
-                                         writer: String,
-                                         adoptBound: Long) {
-    /** The writer token a commit carries; none for a legacy
-      * incarnation. */
-    def token: Option[String] = Option(writer).filter(_.nonEmpty)
   }
 
   private def markerPath(checkpoint: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(checkpoint, "graft-gate-offset")
 
-  /** Marker file layout: `offset intent writer [adoptBound]`,
-    * positional; an empty writer is written as `-` when a field
-    * follows it (and omitted, with the trailing space trimmed, when
-    * none does — the pre-adoptBound legacy form, still parsed). */
-  private[graft] def markerContent(offset: Long, intent: Long, writer: String,
-                            adoptBound: Long): String =
-    if (adoptBound >= 0L)
-      s"$offset $intent ${if (writer.isEmpty) "-" else writer} $adoptBound"
-    else s"$offset $intent $writer".trim
+  /** Marker file layout: `offset intent writer`, positional. */
+  private[graft] def markerContent(offset: Long, intent: Long,
+                                   writer: String): String =
+    s"$offset $intent $writer"
 
   /** Deterministic writer identity for an incarnation: md5 of the
     * checkpoint path PLUS the store horizon the incarnation started
@@ -307,166 +283,44 @@ object IncrementalLoad {
     * previous life committed nothing, so the slot a zombie could
     * stamp carries the same mapping this life would commit there.
     * Deterministic by design (the repo's no-ambient-randomness
-    * discipline; the prior UUID.randomUUID did this job
-    * non-deterministically). */
+    * discipline). */
   private def writerToken(checkpoint: String, offset: Long): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s"$checkpoint@$offset".getBytes("UTF-8"))
       .map(b => f"$b%02x").mkString
 
   /** Parse a marker file's positional fields (see [[markerContent]]):
-    * (offset, intent, writer — empty for `-` or absent, adoptBound —
-    * −1 when absent). The ONE parser for every marker reader
-    * ([[incarnation]], [[migrateLegacyCheckpoint]]) so a layout
-    * change cannot drift between them. */
-  private[graft] def parseMarker(content: String): (Long, Long, String, Long) = {
+    * (offset, intent, writer). The ONE parser for every marker
+    * reader, so a layout change cannot drift between them. */
+  private[graft] def parseMarker(content: String): (Long, Long, String) = {
     val parts = content.split("\\s+")
-    (parts(0).toLong, parts.lift(1).map(_.toLong).getOrElse(-1L),
-      parts.lift(2).filter(_ != "-").getOrElse(""),
-      parts.lift(3).map(_.toLong).getOrElse(-1L))
-  }
-
-  /** Batch ids Spark's checkpoint has COMMITTED — the legacy
-    * checkpoint's own horizon evidence, shared by [[incarnation]]'s
-    * adoption path and [[migrateLegacyCheckpoint]]'s validation. */
-  private def listCommittedIds(spark: SparkSession,
-                               checkpoint: String): Seq[Long] = {
-    val commits = new org.apache.hadoop.fs.Path(checkpoint, "commits")
-    val fs = commits.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(commits)) Seq.empty[Long]
-    else fs.listStatus(commits).toSeq.map(_.getPath.getName)
-      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
+    require(parts.length == 3,
+      s"malformed incarnation marker '$content': want 'offset intent writer'")
+    (parts(0).toLong, parts(1).toLong, parts(2))
   }
 
   private def incarnation(spark: SparkSession, checkpoint: String,
-                          markerRoot: String): IncarnationId = {
+                          markerRoot: String): Incarnation = {
     val S = graft.operators.Stores
     S.readMarkerFile(spark, markerPath(checkpoint)) match {
       case Some(content) =>
-        val (offset, intent, writer, adoptBound) = parseMarker(content)
-        IncarnationId(Incarnation(offset, intent), writer, adoptBound)
+        val (offset, intent, writer) = parseMarker(content)
+        Incarnation(offset, intent, writer)
       case None =>
-        val last = S.lastApplied(spark, markerRoot)
-        // a checkpoint with committed batches but no marker predates
-        // the offset protocol: keep its legacy identity mapping —
-        // intent bounded by the checkpoint's OWN committed batch ids,
-        // so a store grown past them by another writer still fails
-        // loudly at requireHorizonOwned rather than silently
-        // shadowing the next batch. The store stamp observed NOW,
-        // clamped to one slot past the committed horizon (the
-        // pre-upgrade protocol's MAXIMAL crash window — see
-        // [[IncarnationId]]), is recorded as the adoption bound:
-        // anything at or below it is the pre-upgrade protocol's
-        // doing, anything beyond it must be covered by this
-        // incarnation's own intent-before-commit marker — so the
-        // pre-upgrade tolerance is confined to the adoption-time
-        // crash window instead of leaking one slot of slack into
-        // every later restart, and a store grown ≥2 past the
-        // committed horizon fails loudly AT adoption
-        // ([[migrateLegacyCheckpoint]] then closes the remaining
-        // one-slot tokenless ambiguity for good).
-        val committedIds = listCommittedIds(spark, checkpoint)
-        // the writer token lets requireOwnSlot distinguish "my own
-        // crash-window commit" from "another writer took my slot" at
-        // the gen == stamp boundary; legacy incarnations keep an
-        // empty token (their pre-upgrade commits carry none — the
-        // tolerant skip) until migrated.
-        val id =
-          if (committedIds.nonEmpty)
-            IncarnationId(Incarnation(0L, committedIds.max), "",
-              math.min(last, committedIds.max + 1L))
-          else {
-            val inc = Incarnation(last + 1L, -1L)
-            IncarnationId(inc, writerToken(checkpoint, inc.offset), -1L)
-          }
+        val commits = new org.apache.hadoop.fs.Path(checkpoint, "commits")
+        val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        require(!fs.exists(commits) || fs.listStatus(commits).isEmpty,
+          s"checkpoint $checkpoint has committed batches but no " +
+            "graft-gate-offset marker: every wire writes its marker " +
+            "before the stream starts, so this checkpoint was not written " +
+            "by a wire, and a fresh offset would fold its committed " +
+            "batches twice. Start the wire on a FRESH checkpoint.")
+        val offset = S.lastApplied(spark, markerRoot) + 1L
+        val inc = Incarnation(offset, -1L, writerToken(checkpoint, offset))
         S.writeMarkerFile(spark, markerPath(checkpoint),
-          markerContent(id.inc.offset, id.inc.committedThrough,
-            id.writer, id.adoptBound))
-        id
+          markerContent(inc.offset, inc.committedThrough, inc.writer))
+        inc
     }
-  }
-
-  /** Stamp a writer token onto an adopted pre-upgrade (markerless-era)
-    * checkpoint, closing the one ambiguity the adoption tolerance
-    * must otherwise carry: without a token, a store stamp landing
-    * exactly on this checkpoint's next generation slot during a crash
-    * window cannot be told apart from the checkpoint's own lost
-    * commit, so [[requireOwnSlot]] skips it tolerantly — and a
-    * foreign append that took the slot would be skipped too, silently
-    * losing that batch's admissions. Once migrated, the incarnation's
-    * commits carry the token: its own crash-window commits skip
-    * (token matches) and a foreign append at the slot fails LOUDLY.
-    *
-    * Call with the wire STOPPED, in a drained state — the helper
-    * refuses anything else, because stamping a token while an
-    * UNTAGGED own commit is still pending at the gen == stamp slot
-    * would make the routine replay read as a foreign writer:
-    *  - every started batch must be checkpoint-committed (a pending
-    *    intent means a crash window is mid-recovery);
-    *  - the store stamp must not exceed the checkpoint's horizon (one
-    *    past = the pre-upgrade crash window not yet drained, or a
-    *    foreign append — run the wire once; if it refuses, hand off
-    *    with [[handoffCompacted]]).
-    * A checkpoint whose marker already carries a token is a no-op
-    * (idempotent); a fresh checkpoint (no marker, no commits) is
-    * refused — the first wire start mints its token itself.
-    *
-    * Scope: the GATE wires only (the helper validates against the
-    * store's `gatelog`). The fold wires' checkpoints
-    * ([[streamingCountMinFold]] / [[streamingQuantileFold]] /
-    * [[streamingDriftFold]]) need no migration: their batch-fold path
-    * never ADVANCES the store stamp (a batch fold re-records the
-    * committed id — [[graft.operators.CountMin.foldIntoStore]]), so
-    * the tokenless slot-steal interleave this helper closes cannot
-    * arise there, and a second post-upgrade STREAM at the slot is
-    * already caught by its own token under `tolerateUntagged`. */
-  def migrateLegacyCheckpoint(spark: SparkSession, checkpoint: String,
-                              storePath: String): Unit = {
-    val S = graft.operators.Stores
-    val gatelog = s"$storePath/gatelog"
-    val mp = markerPath(checkpoint)
-    val committedIds = listCommittedIds(spark, checkpoint)
-    val committedMax =
-      if (committedIds.isEmpty) -1L else committedIds.max
-    // the adoptBound field (if any) is deliberately dropped by the
-    // migration: the token it stamps makes the intent bound exact,
-    // superseding the adoption-window tolerance
-    val parsed = S.readMarkerFile(spark, mp).map(parseMarker)
-    if (parsed.exists(_._3.nonEmpty)) return // already token-carrying
-    require(parsed.isDefined || committedIds.nonEmpty,
-      s"checkpoint $checkpoint has no marker and no committed " +
-        "batches — nothing to migrate; a fresh wire start mints its " +
-        "writer token itself")
-    val (offset, intent) = parsed
-      .map(p => (p._1, p._2)).getOrElse((0L, committedMax))
-    require(intent <= committedMax,
-      s"checkpoint $checkpoint has started batch $intent but only " +
-        s"committed through $committedMax — a crash window is " +
-        "mid-recovery; run the wire once to drain it, then migrate")
-    val last = S.lastApplied(spark, gatelog)
-    // a checkpoint with committed batches implies the store it gated
-    // carries their gatelog stamps — an absent/unstamped gatelog
-    // means a wrong store path or a store rebuilt/compacted since
-    // (either way the validation below would pass VACUOUSLY and the
-    // token would be stamped against the wrong horizon)
-    require(intent < 0L || last >= 0L,
-      s"store at $storePath has no gatelog stamp but checkpoint " +
-        s"$checkpoint has committed batches — wrong store path, or " +
-        "the store was rebuilt/compacted since; a handed-off store " +
-        "needs a FRESH checkpoint (handoffCompacted), not a migrated " +
-        "one")
-    require(last <= offset + intent,
-      s"store marker at $gatelog sits at $last, past this " +
-        s"checkpoint's horizon (offset=$offset, intent through batch " +
-        s"$intent): either the pre-upgrade crash window has not been " +
-        "drained yet (run the wire once on this checkpoint first — " +
-        "the replay skips as a no-op) or another writer grew the " +
-        "store (hand off with IncrementalLoad.handoffCompacted " +
-        "instead of migrating)")
-    S.writeMarkerFile(spark, mp,
-      markerContent(offset, intent, writerToken(checkpoint, offset),
-        -1L))
   }
 
   /** The incarnation-start ownership check (see [[incarnation]]):
@@ -475,34 +329,10 @@ object IncrementalLoad {
     * otherwise be skipped silently. Exact under the
     * intent-before-commit marker discipline: this incarnation's
     * stamps never exceed `offset + intentThrough`. */
-  private def requireHorizonOwned(spark: SparkSession, id: IncarnationId,
+  private def requireHorizonOwned(spark: SparkSession, inc: Incarnation,
                                   markerRoot: String): Unit = {
-    val inc = id.inc
     val last = graft.operators.Stores.lastApplied(spark, markerRoot)
-    // a LEGACY incarnation (empty writer token — adopted from a
-    // pre-marker checkpoint) bounds intent by its own COMMITTED batch
-    // ids, but the pre-upgrade protocol's normal crash window — store
-    // stamp flipped to N, Spark's commit for N lost — leaves the
-    // stamp ONE slot past the committed horizon. The tolerance for
-    // that window is the ADOPTION BOUND: the stamp observed when the
-    // markerless checkpoint was adopted, recorded in the marker.
-    // Anything at or below it is the pre-upgrade protocol's own doing
-    // (the replay of N then skips at gen == stamp under the
-    // legacy-tolerant requireOwnSlot — the routine crash recovery);
-    // anything beyond it happened under the marker's
-    // intent-before-commit discipline, so it must be intent-covered —
-    // a single foreign append on any LATER restart now fails loudly
-    // here instead of being silently skipped (the pre-r14 one-slot
-    // slack keyed on the empty writer token and so leaked into every
-    // restart of an adopted checkpoint). The adoption-time state
-    // itself stays inherently ambiguous for a tokenless checkpoint (a
-    // single foreign append sitting there looks identical to the
-    // crash window and is tolerated exactly as the pre-upgrade
-    // protocol would); migrateLegacyCheckpoint stamps a token once
-    // drained and closes that too. Markers from before the adoption
-    // bound existed parse to −1 — no tolerance, strictly safer.
-    require(last <= math.max(inc.offset + inc.committedThrough,
-        id.adoptBound),
+    require(last <= inc.offset + inc.committedThrough,
       s"store marker at $markerRoot sits at $last, past this " +
         s"checkpoint's horizon (offset=${inc.offset}, committed " +
         s"through batch ${inc.committedThrough}): another writer " +
@@ -520,11 +350,11 @@ object IncrementalLoad {
     * [[recordIntent]] advances. */
   private def startIncarnation(spark: SparkSession, checkpoint: String,
                                markerRoot: String)
-      : (IncarnationId, java.util.concurrent.atomic.AtomicLong) = {
+      : (Incarnation, java.util.concurrent.atomic.AtomicLong) = {
     val id = incarnation(spark, checkpoint, markerRoot)
     requireHorizonOwned(spark, id, markerRoot)
     (id, new java.util.concurrent.atomic.AtomicLong(
-      id.inc.committedThrough))
+      id.committedThrough))
   }
 
   /** Pre-batch intent update: record that this incarnation is about
@@ -533,13 +363,13 @@ object IncrementalLoad {
     * outrun the recorded intent). Atomic rename; idempotent across
     * replays. */
   private def recordIntent(spark: SparkSession, checkpoint: String,
-                           id: IncarnationId,
+                           id: Incarnation,
                            intent: java.util.concurrent.atomic.AtomicLong,
                            batchId: Long): Unit =
     if (batchId > intent.get()) {
       graft.operators.Stores.writeMarkerFile(spark,
         markerPath(checkpoint),
-        markerContent(id.inc.offset, batchId, id.writer, id.adoptBound))
+        markerContent(id.offset, batchId, id.writer))
       intent.set(batchId)
     }
 
@@ -552,24 +382,25 @@ object IncrementalLoad {
     * batch, and one append advances the stamp exactly into its
     * slot). The writer token in the pointer stamp tells them apart:
     * own commit ⇒ token matches ⇒ skip; foreign append ⇒ no token ⇒
-    * fail loudly (processing would silently drop the batch). A
-    * legacy incarnation (empty token — its pre-upgrade commits carry
-    * none) keeps the tolerant skip.
+    * fail loudly (processing would silently drop the batch).
     *
-    * `tolerateUntagged` is the FOLD-store variant: batch folds never
-    * advance those stores' stamps (only streams with incarnations
-    * do), so an untagged stamp at this slot can only be this wire's
-    * own pre-token-protocol commit — tolerate it, or a routine
-    * upgrade-then-crash recovery would fail loudly blaming a foreign
-    * writer. The GATE stores pass false: their batch-append path
+    * `tolerateUntagged` is the FOLD-store variant: a batch
+    * `CountMin` / `QuantileSketch` / `Audit` fold commits an UNTAGGED
+    * stamp — one with an explicit `batchId` records that id, and any
+    * batch fold after a stream commit re-records the committed id
+    * with no writer — and the store's contents at that stamp are the
+    * fold the stamp names, so replaying this slot as the fold's no-op
+    * skip loses nothing; failing would blame a foreign writer for a
+    * batch fold. The GATE stores pass false: their batch-append path
     * (appendToMinhashStore / appendToIvfStore) advances the stamp
-    * without a token, so an untagged slot there really is the
-    * foreign interleave the check exists to catch. */
-  private def requireOwnSlot(spark: SparkSession, id: IncarnationId,
+    * with admitted rows but without a token, so an untagged slot
+    * there really is the foreign interleave the check exists to
+    * catch. */
+  private def requireOwnSlot(spark: SparkSession, id: Incarnation,
                              markerRoot: String, gen: Long,
                              tolerateUntagged: Boolean = false): Unit = {
     val lastWriter = graft.operators.Stores.lastWriter(spark, markerRoot)
-    require(id.writer.isEmpty || lastWriter.contains(id.writer) ||
+    require(lastWriter.contains(id.writer) ||
         (tolerateUntagged && lastWriter.isEmpty),
       s"generation $gen at $markerRoot is the store's latest stamp " +
         "but was not committed by this checkpoint: another writer " +
@@ -626,15 +457,8 @@ object IncrementalLoad {
         "checkpoint's batch ids would replay against the compacted " +
         "store's renumbered horizon — hand off to a NEW checkpoint " +
         "dir")
-    // a fold store's manifest is a one-line marker file (no kind
-    // field, so it matches none); a gate store's is a parquet dataset
-    val params = new org.apache.hadoop.fs.Path(s"$storePath/params")
-    val pfs = params.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fields =
-      if (pfs.exists(params) && pfs.getFileStatus(params).isFile)
-        S.readManifest(spark, params.toString).map(_.keySet)
-          .getOrElse(Set.empty[String])
-      else spark.read.parquet(params.toString).schema.fieldNames.toSet
+    val fields = S.readManifest(spark, s"$storePath/params")
+      .map(_.keySet).getOrElse(Set.empty[String])
     val kinds = gateStoreKinds.filter(k =>
       fields.contains(k.manifestField))
     require(kinds.size == 1,
@@ -648,8 +472,7 @@ object IncrementalLoad {
     val offset =
       S.lastApplied(spark, s"$newStorePath/gatelog") + 1L
     S.writeMarkerFile(spark, markerPath(newCheckpoint),
-      markerContent(offset, -1L, writerToken(newCheckpoint, offset),
-        -1L))
+      markerContent(offset, -1L, writerToken(newCheckpoint, offset)))
   }
 
   /** The two gates' shared foreachBatch protocol shell — the
@@ -677,23 +500,16 @@ object IncrementalLoad {
       // jobs (the retry batch's recordIntent would be mislabeled)
       val sc = spark.sparkContext
       recordIntent(spark, checkpoint, id, seen, batchId)
-      val gen = id.inc.gen(batchId)
+      val gen = id.gen(batchId)
       val last = graft.operators.Stores.lastApplied(spark, gatelog)
       if (gen == last) requireOwnSlot(spark, id, gatelog, gen)
       if (gen > last) try {
         sc.setJobDescription(s"gate admit gen=$gen")
         val total = admit(batch, gen)
-        sc.setJobDescription(s"gate commit gen=$gen")
         // the stamp rides the pointer flip, atomic with the running
-        // admitted total; the one-row payload stays for readers
-        // that predate the pointer-stamp protocol
-        graft.operators.Stores.commitPayload(spark, gatelog,
-            Some(gen), id.token, Some(total)) { dir =>
-          import org.apache.spark.sql.functions.lit
-          graft.operators.Stores.oneRow(spark)
-            .select(lit(gen).as("applied"))
-            .write.mode("overwrite").parquet(dir)
-        }
+        // admitted total
+        graft.operators.Stores.commitStamp(spark, gatelog, gen,
+          Some(id.writer), Some(total))
       } finally sc.setJobDescription(null)
     }
   }
@@ -706,9 +522,9 @@ object IncrementalLoad {
     * the mapping, the new stream's first batches would read as
     * replays), then per micro-batch intent-before-commit and the
     * gen == stamp disambiguation, fold-store variant: own crash-window
-    * commit (token matches, or an untagged pre-token commit) replays
-    * as the fold's no-op skip; a foreign post-token stream's commit
-    * fails loudly here instead of silently dropping the batch.
+    * commit (token matches) or an untagged batch-fold commit replays
+    * as the fold's no-op skip; another stream's commit fails loudly
+    * here instead of silently dropping the batch.
     * `fold(batch, gen, writer)` folds the batch into the store,
     * stamping generation `gen` with the writer token. */
   private def runFoldWire(spark: SparkSession, stream: DataFrame,
@@ -718,10 +534,10 @@ object IncrementalLoad {
     val (id, seen) = startIncarnation(spark, checkpoint, stampRoot)
     startAvailableNow(spark, stream, checkpoint) { (batch, batchId) =>
       recordIntent(spark, checkpoint, id, seen, batchId)
-      val gen = id.inc.gen(batchId)
+      val gen = id.gen(batchId)
       if (gen == graft.operators.Stores.lastApplied(spark, stampRoot))
         requireOwnSlot(spark, id, stampRoot, gen, tolerateUntagged = true)
-      fold(batch, gen, id.token)
+      fold(batch, gen, Some(id.writer))
     }
   }
 
@@ -858,12 +674,10 @@ object IncrementalLoad {
       // overwrites every partial dataset — the wire's existing
       // crash window, unchanged.
       val keys = admitted.select(col(base.keyCol))
-      // running admitted stamp = prior total (a pointer read on
-      // stamped gatelogs) + this batch's admitted keys, DISTINCT-ed
-      // within the batch so the accumulation and the pre-stamp
-      // fallback (distinct (batch, key) over generations) count a
-      // duplicated key identically — committed atomically with the
-      // generation by the shell, so minhashStoreIsCurrent stays a
+      // running admitted stamp = prior total (a gatelog pointer read)
+      // + this batch's admitted keys, DISTINCT-ed within the batch so
+      // a key delivered twice counts once — committed atomically with
+      // the generation by the shell, so minhashStoreIsCurrent stays a
       // marker read
       var total: (Long, Long) = (0L, 0L)
       graft.operators.Stores.runConcurrently(spark, Seq(
@@ -880,7 +694,7 @@ object IncrementalLoad {
             storePath, "shingles", gen)),
         (s"neardup gate gen=$gen: admitted stamp",
           () => { total = graft.operators.Stores.addStamp(
-            D.minhashAdmittedStamp(spark, storePath, base.keyCol),
+            graft.operators.Stores.admittedStamp(spark, storePath),
             graft.operators.Stores.keyStamp(
               admitted.select(col(base.keyCol)).distinct(),
               base.keyCol)) })))
@@ -975,7 +789,7 @@ object IncrementalLoad {
           // the shell (the near-dup gate's rule, including its
           // per-batch DISTINCT — see that wire's stamp note)
           () => { total = graft.operators.Stores.addStamp(
-            S.ivfAdmittedStamp(spark, storePath, base.idCol),
+            graft.operators.Stores.admittedStamp(spark, storePath),
             graft.operators.Stores.keyStamp(
               admitted.select(col(base.idCol)).distinct(),
               base.idCol)) })))

@@ -11,12 +11,8 @@ import org.apache.spark.sql.functions._
   *
   *  - `list`: [[Stores.generationCount]], the probe itself (one FS
   *    listing — linear in N but filesystem-cheap);
-  *  - `probe_ptr`: the staleness stamp via the gatelog POINTER (the
-  *    committed path — a marker read, flat in N);
-  *  - `probe_scan`: the same stamp recomputed the pre-stamp way (one
-  *    distinct scan over all N generation dirs — what every probe
-  *    paid before the pointer carried the running total, and what a
-  *    migrated pre-stamp store pays once);
+  *  - `probe_ptr`: the staleness stamp via the gatelog POINTER (a
+  *    marker read, flat in N);
   *  - `gate_probe`: one single-doc near-dup probe against the grown
   *    store — the per-micro-batch cost a LIVE gate actually pays,
   *    where the N-leaf-dir listing/open overhead shows;
@@ -87,23 +83,13 @@ object ProfileCompaction {
           Stores.keyStamp(b.select(col("doc_id")).distinct(), "doc_id"))
         built += 1
       }
-      val stamp = admitted
-      Stores.commitPayload(spark, s"$store/gatelog",
-          Some(built - 1L), admitted = Some(stamp)) { dir =>
-        spark.range(0L, 1L, 1L, 1).select(lit(built - 1L).as("applied"))
-          .write.mode("overwrite").parquet(dir)
-      }
+      Stores.commitStamp(spark, s"$store/gatelog", built - 1L, None,
+        Some(admitted))
       val tList = time {
         Stores.generationCount(spark, store, "buckets"): Unit
       }
       val tPtr = time {
-        Dedup.minhashAdmittedStamp(spark, store, "doc_id"): Unit
-      }
-      val committed = Stores.lastApplied(spark, s"$store/gatelog")
-      val tScan = time {
-        Stores.gateGenerations(spark, store, "buckets").foreach(g =>
-          Stores.keyStamp(g.filter(col("batch") <= committed)
-            .select(col("batch"), col("doc_id")).distinct(), "doc_id"))
+        Stores.admittedStamp(spark, store): Unit
       }
       val grown = Dedup.readMinhashStore(spark, store)
       val tGate = time {
@@ -120,7 +106,7 @@ object ProfileCompaction {
           .count(): Unit
       }
       println(f"[compact] N=$target%-4d list=$tList%6.3f s  " +
-        f"probe_ptr=$tPtr%6.3f s  probe_scan=$tScan%6.3f s  " +
+        f"probe_ptr=$tPtr%6.3f s  " +
         f"gate_probe=$tGate%6.3f s  compact=$tCompact%6.2f s  " +
         f"gate_probe_compacted=$tGateC%6.3f s")
     }

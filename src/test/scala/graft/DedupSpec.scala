@@ -191,8 +191,7 @@ class DedupSpec extends SparkSpecBase {
       (7000L, "zebra quark lantern voyage ember crystal meadow pylon"))
       .toDF("doc_id", "text")
     Dedup.appendToMinhashStore(admitted, "text", dir)
-    assert(Stores.lastAdmitted(spark, s"$dir/gatelog")
-        .exists(_._1 == 1L),
+    assert(Stores.admittedStamp(spark, dir)._1 == 1L,
       "the append commit did not record the running admitted stamp")
     assert(Dedup.minhashStoreIsCurrent(base.unionByName(admitted), dir))
     // a same-count mutation of the GROWN corpus also reads stale
@@ -203,28 +202,25 @@ class DedupSpec extends SparkSpecBase {
       (7001L, "orchid basalt nimbus ferret cobalt prairie sonnet"))
       .toDF("doc_id", "text")
     Dedup.appendToMinhashStore(admitted2, "text", dir)
-    assert(Stores.lastAdmitted(spark, s"$dir/gatelog")
-      .exists(_._1 == 2L))
+    assert(Stores.admittedStamp(spark, dir)._1 == 2L)
     assert(Dedup.minhashStoreIsCurrent(
       base.unionByName(admitted).unionByName(admitted2), dir))
     // stamp-semantics alignment: a batch carrying a DUPLICATED key is
-    // stamped once (distinct per batch), exactly what the pre-stamp
-    // fallback would recompute from the generations — so a store
-    // migrated mid-life cannot flip currency verdicts on it
+    // stamped once (distinct per batch), exactly what a recomputation
+    // from the committed generations (distinct (batch, key)) yields
     val dup = Seq(
       (7002L, "quartz fjord umbra lattice pinion sable grove onset"),
       (7002L, "quartz fjord umbra lattice pinion sable grove onset"))
       .toDF("doc_id", "text")
     Dedup.appendToMinhashStore(dup, "text", dir)
-    val ptr = Stores.lastAdmitted(spark, s"$dir/gatelog")
-    assert(ptr.exists(_._1 == 3L), s"duplicate key double-counted: $ptr")
+    val ptr = Stores.admittedStamp(spark, dir)
+    assert(ptr._1 == 3L, s"duplicate key double-counted: $ptr")
     val committed = Stores.lastApplied(spark, s"$dir/gatelog")
-    val fallback = Stores.gateGenerations(spark, dir, "buckets")
+    val recomputed = Stores.gateGenerations(spark, dir, "buckets")
       .map(g => Stores.keyStamp(g.filter(col("batch") <= committed)
         .select(col("batch"), col("doc_id")).distinct(), "doc_id"))
-    assert(fallback.contains(ptr.get),
-      s"pointer stamp $ptr diverges from the fallback recomputation " +
-        s"$fallback")
+    assert(recomputed.contains(ptr),
+      s"pointer stamp $ptr diverges from the generations' $recomputed")
     // the PAYLOAD matches the stamp's set semantics: the duplicated
     // row signed once, so the key's shingle generation rows are not
     // doubled (doubled rows would inflate every later Jaccard against
@@ -242,8 +238,7 @@ class DedupSpec extends SparkSpecBase {
       (7003L, "umber krill zephyr doctrine marble onset glade", 2L))
       .toDF("doc_id", "text", "ingest_ts")
     Dedup.appendToMinhashStore(dupMeta, "text", dir)
-    assert(Stores.lastAdmitted(spark, s"$dir/gatelog")
-      .exists(_._1 == 4L))
+    assert(Stores.admittedStamp(spark, dir)._1 == 4L)
     val metaSh = spark.read.parquet(s"$dir/shingles-batches")
       .filter(col("doc_id") === 7003L)
     assert(metaSh.count() > 0 &&
@@ -334,10 +329,11 @@ class DedupSpec extends SparkSpecBase {
       .filter(col("doc_id") < 10)
     Dedup.writeMinhashStore(store, "doc_id", "text", dir)
     // simulate a library whose arithmetic drifted: same layout,
-    // different modulus in the manifest
-    spark.createDataFrame(Seq(("doc_id", 3, 64, 16, 999L, 999983L)))
-      .toDF("key_col", "k", "num_hashes", "bands", "horner_c", "minhash_p")
-      .write.mode("overwrite").parquet(s"$dir/params")
+    // different constants in the manifest
+    graft.operators.Stores.writeManifest(spark, s"$dir/params",
+      "key_col" -> "doc_id", "key_type" -> "bigint", "k" -> 3,
+      "num_hashes" -> 64, "bands" -> 16, "horner_c" -> 999L,
+      "minhash_p" -> 999983L, "n_docs" -> 10L, "src_check" -> 0L)
     val e = intercept[IllegalArgumentException] {
       Dedup.readMinhashStore(spark, dir)
     }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Graph
+import graft.operators.{Graph, Stores}
 import org.apache.spark.sql.functions._
 
 /** PageRank semantics: mass conservation, hub dominance, dangling
@@ -201,55 +201,48 @@ class GraphSpec extends SparkSpecBase {
     val path = root.resolve("bb").toString
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("a", "b")
     // a crash between the edges write and the manifest write must read
-    // as absent (manifest-present ⇒ complete store)
+    // as absent (manifest-present ⇒ complete)
     edges.write.parquet(s"$path/edges")
-    assert(!Graph.edgeStoreIsCurrent(spark, path, 100L),
+    assert(!Graph.edgeStoreIsCurrent(spark, path, 100L, 7L),
       "a manifestless (mid-build crash) store read as current")
-    Graph.writeEdgeStore(edges, path, 100L)
-    assert(Graph.edgeStoreIsCurrent(spark, path, 100L))
+    Graph.writeEdgeStore(edges, path, 100L, 7L)
+    assert(Graph.edgeStoreIsCurrent(spark, path, 100L, 7L))
     val (read, stamp) = Graph.readEdgeStore(spark, path)
     assert(stamp == 100L)
     assert(read.orderBy(col("a"), col("b")).collect().toSeq ==
       edges.orderBy(col("a"), col("b")).collect().toSeq)
     // the source table grew → the store is stale and a caller rebuilds
-    assert(!Graph.edgeStoreIsCurrent(spark, path, 101L),
+    assert(!Graph.edgeStoreIsCurrent(spark, path, 101L, 7L),
       "a stale store (source count moved) read as current")
     // rebuild over the grown source replaces the artifact
     val grown = edges.unionByName(Seq((3L, 4L)).toDF("a", "b"))
-    Graph.writeEdgeStore(grown, path, 101L)
-    assert(Graph.edgeStoreIsCurrent(spark, path, 101L) &&
-      !Graph.edgeStoreIsCurrent(spark, path, 100L))
+    Graph.writeEdgeStore(grown, path, 101L, 7L)
+    assert(Graph.edgeStoreIsCurrent(spark, path, 101L, 7L) &&
+      !Graph.edgeStoreIsCurrent(spark, path, 100L, 7L))
     assert(Graph.readEdgeStore(spark, path)._1.count() == 4L)
+    // a rebuild that fails mid-write reads as absent, not as current
+    // over partially rewritten edges: the old manifest goes first
+    val failing = grown.select(col("a"),
+      when(col("a") > 0L, raise_error(lit("crash mid-build")))
+        .otherwise(col("b")).as("b"))
+    intercept[Exception](Graph.writeEdgeStore(failing, path, 101L, 7L))
+    assert(!Graph.edgeStoreIsCurrent(spark, path, 101L, 7L),
+      "a rebuild that failed mid-write read as current")
+    Graph.writeEdgeStore(grown, path, 101L, 7L)
     // key-checksum stamp (Stores.keyStamp — the gate stores'
     // currency): a SAME-COUNT source mutation reads stale even when
     // it moves neither the count nor the max key — an INTERIOR key
-    // swapped for another, the case the retired (count, max-key)
-    // stamp read as current
+    // swapped for another
     val src = Seq(10L, 20L, 30L, 500L).toDF("k")
     val srcSwapped = Seq(10L, 25L, 30L, 500L).toDF("k") // same n, same max
-    val (n0, c0) = graft.operators.Stores.keyStamp(src, "k")
-    val (n1, c1) = graft.operators.Stores.keyStamp(srcSwapped, "k")
+    val (n0, c0) = Stores.keyStamp(src, "k")
+    val (n1, c1) = Stores.keyStamp(srcSwapped, "k")
     assert(n0 == n1 && c0 != c1, "keyStamp missed the interior swap")
     val path2 = root.resolve("bb2").toString
     Graph.writeEdgeStore(grown, path2, n0, c0)
     assert(Graph.edgeStoreIsCurrent(spark, path2, n0, c0))
     assert(!Graph.edgeStoreIsCurrent(spark, path2, n1, c1),
       "a same-count same-max interior mutation read as current")
-    // a caller that tracks no key (default −1 on both sides) keeps
-    // the count-only check
-    assert(Graph.edgeStoreIsCurrent(spark, path, 101L))
-    // a manifest from the (count, max-key) era: count-only for an
-    // untracked caller, stale for a checksum-tracking one (the one
-    // forced rebuild that upgrades it)
-    val path3 = root.resolve("bb3").toString
-    edges.write.parquet(s"$path3/edges")
-    spark.createDataFrame(Seq((101L, 500L)))
-      .toDF("n_source_rows", "source_max_key")
-      .write.parquet(s"$path3/params")
-    assert(Graph.edgeStoreIsCurrent(spark, path3, 101L),
-      "a max-key-era manifest must stay count-only for untracked callers")
-    assert(!Graph.edgeStoreIsCurrent(spark, path3, 101L, c0),
-      "a max-key-era manifest must read stale for a checksum caller")
   }
 
   test("triangleStats normalizes duplicates, reversed edges, and " +

@@ -4,6 +4,7 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.col
 
 /** Job budgets for the streaming fold-store path, the warehouse table
   * loaders and the warehouse ETL plans: the number of Spark jobs each
@@ -112,6 +113,64 @@ class JobBudgetSpec extends SparkSpecBase {
     val q = Queries.byName("q248_streaming_countmin")
     val n = jobsOf(Bench.consume(q.run(spark, sf)))
     assert(n <= 8, s"q248 build + drain took $n jobs")
+  }
+
+  test("gate stores: base reads, the edge-store probe and the append " +
+      "commits launch no metadata job") {
+    import spark.implicits._
+    import graft.operators.{Dedup, Graph, Similarity}
+    val docs = Tables.documents(spark, sf)
+      .select(col("doc_id"), col("text")).filter(col("doc_id") < 20)
+    val mh = tmp("graft_budget_mh")
+    Dedup.writeMinhashStore(docs, "doc_id", "text", mh)
+    val mhBase = jobsOf(Dedup.readMinhashStoreBase(spark, mh))
+    val mhAppend = jobsOf(Dedup.appendToMinhashStore(
+      Seq((7000L, "zebra quark lantern voyage ember crystal meadow"))
+        .toDF("doc_id", "text"), "text", mh))
+    val vecs = Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding"))
+    val ivf = tmp("graft_budget_ivf")
+    Similarity.writeIvfStore(vecs.filter(col("vec_id") < 32), "vec_id",
+      "embedding", ivf, numCells = 4)
+    val ivfBase = jobsOf(Similarity.readIvfStoreBase(spark, ivf))
+    val ivfAppend = jobsOf(Similarity.appendToIvfStore(
+      vecs.filter(col("vec_id") === 40), "embedding", ivf))
+    val edges = tmp("graft_budget_edges")
+    Graph.writeEdgeStore(Seq((1L, 2L), (2L, 3L)).toDF("a", "b"), edges,
+      3L, 11L)
+    val edgeProbe = jobsOf(Graph.edgeStoreIsCurrent(spark, edges, 3L, 11L))
+    val edgeRead = jobsOf(Graph.readEdgeStore(spark, edges))
+    info(s"readMinhashStoreBase $mhBase, appendToMinhashStore $mhAppend, " +
+      s"readIvfStoreBase $ivfBase, appendToIvfStore $ivfAppend, " +
+      s"edgeStoreIsCurrent $edgeProbe, readEdgeStore $edgeRead")
+    assert(mhBase == 0, s"readMinhashStoreBase took $mhBase jobs")
+    assert(ivfBase == 0, s"readIvfStoreBase took $ivfBase jobs")
+    assert(edgeProbe == 0, s"edgeStoreIsCurrent took $edgeProbe jobs")
+    // the edges dataset's schema inference is the one job left
+    assert(edgeRead <= 1, s"readEdgeStore took $edgeRead jobs")
+    // a shuffle-map job and a result job for each of the bucket write,
+    // the shingle write (both distinct) and the distinct-key stamp; the
+    // gatelog commit is a pointer flip with no payload, and the base
+    // read launches none
+    assert(mhAppend <= 6, s"appendToMinhashStore took $mhAppend jobs")
+    assert(ivfAppend <= 6, s"appendToIvfStore took $ivfAppend jobs")
+  }
+
+  test("streaming gates and gate compactions: build + drain at their " +
+      "measured job counts") {
+    // no manifest head() or schema-inference job on a base read, no
+    // one-row gatelog payload write per commit. q251 measured 106 and
+    // 107 on the same tree
+    val budgets = Seq("q251_streaming_neardup_gate" -> 107,
+      "q252_streaming_semantic_gate" -> 56, "q259_gate_compaction" -> 43,
+      "q260_ivf_compaction" -> 39)
+    val counts = budgets.map { case (name, budget) =>
+      (name, budget, jobsOf(Bench.consume(Queries.byName(name).run(spark, sf))))
+    }
+    info(counts.map { case (n, _, j) => s"$n $j" }.mkString(", "))
+    val over = counts.filter { case (_, budget, n) => n > budget }
+    assert(over.isEmpty, over.map { case (name, budget, n) =>
+      s"$name build + drain took $n jobs (budget $budget)" }.mkString("; "))
   }
 
   test("every Tables loader, registerViews and eventsStream launch no job") {

@@ -205,8 +205,7 @@ class SimilaritySpec extends SparkSpecBase {
     val novel = e.filter(col("vec_id") >= 100 && col("vec_id") < 103)
       .select(col("vec_id"), col("embedding"))
     Similarity.appendToIvfStore(novel, "embedding", dir)
-    assert(Stores.lastAdmitted(spark, s"$dir/gatelog")
-      .exists(_._1 == 3L))
+    assert(Stores.admittedStamp(spark, dir)._1 == 3L)
     assert(Similarity.ivfStoreIsCurrent(store.unionByName(novel), dir))
     assert(!Similarity.ivfStoreIsCurrent(
       mutated.unionByName(novel), dir))

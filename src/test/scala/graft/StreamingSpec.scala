@@ -573,8 +573,6 @@ class StreamingSpec extends SparkSpecBase {
     val labels = descs.asScala.toSeq
     assert(labels.exists(_.startsWith("neardup gate gen=")),
       s"no tagged gate admit job: $labels")
-    assert(labels.exists(_.startsWith("gate commit gen=")),
-      s"no tagged gate commit job: $labels")
   }
 
   test("awaitDrained stops a stream that does not drain in time and " +
@@ -1009,7 +1007,7 @@ class StreamingSpec extends SparkSpecBase {
     // mode("overwrite") protocol had already DELETED the committed
     // payload, so a crash silently rebuilt the store from only the
     // replayed batch
-    Stores.stamp(CountMin.sketch(b2, Seq.empty, "v", 4, 64), 1L)
+    CountMin.sketch(b2, Seq.empty, "v", 4, 64)
       .write.parquet(s"$cm/cells/g1")
     assert(cmTotal() == 100L * 4,
       "an uncommitted generation leaked into reads")
@@ -1032,9 +1030,8 @@ class StreamingSpec extends SparkSpecBase {
     val hist = root.resolve("hist").toString
     Audit.histogramFoldIntoStore(b1.withColumnRenamed("v", "bucket"),
       "bucket", hist, batchId = Some(0L))
-    Stores.stamp(
-        b2.groupBy(col("v").cast("long").as("bucket"))
-          .agg(count(lit(1)).as("cnt")), 1L)
+    b2.groupBy(col("v").cast("long").as("bucket"))
+      .agg(count(lit(1)).as("cnt"))
       .write.parquet(s"$hist/g1")
     assert(Audit.readHistogramStore(spark, hist)
       .agg(sum(col("cnt"))).head.getLong(0) == 100L,
@@ -1044,50 +1041,6 @@ class StreamingSpec extends SparkSpecBase {
     assert(Audit.readHistogramStore(spark, hist)
       .agg(sum(col("cnt"))).head.getLong(0) == 180L,
       "histogram history lost across the simulated mid-merge crash")
-  }
-
-  test("legacy-store migration crash: a g0 written inside a legacy " +
-      "payload root leaves the legacy store readable, and the replayed " +
-      "fold migrates it cleanly") {
-    import spark.implicits._
-    import graft.operators.{Audit, Stores}
-    val root = java.nio.file.Files.createTempDirectory("graft_legacy")
-    val hist = root.resolve("hist").toString
-    val b1 = (1L to 100L).map(_ % 11).toDF("bucket")
-    val b2 = (1L to 80L).map(i => (i * 3) % 13).toDF("bucket")
-    // a store written by a pre-generation caller: root-level parquet
-    // files with the legacy embedded stamp, no pointer
-    Stores.stamp(
-        b1.groupBy(col("bucket").cast("long").as("bucket"))
-          .agg(count(lit(1)).as("cnt")), 0L)
-      .coalesce(1).write.parquet(hist)
-    assert(Stores.lastApplied(spark, hist) == 0L,
-      "legacy embedded stamp not honored")
-    // simulate batch 1's migration fold crashing AFTER its g0 parquet
-    // job committed but BEFORE the pointer flip: root now mixes
-    // legacy part-files with a generation dir — the window where
-    // directory discovery fails partition inference
-    Stores.stamp(
-        b2.groupBy(col("bucket").cast("long").as("bucket"))
-          .agg(count(lit(1)).as("cnt")), 1L)
-      .coalesce(1).write.parquet(s"$hist/g0")
-    assert(Audit.readHistogramStore(spark, hist)
-      .agg(sum(col("cnt"))).head.getLong(0) == 100L,
-      "legacy payload unreadable beside an uncommitted generation")
-    assert(Stores.lastApplied(spark, hist) == 0L,
-      "an uncommitted generation's stamp suppressed the replay")
-    // the re-delivered batch folds onto the legacy history (its g0
-    // write clobbers the garbage dir), and the sweep retires the
-    // superseded root-level files
-    Audit.histogramFoldIntoStore(b2, "bucket", hist, batchId = Some(1L))
-    assert(Audit.readHistogramStore(spark, hist)
-      .agg(sum(col("cnt"))).head.getLong(0) == 180L,
-      "history lost across the simulated migration crash")
-    assert(Stores.lastApplied(spark, hist) == 1L)
-    val leftovers = new java.io.File(hist).listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-    assert(leftovers.isEmpty,
-      s"superseded legacy files not swept: ${leftovers.mkString(",")}")
   }
 
   test("an uncommitted gate generation is invisible to non-gate store " +
@@ -1116,10 +1069,8 @@ class StreamingSpec extends SparkSpecBase {
     assert(beforeCommit.buckets.filter(col("doc_id") === 7000L).isEmpty)
     // once the batch commits its gatelog marker, the generation is
     // visible to every reader
-    Stores.commitPayload(spark, s"$storePath/gatelog", Some(0L)) { dir =>
-      spark.range(1).select(lit(0L).as("applied"))
-        .write.mode("overwrite").parquet(dir)
-    }
+    Stores.commitStamp(spark, s"$storePath/gatelog", 0L, None,
+      Some(Stores.keyStamp(admitted, "doc_id")))
     assert(Dedup.readMinhashStore(spark, storePath)
       .buckets.filter(col("doc_id") === 7000L).count() > 0,
       "a committed generation must be visible to non-gate readers")
@@ -1175,7 +1126,7 @@ class StreamingSpec extends SparkSpecBase {
 
   test("a store grown by another writer under a live gate checkpoint " +
       "fails the wire LOUDLY at restart instead of silently dropping " +
-      "batches; legacy markerless checkpoints keep their id mapping") {
+      "batches") {
     import spark.implicits._
     import graft.operators.Dedup
     val root = java.nio.file.Files.createTempDirectory("graft_owncheck")
@@ -1219,33 +1170,6 @@ class StreamingSpec extends SparkSpecBase {
     }
     assert(ex.getMessage.contains("another writer"),
       s"wrong failure: ${ex.getMessage}")
-    // legacy path: a checkpoint from the pre-marker protocol (commits
-    // exist, no marker file) must resolve to the identity mapping —
-    // offset 0 — not to a fresh offset that would renumber a replayed
-    // batch into a new generation
-    val ckpt2 = root.resolve("ckpt2")
-    val store2 = root.resolve("store2").toString
-    Dedup.writeMinhashStore(corpus, "doc_id", "text", store2)
-    val q2 = graft.streaming.IncrementalLoad.streamingNearDupGate(
-      spark, stream, "text", store2,
-      root.resolve("admitted2").toString, ckpt2.toString)
-    assert(q2.awaitTermination(120000)); q2.stop()
-    while (spark.streams.active.nonEmpty && System.nanoTime() < deadline)
-      Thread.sleep(100)
-    java.nio.file.Files.deleteIfExists(ckpt2.resolve("graft-gate-offset"))
-    java.nio.file.Files.deleteIfExists(
-      ckpt2.resolve(".graft-gate-offset.crc"))
-    val q3 = graft.streaming.IncrementalLoad.streamingNearDupGate(
-      spark, stream, "text", store2,
-      root.resolve("admitted2").toString, ckpt2.toString)
-    assert(q3.awaitTermination(120000)); q3.stop()
-    // identity mapping re-adopted: the drained store still stamps the
-    // legacy horizon (batch 0 = gen 0), and no duplicate admissions
-    assert(graft.operators.Stores.lastApplied(
-        spark, s"$store2/gatelog") == 0L)
-    val admitted2 = spark.read.parquet(root.resolve("admitted2").toString)
-      .select("doc_id").as[Long].collect().toList
-    assert(admitted2 == List(7000L), s"admitted: $admitted2")
   }
 
   test("minhash store compaction: committed generations fold into a " +
@@ -1286,11 +1210,8 @@ class StreamingSpec extends SparkSpecBase {
     Dedup.writeGateAppend(
       Dedup.minhashBandBuckets(stale, "doc_id", "text"),
       newPath, "buckets", 0L)
-    graft.operators.Stores.commitPayload(spark, s"$newPath/gatelog",
-        Some(0L)) { dir =>
-      spark.range(1).select(lit(0L).as("applied"))
-        .write.mode("overwrite").parquet(dir)
-    }
+    graft.operators.Stores.commitStamp(spark, s"$newPath/gatelog", 0L,
+      None, Some(graft.operators.Stores.keyStamp(stale, "doc_id")))
     Dedup.compactMinhashStore(spark, storePath, newPath)
     // the compacted root is a plain base store: no generation roots,
     // no gatelog to list per probe
@@ -1392,17 +1313,6 @@ class StreamingSpec extends SparkSpecBase {
         root.resolve("ckpt1").toString)
     }
     assert(exNf.getMessage.contains("not fresh"), exNf.getMessage)
-    // a non-gate store is refused by the manifest probe
-    val dummy = root.resolve("dummy").toString
-    Seq((4, 32)).toDF("depth", "width")
-      .write.parquet(s"$dummy/params")
-    val exKind = intercept[IllegalArgumentException] {
-      graft.streaming.IncrementalLoad.handoffCompacted(
-        spark, dummy, root.resolve("store4").toString,
-        root.resolve("ckpt3").toString)
-    }
-    assert(exKind.getMessage.contains("none of the registered gate " +
-      "store kinds"), exKind.getMessage)
     // incarnation 2: a near-dup of the PRE-COMPACTION admission plus a
     // genuinely novel doc, in one batch through the new gate
     val b2 = Seq(
@@ -1505,172 +1415,22 @@ class StreamingSpec extends SparkSpecBase {
       "a same-count key mutation must read stale")
   }
 
-  test("legacy checkpoint crash window: a markerless checkpoint whose " +
-      "store stamp sits ONE past its committed horizon recovers as a " +
-      "no-op replay; a store grown two past it still fails loudly") {
+  test("gate-wire slot ownership: the wire's own commit at its next " +
+      "slot replays as a no-op; a batch append that took the slot " +
+      "fails loudly") {
     import spark.implicits._
     import graft.operators.{Dedup, Stores}
-    val root = java.nio.file.Files.createTempDirectory("graft_legacycw")
-    val storePath = root.resolve("store").toString
-    val admittedPath = root.resolve("admitted").toString
-    val ckpt = root.resolve("ckpt")
-    val corpus = Tables.documents(spark, sf)
-      .select(col("doc_id"), col("text")).filter(col("doc_id") < 40)
-    Dedup.writeMinhashStore(corpus, "doc_id", "text", storePath)
-    val novel = "zebra quark lantern voyage ember crystal meadow pylon"
-    val novel2 = "glacier orbit thistle quarry lagoon saffron tundra vex"
-    Seq((7001L, novel)).toDF("doc_id", "text")
-      .coalesce(1).write.parquet(root.resolve("in/b1").toString)
-    Seq((9001L, novel2)).toDF("doc_id", "text")
-      .coalesce(1).write.parquet(root.resolve("in/b2").toString)
-    import java.nio.file.attribute.FileTime
-    def touch(sub: String, t: Long): Unit =
-      java.nio.file.Files.walk(root.resolve(sub)).forEach(p =>
-        java.nio.file.Files.setLastModifiedTime(p, FileTime.fromMillis(t)))
-    val now = System.currentTimeMillis()
-    touch("in/b1", now - 60000); touch("in/b2", now)
-    def stream = spark.readStream.schema(corpus.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(root.toString + "/in/*/")
-    val q1 = graft.streaming.IncrementalLoad.streamingNearDupGate(
-      spark, stream, "text", storePath, admittedPath, ckpt.toString)
-    assert(q1.awaitTermination(120000), "first drain did not finish")
-    q1.stop()
-    val deadline = System.nanoTime() + 60e9.toLong
-    while (spark.streams.active.nonEmpty && System.nanoTime() < deadline)
-      Thread.sleep(100)
-    assert(Stores.lastApplied(spark, s"$storePath/gatelog") == 1L)
-    // stage the PRE-upgrade protocol's normal crash window: the
-    // checkpoint predates the marker (delete it) and Spark's commit
-    // for batch 1 was lost while the gatelog stamp flipped to 1 —
-    // committed horizon 0, store stamp 1
-    java.nio.file.Files.deleteIfExists(ckpt.resolve("graft-gate-offset"))
-    java.nio.file.Files.deleteIfExists(
-      ckpt.resolve(".graft-gate-offset.crc"))
-    val lastCommit = new java.io.File(s"$ckpt/commits").listFiles()
-      .filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
-    assert(lastCommit.getName.toLong == 1L && lastCommit.delete(),
-      "commit-log rewind failed")
-    new java.io.File(s"$ckpt/commits/.1.crc").delete()
-    // restart on the same checkpoint: this is routine crash recovery —
-    // the replay of batch 1 must skip as a no-op at the gen == stamp
-    // boundary, NOT fail the wire blaming another writer (the
-    // pre-slack horizon check did exactly that)
-    val q2 = graft.streaming.IncrementalLoad.streamingNearDupGate(
-      spark, stream, "text", storePath, admittedPath, ckpt.toString)
-    assert(q2.awaitTermination(120000), "legacy replay did not drain")
-    q2.stop()
-    while (spark.streams.active.nonEmpty && System.nanoTime() < deadline)
-      Thread.sleep(100)
-    val admitted = spark.read.parquet(admittedPath)
-      .select("doc_id").as[Long].collect().toSeq.sorted
-    assert(admitted == Seq(7001L, 9001L), s"admitted: $admitted")
-    assert(Stores.lastApplied(spark, s"$storePath/gatelog") == 1L,
-      "the no-op replay must not advance the stamp")
-    // the slack is exactly ONE slot: a store grown TWO past the
-    // horizon by foreign appends still refuses loudly
-    Dedup.appendToMinhashStore(
-      Seq((7500L, "orchid basalt nimbus ferret cobalt prairie sonnet"))
-        .toDF("doc_id", "text"), "text", storePath)
-    Dedup.appendToMinhashStore(
-      Seq((7501L, "quartz fjord umbra lattice pinion sable grove"))
-        .toDF("doc_id", "text"), "text", storePath)
-    val ex = intercept[IllegalArgumentException] {
-      graft.streaming.IncrementalLoad.streamingNearDupGate(
-        spark, stream, "text", storePath, admittedPath, ckpt.toString)
-    }
-    assert(ex.getMessage.contains("another writer"), ex.getMessage)
-  }
-
-  test("adopted legacy checkpoint, later restart: a single foreign " +
-      "append is refused loudly at wire start — the adoption-window " +
-      "tolerance no longer leaks one slot of slack into every restart") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val root = java.nio.file.Files.createTempDirectory("graft_adoptslack")
-    val storePath = root.resolve("store").toString
-    val ckpt = root.resolve("ckpt")
-    val corpus = Tables.documents(spark, sf)
-      .select(col("doc_id"), col("text")).filter(col("doc_id") < 40)
-    Dedup.writeMinhashStore(corpus, "doc_id", "text", storePath)
-    val novel = "zebra quark lantern voyage ember crystal meadow pylon"
-    Seq((7001L, novel)).toDF("doc_id", "text")
-      .coalesce(1).write.parquet(root.resolve("in/b1").toString)
-    def stream = spark.readStream.schema(corpus.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(root.toString + "/in/*/")
-    val q1 = graft.streaming.IncrementalLoad.streamingNearDupGate(
-      spark, stream, "text", storePath,
-      root.resolve("admitted").toString, ckpt.toString)
-    assert(q1.awaitTermination(120000), "first drain did not finish")
-    q1.stop()
-    val deadline = System.nanoTime() + 60e9.toLong
-    while (spark.streams.active.nonEmpty && System.nanoTime() < deadline)
-      Thread.sleep(100)
-    // make the checkpoint pre-upgrade (markerless), then ADOPT it: the
-    // restart writes the legacy marker (empty writer token) carrying
-    // the adoption bound, and drains nothing new
-    java.nio.file.Files.deleteIfExists(ckpt.resolve("graft-gate-offset"))
-    java.nio.file.Files.deleteIfExists(
-      ckpt.resolve(".graft-gate-offset.crc"))
-    val q2 = graft.streaming.IncrementalLoad.streamingNearDupGate(
-      spark, stream, "text", storePath,
-      root.resolve("admitted").toString, ckpt.toString)
-    assert(q2.awaitTermination(120000)); q2.stop()
-    while (spark.streams.active.nonEmpty && System.nanoTime() < deadline)
-      Thread.sleep(100)
-    // ONE foreign append between runs. Pre-r14, the empty writer token
-    // granted the adopted checkpoint one slot of slack on EVERY
-    // restart, so this passed the horizon check and the next batch was
-    // silently skipped at gen == stamp (its admissions lost). The
-    // adoption bound confines the tolerance to the adoption-time
-    // state: a later restart must refuse loudly.
-    Dedup.appendToMinhashStore(
-      Seq((7500L, "orchid basalt nimbus ferret cobalt prairie sonnet"))
-        .toDF("doc_id", "text"), "text", storePath)
-    val ex = intercept[IllegalArgumentException] {
-      graft.streaming.IncrementalLoad.streamingNearDupGate(
-        spark, stream, "text", storePath,
-        root.resolve("admitted").toString, ckpt.toString)
-    }
-    assert(ex.getMessage.contains("another writer"), ex.getMessage)
-    // the adoption bound is CLAMPED to one slot past the committed
-    // horizon (the pre-upgrade protocol's maximal crash window): a
-    // store grown TWO past it before a markerless checkpoint is
-    // adopted must refuse loudly AT adoption — recording the raw
-    // stamp would make the horizon check tautological and tolerate
-    // arbitrary pre-adoption foreign growth
-    Dedup.appendToMinhashStore(
-      Seq((7501L, "quartz fjord umbra lattice pinion sable grove"))
-        .toDF("doc_id", "text"), "text", storePath)
-    java.nio.file.Files.deleteIfExists(ckpt.resolve("graft-gate-offset"))
-    java.nio.file.Files.deleteIfExists(
-      ckpt.resolve(".graft-gate-offset.crc"))
-    val exAdopt = intercept[IllegalArgumentException] {
-      graft.streaming.IncrementalLoad.streamingNearDupGate(
-        spark, stream, "text", storePath,
-        root.resolve("admitted").toString, ckpt.toString)
-    }
-    assert(exAdopt.getMessage.contains("another writer"),
-      exAdopt.getMessage)
-  }
-
-  test("legacy checkpoint migration: migrateLegacyCheckpoint stamps " +
-      "the writer token, so a foreign append at the crash-window slot " +
-      "fails loudly where an unmigrated checkpoint tolerantly skips; " +
-      "undrained/fresh checkpoints are refused; migration idempotent") {
-    import spark.implicits._
-    import graft.operators.{Dedup, Stores}
-    val root = java.nio.file.Files.createTempDirectory("graft_migrate")
+    val root = java.nio.file.Files.createTempDirectory("graft_gateslot")
     val corpus = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text")).filter(col("doc_id") < 40)
     val novel = "zebra quark lantern voyage ember crystal meadow pylon"
     val novel2 = "glacier orbit thistle quarry lagoon saffron tundra vex"
     val deadline = System.nanoTime() + 300e9.toLong
-    def markerOf(ckpt: java.nio.file.Path) =
-      new org.apache.hadoop.fs.Path(ckpt.toString, "graft-gate-offset")
-    // stage one adopted-legacy gate per branch: drain batch 0, strip
-    // the marker (pre-upgrade checkpoint), re-adopt, stop
+    def settle(): Unit =
+      while (spark.streams.active.nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(100)
+    // one gate per case: batch 0 (7001) drained, batch 1 (9001) staged
+    // with a later mtime so it arrives second
     def stage(tag: String): (String, java.nio.file.Path,
         () => org.apache.spark.sql.streaming.StreamingQuery) = {
       val storePath = root.resolve(s"store_$tag").toString
@@ -1684,168 +1444,80 @@ class StreamingSpec extends SparkSpecBase {
       def start() = graft.streaming.IncrementalLoad.streamingNearDupGate(
         spark, stream, "text", storePath,
         root.resolve(s"adm_$tag").toString, ckpt.toString)
-      val q1 = start()
-      assert(q1.awaitTermination(120000), s"$tag: drain 0 did not finish")
-      q1.stop()
-      while (spark.streams.active.nonEmpty && System.nanoTime() < deadline)
-        Thread.sleep(100)
-      java.nio.file.Files.deleteIfExists(
-        ckpt.resolve("graft-gate-offset"))
-      java.nio.file.Files.deleteIfExists(
-        ckpt.resolve(".graft-gate-offset.crc"))
-      val q2 = start()
-      assert(q2.awaitTermination(120000)); q2.stop()
-      while (spark.streams.active.nonEmpty && System.nanoTime() < deadline)
-        Thread.sleep(100)
+      val q = start()
+      assert(q.awaitTermination(120000), s"$tag: batch 0 did not drain")
+      q.stop(); settle()
+      Seq((9001L, novel2)).toDF("doc_id", "text").coalesce(1)
+        .write.parquet(root.resolve(s"in_$tag/b2").toString)
       (storePath, ckpt, () => start())
     }
-    val (storeM, ckptM, startM) = stage("mig")
-    // refusal 1: a pending crash window (started batch not committed)
-    // must refuse — stamping a token over an untagged own commit would
-    // make the routine replay read as a foreign writer
-    Stores.writeMarkerFile(spark, markerOf(ckptM), "0 1 - 0")
-    val exWin = intercept[IllegalArgumentException] {
-      graft.streaming.IncrementalLoad.migrateLegacyCheckpoint(
-        spark, ckptM.toString, storeM)
-    }
-    assert(exWin.getMessage.contains("crash window"), exWin.getMessage)
-    Stores.writeMarkerFile(spark, markerOf(ckptM), "0 0 - 0")
-    // refusal 2: a fresh checkpoint has nothing to migrate
-    val exFresh = intercept[IllegalArgumentException] {
-      graft.streaming.IncrementalLoad.migrateLegacyCheckpoint(
-        spark, root.resolve("ckpt_fresh").toString, storeM)
-    }
-    assert(exFresh.getMessage.contains("nothing to migrate"),
-      exFresh.getMessage)
-    // refusal 3: a wrong store path (no gatelog stamp under it) must
-    // refuse rather than validate vacuously and stamp the token
-    // against the wrong horizon
-    val exPath = intercept[IllegalArgumentException] {
-      graft.streaming.IncrementalLoad.migrateLegacyCheckpoint(
-        spark, ckptM.toString, root.resolve("not_a_store").toString)
-    }
-    assert(exPath.getMessage.contains("no gatelog stamp"),
-      exPath.getMessage)
-    // migrate — the marker gains a token; a second call is a no-op
-    graft.streaming.IncrementalLoad.migrateLegacyCheckpoint(
-      spark, ckptM.toString, storeM)
-    val tok = Stores.readMarkerFile(spark, markerOf(ckptM)).get
-      .split("\\s+")(2)
-    assert(tok.nonEmpty && tok != "-", s"no token stamped: $tok")
-    graft.streaming.IncrementalLoad.migrateLegacyCheckpoint(
-      spark, ckptM.toString, storeM)
-    assert(Stores.readMarkerFile(spark, markerOf(ckptM)).get
-      .split("\\s+")(2) == tok, "migration is not idempotent")
-    // THE closed ambiguity, on both branches: the wire STARTED batch 1
-    // (intent recorded), its own commit was lost, and a foreign append
-    // took generation slot 1 during the window
-    def stealSlot(storePath: String): Unit =
-      Dedup.appendToMinhashStore(
-        Seq((7500L, "orchid basalt nimbus ferret cobalt prairie sonnet"))
-          .toDF("doc_id", "text"), "text", storePath)
-    Seq((9001L, novel2)).toDF("doc_id", "text").coalesce(1)
-      .write.parquet(root.resolve("in_mig/b2").toString)
-    Stores.writeMarkerFile(spark, markerOf(ckptM), s"0 1 $tok")
-    stealSlot(storeM)
-    // migrated: the foreign (untagged) stamp at the slot fails LOUDLY
-    val qM = startM()
-    val exSlot = intercept[
-        org.apache.spark.sql.streaming.StreamingQueryException] {
-      qM.awaitTermination(120000)
-    }
-    assert(exSlot.getMessage.contains("not committed by this checkpoint"),
-      exSlot.getMessage)
-    while (spark.streams.active.nonEmpty && System.nanoTime() < deadline)
-      Thread.sleep(100)
-    // unmigrated contrast: the SAME staging skips tolerantly (the
-    // pre-upgrade protocol's behavior — the documented inherent
-    // ambiguity of a tokenless checkpoint), losing batch 1's
-    // admissions with the stamp unmoved
-    val (storeU, ckptU, startU) = stage("unm")
-    Seq((9001L, novel2)).toDF("doc_id", "text").coalesce(1)
-      .write.parquet(root.resolve("in_unm/b2").toString)
-    Stores.writeMarkerFile(spark, markerOf(ckptU), "0 1 - 0")
-    stealSlot(storeU)
-    val qU = startU()
-    assert(qU.awaitTermination(120000), "unmigrated replay did not drain")
-    qU.stop()
-    while (spark.streams.active.nonEmpty && System.nanoTime() < deadline)
-      Thread.sleep(100)
-    assert(Stores.lastApplied(spark, s"$storeU/gatelog") == 1L,
-      "the tolerated skip must not advance the stamp")
-    val admittedU = spark.read.parquet(root.resolve("adm_unm").toString)
-      .select("doc_id").as[Long].collect().toSeq.sorted
-    assert(admittedU == Seq(7001L), s"unmigrated admitted: $admittedU")
-    // and migration must NOT turn the migrated checkpoint's OWN
-    // routine crash recovery into a loud failure: a post-migration
-    // commit whose Spark checkpoint commit is lost (gatelog flipped,
-    // token stamped) must replay as a token-matched no-op skip
+    def admitted(tag: String): Seq[Long] =
+      spark.read.parquet(root.resolve(s"adm_$tag").toString)
+        .select("doc_id").as[Long].collect().toSeq.sorted
+    // OWN crash window: batch 1 commits its gatelog stamp (tagged with
+    // this checkpoint's token), then Spark's commit for it is lost; the
+    // re-delivered batch lands on gen == stamp and must skip
     val (storeO, ckptO, startO) = stage("own")
-    graft.streaming.IncrementalLoad.migrateLegacyCheckpoint(
-      spark, ckptO.toString, storeO)
-    Seq((9001L, novel2)).toDF("doc_id", "text").coalesce(1)
-      .write.parquet(root.resolve("in_own/b2").toString)
     val qO1 = startO()
-    assert(qO1.awaitTermination(120000), "post-migration drain failed")
-    qO1.stop()
-    while (spark.streams.active.nonEmpty && System.nanoTime() < deadline)
-      Thread.sleep(100)
+    assert(qO1.awaitTermination(120000), "batch 1 did not drain")
+    qO1.stop(); settle()
     assert(Stores.lastApplied(spark, s"$storeO/gatelog") == 1L)
     assert(Stores.lastWriter(spark, s"$storeO/gatelog").nonEmpty,
-      "post-migration commit must carry the token")
-    // stage the crash window: Spark's commit for batch 1 lost, the
-    // gatelog stamp (token-tagged) stays
-    val lastCommitO = new java.io.File(s"$ckptO/commits").listFiles()
+      "the gate's commit must carry its writer token")
+    val lastCommit = new java.io.File(s"$ckptO/commits").listFiles()
       .filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
-    assert(lastCommitO.getName.toLong == 1L && lastCommitO.delete())
+    assert(lastCommit.getName.toLong == 1L && lastCommit.delete())
     new java.io.File(s"$ckptO/commits/.1.crc").delete()
     val qO2 = startO()
     assert(qO2.awaitTermination(120000),
-      "migrated own crash-window replay must drain as a no-op, " +
-        "not fail loudly")
-    qO2.stop()
-    while (spark.streams.active.nonEmpty && System.nanoTime() < deadline)
-      Thread.sleep(100)
+      "the own crash-window replay must drain as a no-op")
+    qO2.stop(); settle()
     assert(Stores.lastApplied(spark, s"$storeO/gatelog") == 1L,
       "the no-op replay must not advance the stamp")
-    val admittedO = spark.read.parquet(root.resolve("adm_own").toString)
-      .select("doc_id").as[Long].collect().toSeq.sorted
-    assert(admittedO == Seq(7001L, 9001L),
-      s"own-window admitted: $admittedO")
-  }
-
-  test("incarnation marker layout round-trips through the one " +
-      "parser, including the '-' writer placeholder and the legacy " +
-      "trimmed form") {
-    val IL = graft.streaming.IncrementalLoad
-    // (offset, intent, writer, adoptBound) across every field shape:
-    // fresh token incarnation, adopted legacy (empty writer + bound),
-    // migrated (token, no bound), clean adoption, pre-adoptBound
-    // legacy (no writer, no bound — the trimmed two-field form)
-    val cases = Seq(
-      (0L, -1L, "ab12cd34ef56ab12", -1L),
-      (0L, 5L, "", 3L),
-      (7L, 2L, "", -1L),
-      (3L, 0L, "feedfacefeedface", 9L),
-      (12L, 40L, "", 41L))
-    cases.foreach { c =>
-      val content = IL.markerContent(c._1, c._2, c._3, c._4)
-      assert(IL.parseMarker(content) == c,
-        s"round-trip broke for $c via '$content'")
-      // the writer slot never leaks a raw empty field (positional
-      // layout): an empty writer is '-' when a field follows, absent
-      // otherwise
-      assert(!content.endsWith(" ") && !content.contains("  "),
-        s"malformed marker content '$content'")
+    assert(admitted("own") == Seq(7001L, 9001L),
+      s"admitted: ${admitted("own")}")
+    // FOREIGN slot: the wire STARTED batch 1 (intent recorded before any
+    // commit), its own commit never happened, and a batch append took
+    // generation slot 1 meanwhile. The intent arithmetic cannot see
+    // this (intent covers the slot); the untagged stamp at the slot
+    // must fail the wire instead of skipping batch 1's admissions
+    val (storeF, ckptF, startF) = stage("foreign")
+    val marker = new org.apache.hadoop.fs.Path(ckptF.toString,
+      "graft-gate-offset")
+    val (offset, _, token) = graft.streaming.IncrementalLoad.parseMarker(
+      Stores.readMarkerFile(spark, marker).get)
+    Stores.writeMarkerFile(spark, marker, s"$offset 1 $token")
+    Dedup.appendToMinhashStore(
+      Seq((7500L, "orchid basalt nimbus ferret cobalt prairie sonnet"))
+        .toDF("doc_id", "text"), "text", storeF)
+    assert(Stores.lastApplied(spark, s"$storeF/gatelog") == 1L)
+    val qF = startF()
+    val ex = intercept[
+        org.apache.spark.sql.streaming.StreamingQueryException] {
+      qF.awaitTermination(120000)
     }
-    // pre-r14 persisted forms parse with adoptBound −1 (no tolerance)
-    assert(IL.parseMarker("0 5") == ((0L, 5L, "", -1L)))
-    assert(IL.parseMarker("2 7 aabb") == ((2L, 7L, "aabb", -1L)))
+    assert(ex.getMessage.contains("not committed by this checkpoint"),
+      ex.getMessage)
+    settle()
+    assert(admitted("foreign") == Seq(7001L))
   }
 
-  test("fold-wire slot ownership: an untagged stamp at the wire's " +
-      "next slot is tolerated as a pre-token commit (no-op replay); " +
-      "a foreign token at the slot fails loudly") {
+  test("incarnation marker layout round-trips through the one parser") {
+    val IL = graft.streaming.IncrementalLoad
+    Seq((0L, -1L, "ab12cd34ef56ab12"), (3L, 40L, "feedfacefeedface"))
+      .foreach { c =>
+        val content = IL.markerContent(c._1, c._2, c._3)
+        assert(IL.parseMarker(content) == c,
+          s"round-trip broke for $c via '$content'")
+      }
+    // a marker without its writer token is malformed, not a token-less
+    // incarnation
+    intercept[IllegalArgumentException](IL.parseMarker("0 5"))
+  }
+
+  test("fold-wire slot ownership: an untagged batch-fold stamp at the " +
+      "wire's next slot replays as a no-op; a foreign token at the slot " +
+      "fails loudly") {
     import spark.implicits._
     import graft.operators.{CountMin, Stores}
     val root = java.nio.file.Files.createTempDirectory("graft_foldslot")
@@ -1855,9 +1527,9 @@ class StreamingSpec extends SparkSpecBase {
       .option("maxFilesPerTrigger", "1")
       .parquet(root.toString + "/in/*/")
     // CASE 1: the stamp at the wire's next slot was committed WITHOUT
-    // a writer token — only a pre-token-protocol fold can have done
-    // that (batch folds never advance the stamp), so it is this
-    // wire's own upgrade-then-crash window and must replay as a no-op
+    // a writer token — a batch fold with an explicit batchId commits
+    // exactly that, and the store holds the fold the stamp names, so
+    // the wire's replay of that slot is a no-op
     val storeA = root.resolve("cmA").toString
     CountMin.foldIntoStore(df, "v", storeA, 4, 32, batchId = Some(1L))
     assert(Stores.lastWriter(spark, s"$storeA/cells").isEmpty)
@@ -1884,7 +1556,7 @@ class StreamingSpec extends SparkSpecBase {
     // fail loudly instead
     val storeB = root.resolve("cmB").toString
     CountMin.foldIntoStore(df, "v", storeB, 4, 32, batchId = Some(0L))
-    Stores.commitPayload(spark, s"$storeB/cells", Some(1L),
+    Stores.commitPayload(spark, s"$storeB/cells", 1L,
         Some("feedfacefeedface")) { dir =>
       CountMin.readStore(spark, storeB).cells
         .write.mode("overwrite").parquet(dir)
@@ -2052,12 +1724,11 @@ class StreamingSpec extends SparkSpecBase {
       .select("doc_id").as[Long].collect().toSeq.sorted
     assert(admittedIds() == Seq(7001L, 9001L), "first drain admit set")
     // simulate a crash BETWEEN batch 1's generation writes and its
-    // gatelog flip: the generation dirs exist, but the marker still
-    // says only batch 0 committed
-    Stores.commitPayload(spark, s"$storePath/gatelog") { dir =>
-      spark.range(1).select(lit(0L).as("applied"))
-        .write.mode("overwrite").parquet(dir)
-    }
+    // gatelog flip: the generation dirs exist, but the gatelog still
+    // holds batch 0's commit (its stamp, token and admitted total)
+    val gatelog = s"$storePath/gatelog"
+    Stores.commitStamp(spark, gatelog, 0L, Stores.lastWriter(spark, gatelog),
+      Some(Stores.keyStamp(Seq(7001L).toDF("doc_id"), "doc_id")))
     // and rewind the commit log so batch 1 re-delivers
     val lastCommit = new java.io.File(s"$ckpt/commits").listFiles()
       .filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
@@ -2076,6 +1747,9 @@ class StreamingSpec extends SparkSpecBase {
       "replay changed the admit decisions")
     assert(spark.read.parquet(admittedPath).count() == 2,
       "replay duplicated admitted rows")
+    assert(Stores.admittedStamp(spark, storePath) ==
+      Stores.keyStamp(Seq(7001L, 9001L).toDF("doc_id"), "doc_id"),
+      "the replayed commit's running admitted stamp")
     val grown = Dedup.readMinhashStore(spark, storePath)
     assert(grown.buckets.filter(col("doc_id") === 9001L).count() ==
       grown.buckets.filter(col("doc_id") === 7001L).count(),
@@ -2134,12 +1808,11 @@ class StreamingSpec extends SparkSpecBase {
       .select("vec_id").as[Long].collect().toSeq.sorted
     assert(admittedIds() == Seq(7001L, 9001L), "first drain admit set")
     // crash BETWEEN batch 1's generation writes and its gatelog flip:
-    // the vector generation exists, but the marker says only batch 0
-    // committed
-    Stores.commitPayload(spark, s"$storePath/gatelog") { dir =>
-      spark.range(1).select(lit(0L).as("applied"))
-        .write.mode("overwrite").parquet(dir)
-    }
+    // the vector generation exists, but the gatelog still holds batch
+    // 0's commit
+    val gatelog = s"$storePath/gatelog"
+    Stores.commitStamp(spark, gatelog, 0L, Stores.lastWriter(spark, gatelog),
+      Some(Stores.keyStamp(Seq(7001L).toDF("vec_id"), "vec_id")))
     val lastCommit = new java.io.File(s"$ckpt/commits").listFiles()
       .filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
     assert(lastCommit.getName.toLong == 1L && lastCommit.delete(),
@@ -2156,6 +1829,9 @@ class StreamingSpec extends SparkSpecBase {
       "replay changed the admit decisions")
     assert(spark.read.parquet(admittedPath).count() == 2,
       "replay duplicated admitted rows")
+    assert(Stores.admittedStamp(spark, storePath) ==
+      Stores.keyStamp(Seq(7001L, 9001L).toDF("vec_id"), "vec_id"),
+      "the replayed commit's running admitted stamp")
     val grown = Similarity.readIvfStore(spark, storePath)
     assert(grown.vectors.filter(col("vec_id") >= 7000L)
       .groupBy(col("vec_id")).count()
