@@ -1,32 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
-  /** Fully evaluate a query's plan — every output column of every row —
-    * without collecting to the driver. `count()` is NOT that: the
-    * optimizer prunes the final projections and drops the top sort
-    * under an aggregate, so a query whose cost lives in its per-row
-    * output transforms times as a bare scan (q150's rule gate measured
-    * 0.17 s under count() and 9.4 s when a filter forced it — the
-    * benchmark must charge the real price). Iterating the plan's
-    * InternalRow RDD materializes every projection and keeps the sort. */
-  private[graft] def consume(df: org.apache.spark.sql.DataFrame): Long =
-    df.queryExecution.toRdd.mapPartitions { it =>
-      var n = 0L
-      while (it.hasNext) { it.next(); n += 1 }
-      Iterator.single(n)
-    }.fold(0L)(_ + _)
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.defaultCpus
+    val spark = Harness.session(cpus)
     // Warm the JVM/codegen paths and EVERY table's parquet footers once,
     // so no query pays a first-touch cost that depends on its position in
     // the registry (round-2 suspicion for the q14/q24 "regressions").
@@ -64,32 +42,32 @@ object Bench {
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     def loadAvg(): Double = osBean.getSystemLoadAverage // -1.0 if unsupported
     val errors = scala.collection.mutable.Map[String, String]()
-    // per pass: query -> (seconds, loadavg-at-start)
-    def pass(): Map[String, (Double, Double)] = benchQueries.map { case (name, fn) =>
-      // operators cache frames they consume twice WITHIN a query;
-      // dropping them after the query keeps one query's storage from
-      // eating the next one's execution memory (q93/q94 regressed
-      // ~4x when the registry grew caching queries that run earlier
-      // in alphabetical order)
-      spark.catalog.clearCache()
-      // localCheckpoint RDDs (the iterative operators' lineage
-      // truncation) are NOT catalog-cached — without this they pile
-      // up across the registry × passes and their blocks squeeze
-      // every later cache-heavy query
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+    // One timed run of one query: (seconds, or -1.0 on failure;
+    // loadavg at start; the failure). Operators cache frames they
+    // consume twice WITHIN a query, so the reset before each run keeps
+    // one query's storage from eating the next one's execution memory
+    // (q93/q94 regressed ~4x when the registry grew caching queries
+    // that run earlier in alphabetical order).
+    def runOne(fn: (SparkSession, String) => DataFrame)
+        : (Double, Double, Option[Throwable]) = {
+      Harness.reset(spark)
       val ld = loadAvg()
       val t0 = System.nanoTime()
-      val ok = try { consume(fn(spark, sfDir)); true } catch {
-        case e: Throwable =>
-          // strip every JSON-illegal char (controls incl. \t\r\n, quote,
-          // backslash) — one survivor makes the whole artifact unparseable
-          errors(name) = (e.getClass.getSimpleName + ": " +
-            Option(e.getMessage).getOrElse("").take(200))
-            .replaceAll("[\\x00-\\x1F\"\\\\]", " ")
-          false
-      }
-      name -> ((if (ok) (System.nanoTime() - t0) / 1e9 else -1.0), ld)
+      try {
+        Harness.drain(fn(spark, sfDir))
+        ((System.nanoTime() - t0) / 1e9, ld, None)
+      } catch { case e: Throwable => (-1.0, ld, Some(e)) }
+    }
+    def describe(e: Throwable): String =
+      e.getClass.getSimpleName + ": " + Option(e.getMessage).getOrElse("").take(200)
+    // per pass: query -> (seconds, loadavg-at-start)
+    def pass(): Map[String, (Double, Double)] = benchQueries.map { case (name, fn) =>
+      val (t, ld, err) = runOne(fn)
+      // strip every JSON-illegal char (controls incl. \t\r\n, quote,
+      // backslash) — one survivor makes the whole artifact unparseable
+      err.foreach(e =>
+        errors(name) = describe(e).replaceAll("[\\x00-\\x1F\"\\\\]", " "))
+      name -> ((t, ld))
     }
     // untimed warm-up pass first: it absorbs JIT/codegen-compile and
     // first-touch costs (round-4 pass-1 ran 2-7x pass-2 on several
@@ -118,24 +96,6 @@ object Bench {
     // passes, and the published min includes the retry. Bounded — one
     // retry per flagged query — and visible: the retry's time and its
     // loadavg ride the artifact in their own map.
-    def runOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      val ld = loadAvg()
-      val t0 = System.nanoTime()
-      val ok = try { consume(fn(spark, sfDir)); true }
-               catch { case e: Throwable =>
-                 // a failed retry must stay diagnosable: the artifact
-                 // only shows [-1.0, load], so the exception goes to
-                 // stderr (the query's PASS results stand regardless)
-                 System.err.println("BENCH VARIANCE-GATE retry failed: " +
-                   e.getClass.getSimpleName + ": " +
-                   Option(e.getMessage).getOrElse("").take(200))
-                 false
-               }
-      ((if (ok) (System.nanoTime() - t0) / 1e9 else -1.0), ld)
-    }
     val retries: Map[String, (Double, Double)] =
       benchQueries.keys.toSeq.sorted.flatMap { k =>
         val ts = allPasses.map(_(k)._1)
@@ -143,7 +103,13 @@ object Bench {
             ts.max - ts.min > 0.5) {
           System.err.println(f"BENCH VARIANCE-GATE: $k pass times " +
             f"[${ts.map(t => f"$t%.2f").mkString(", ")}] differ >2x — re-running once")
-          Some(k -> runOne(benchQueries(k)))
+          val (t, ld, err) = runOne(benchQueries(k))
+          // a failed retry must stay diagnosable: the artifact only
+          // shows [-1.0, load], so the exception goes to stderr (the
+          // query's PASS results stand regardless)
+          err.foreach(e => System.err.println(
+            "BENCH VARIANCE-GATE retry failed: " + describe(e)))
+          Some(k -> ((t, ld)))
         } else None
       }.toMap
     val pMins = benchQueries.keys.map { k =>

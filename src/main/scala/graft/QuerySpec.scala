@@ -24,4 +24,13 @@ object QuerySpec {
   def noOracle(name: String)(
       run: (SparkSession, String) => DataFrame): QuerySpec =
     QuerySpec(name, run, None)
+
+  /** Scratch path for a query's persisted artifact (a shared index, a
+    * roundtrip sink), keyed by the scale directory: two concurrent runs
+    * over different SFs (bench at sf0.1 while verify dumps sf0.01)
+    * would interleave writes and reads on a fixed path and corrupt
+    * both. Shared stores are reused across runs, so the string must
+    * stay stable. */
+  private[graft] def scratchPath(tag: String, sfDir: String): String =
+    s"/tmp/graft_${tag}_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QuerySpec, Tables}
+import graft.QuerySpec.scratchPath
 import graft.operators.Dedup
 import org.apache.spark.sql.functions._
 
@@ -16,12 +17,6 @@ import org.apache.spark.sql.functions._
   * holds their recall to the exact-Jaccard tier.
   */
 object DedupQueries {
-
-  /** Scratch path for the persisted signature index, keyed by the
-    * scale directory — the RelationalQueries roundtrip-sink pattern:
-    * concurrent runs over different SFs must not share a store. */
-  private def scratchPath(tag: String, sfDir: String): String =
-    s"/tmp/graft_${tag}_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
 
   /** The documents-corpus signature index both q139 and q142 probe:
     * signed once into the sfDir-keyed path, reused while current

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QuerySpec, Tables}
+import graft.QuerySpec.scratchPath
 import graft.functions.Exact
 import graft.operators.Relational
 import org.apache.spark.sql.functions._
@@ -9,13 +10,6 @@ import org.apache.spark.sql.functions._
   * Each spec pairs the Spark plan with its DuckDB oracle SQL.
   */
 object RelationalQueries {
-
-  /** Scratch sink path for the roundtrip queries, keyed by the scale
-    * directory: two concurrent runs over different SFs (bench at sf0.1
-    * while verify dumps sf0.01) would interleave writes and reads on a
-    * fixed path and corrupt both. */
-  private def scratchPath(tag: String, sfDir: String): String =
-    s"/tmp/graft_${tag}_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
 
   /** q01: grouped rollup over the fact table — the canonical OHLCV-style
     * aggregation SURVEY §2.4 adds over the reference's ingest-grain

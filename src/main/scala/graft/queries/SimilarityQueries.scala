@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QuerySpec, Tables}
+import graft.QuerySpec.scratchPath
 import graft.functions.Exact
 import graft.operators.Similarity
 import org.apache.spark.sql.Column
@@ -415,12 +416,6 @@ object SimilarityQueries {
         .orderBy(col("vec_id"))
     }
   }
-
-  /** Scratch path for the persisted vector index, keyed by the scale
-    * directory (the DedupQueries sharedDocStore pattern — concurrent
-    * runs over different SFs must not share a store). */
-  private def scratchPath(tag: String, sfDir: String): String =
-    s"/tmp/graft_${tag}_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
 
   /** The embeddings-corpus vector index q147 probes: signed once into
     * the sfDir-keyed path, reused while current (manifest n_vecs

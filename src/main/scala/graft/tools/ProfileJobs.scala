@@ -1,104 +1,47 @@
 package graft.tools
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import graft.Harness
 
 /** Dev profiler (guide §1: measure first): runs named registered
-  * queries once warm, then once instrumented, recording every Spark
-  * job's wall time, stage count, task count and shuffle bytes via a
-  * SparkListener — the local-mode stand-in for the UI's Jobs page
-  * (spark.ui is disabled in the bench harness). Output: per-job lines
-  * sorted by duration, so a multi-job operator (store lifecycle,
-  * iterative graph, streaming gate) shows WHERE its seconds live.
+  * queries once warm, then once under [[Harness.recordJobs]], printing
+  * every Spark job's wall time, stage count, task count and bytes — the
+  * local-mode stand-in for the UI's Jobs page (the UI is off in the
+  * harness session). Output: per-job lines in job order, so a multi-job
+  * operator (store lifecycle, iterative graph, streaming gate) shows
+  * WHERE its seconds live. The session, drain and reset are the
+  * bench's own.
   *
   * Usage: sbt "runMain graft.tools.ProfileJobs q251_streaming_neardup_gate"
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS.
   */
 object ProfileJobs {
-  private class Rec extends SparkListener {
-    case class Job(id: Int, desc: String, start: Long,
-                   var end: Long = 0L, var nTasks: Int = 0,
-                   var shuffleRead: Long = 0L, var shuffleWrite: Long = 0L,
-                   var input: Long = 0L, var nStages: Int = 0,
-                   var names: List[String] = Nil)
-    val jobs = scala.collection.mutable.LinkedHashMap[Int, Job]()
-    val stageToJob = scala.collection.mutable.Map[Int, Int]()
-    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      val desc = Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.description")))
-        .getOrElse("")
-      jobs(e.jobId) = Job(e.jobId, desc.take(90), e.time)
-      e.stageIds.foreach(sid => stageToJob(sid) = e.jobId)
-    }
-    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-      jobs.get(e.jobId).foreach(_.end = e.time)
-    }
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      synchronized {
-        val si = e.stageInfo
-        stageToJob.get(si.stageId).flatMap(jobs.get).foreach { j =>
-          j.nStages += 1
-          j.nTasks += si.numTasks
-          j.shuffleRead += si.taskMetrics.shuffleReadMetrics.totalBytesRead
-          j.shuffleWrite += si.taskMetrics.shuffleWriteMetrics.bytesWritten
-          j.input += si.taskMetrics.inputMetrics.bytesRead
-          j.names = (si.name.take(70) :: j.names).distinct
-        }
-      }
-  }
-
-  private def consume(df: org.apache.spark.sql.DataFrame): Long =
-    df.queryExecution.toRdd.mapPartitions { it =>
-      var n = 0L
-      while (it.hasNext) { it.next(); n += 1 }
-      Iterator.single(n)
-    }.fold(0L)(_ + _)
-
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(s"$dir/lineitem.parquet").count() // warm
     for (name <- args) {
       val fn = graft.SparkEntry.queries(name)
       // warm pass (JIT + codegen), uninstrumented
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      val tw0 = System.nanoTime(); consume(fn(spark, dir))
+      Harness.reset(spark)
+      val tw0 = System.nanoTime(); Harness.drain(fn(spark, dir))
       val warm = (System.nanoTime() - tw0) / 1e9
       // instrumented pass
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      val rec = new Rec
-      spark.sparkContext.addSparkListener(rec)
-      val t0 = System.nanoTime(); consume(fn(spark, dir))
-      val tot = (System.nanoTime() - t0) / 1e9
-      // the listener bus is async: give it a bounded drain before
-      // detaching, or trailing onJobEnd/onStageCompleted events are
-      // dropped and the last jobs report 0 s (ADVICE r14; the bus'
-      // waitUntilEmpty is private[spark], so poll the last job's end)
-      val drainDeadline = System.nanoTime() + 2000000000L
-      while (rec.synchronized(rec.jobs.values.exists(_.end == 0L)) &&
-             System.nanoTime() < drainDeadline)
-        Thread.sleep(20)
-      spark.sparkContext.removeSparkListener(rec)
+      Harness.reset(spark)
+      var tot = 0.0
+      val jobs = Harness.recordJobs(spark) {
+        val t0 = System.nanoTime(); Harness.drain(fn(spark, dir))
+        tot = (System.nanoTime() - t0) / 1e9
+      }
       println(f"===== $name warm=$warm%.2f s instrumented=$tot%.2f s " +
-        f"jobs=${rec.jobs.size} =====")
-      val jobSum = rec.jobs.values.map(j => (j.end - j.start).max(0L)).sum / 1e3
+        f"jobs=${jobs.size} =====")
+      val jobSum = jobs.map(j => j.endMs - j.startMs).sum / 1e3
       println(f"  sum-of-job-wall=$jobSum%.2f s (gaps = driver-side time)")
-      rec.jobs.values.toSeq.sortBy(_.id).foreach { j =>
-        println(f"  ${(j.end - j.start) / 1e3}%7.3f s job=${j.id}%4d " +
-          f"stages=${j.nStages}%2d tasks=${j.nTasks}%4d " +
-          f"in=${j.input / 1024}%8d KB sr=${j.shuffleRead / 1024}%7d KB " +
-          f"sw=${j.shuffleWrite / 1024}%7d KB  ${j.desc} " +
-          j.names.mkString(" | "))
+      jobs.foreach { j =>
+        println(f"  ${(j.endMs - j.startMs) / 1e3}%7.3f s job=${j.id}%4d " +
+          f"stages=${j.stages}%2d tasks=${j.tasks}%4d " +
+          f"in=${j.inputBytes / 1024}%8d KB sr=${j.shuffleReadBytes / 1024}%7d KB " +
+          f"sw=${j.shuffleWriteBytes / 1024}%7d KB  ${j.description.replace('\n', ' ').take(90)} " +
+          j.stageNames.map(_.take(70)).distinct.mkString(" | "))
       }
     }
     spark.stop()

@@ -104,7 +104,7 @@ class DedupSpec extends SparkSpecBase {
 
   test("persisted index lifecycle: write, probe, append admitted, re-probe") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_store_").toString
+    val dir = tempRoot("graft_store_").toString
     val store = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
       .filter(col("doc_id") < 60)
     Dedup.writeMinhashStore(store, "doc_id", "text", dir)
@@ -118,7 +118,7 @@ class DedupSpec extends SparkSpecBase {
       .select(lit(7000L).as("doc_id"),
         expr("substring(text, instr(text, ' ') + 1)").as("text"))
       .unionByName(Seq((7001L, novelText)).toDF("doc_id", "text"))
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    Harness.reset(spark)
     val flagged1 = Dedup.minhashNearDupAgainstStore(batch1, "text", idx, 0.5)
       .collect().map(_.getLong(0)).toSet
     assert(flagged1 == Set(7000L), s"batch-1 gate wrong: $flagged1")
@@ -152,7 +152,7 @@ class DedupSpec extends SparkSpecBase {
       (2L, novel.split(" ").drop(1).mkString(" ")),
       (3L, "orchid basalt nimbus ferret cobalt prairie sonnet glint")
     ).toDF("doc_id", "text")
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    Harness.reset(spark)
     val flags = Dedup.minhashIntraBatchFlags(batch, "doc_id", "text",
         k = 3, numHashes = 64, bands = 16, threshold = 0.5)
       .as[Long].collect().toSet
@@ -169,8 +169,7 @@ class DedupSpec extends SparkSpecBase {
       "stamp (no generation-scan job)") {
     import spark.implicits._
     import graft.operators.Stores
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_chk_").toString
+    val dir = tempRoot("graft_chk_").toString
     val base = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text")).filter(col("doc_id") < 40)
     Dedup.writeMinhashStore(base, "doc_id", "text", dir)
@@ -250,7 +249,7 @@ class DedupSpec extends SparkSpecBase {
       "store stays current against base ∪ admitted, not against the " +
       "base corpus") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cur_").toString
+    val dir = tempRoot("graft_cur_").toString
     val base = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
       .filter(col("doc_id") < 40)
     Dedup.writeMinhashStore(base, "doc_id", "text", dir)
@@ -269,7 +268,7 @@ class DedupSpec extends SparkSpecBase {
       "the -batches datasets and gatelog so no stale rows union into " +
       "the fresh base") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_resign_")
+    val dir = tempRoot("graft_resign_")
     val store = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
       .filter(col("doc_id") < 40)
     Dedup.writeMinhashStore(store, "doc_id", "text", dir.toString)
@@ -295,7 +294,7 @@ class DedupSpec extends SparkSpecBase {
       "gatelog commit is invisible, and the retried append overwrites " +
       "it — no partial rows, no duplicates") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_store_").toString
+    val dir = tempRoot("graft_store_").toString
     val store = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
       .filter(col("doc_id") < 40)
     Dedup.writeMinhashStore(store, "doc_id", "text", dir)
@@ -324,7 +323,7 @@ class DedupSpec extends SparkSpecBase {
   }
 
   test("index manifest with drifted hash constants is refused") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_store_").toString
+    val dir = tempRoot("graft_store_").toString
     val store = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
       .filter(col("doc_id") < 10)
     Dedup.writeMinhashStore(store, "doc_id", "text", dir)
@@ -604,8 +603,7 @@ class DedupSpec extends SparkSpecBase {
 
   test("paragraphDedup is invariant under repartitioning and drops " +
     "its segment cache before returning") {
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+    Harness.reset(spark)
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
     val a = Dedup.paragraphDedup(docs, "doc_id", "text", 8)
@@ -647,8 +645,7 @@ class DedupSpec extends SparkSpecBase {
     "(no sort-merge against the index)") {
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_nv_store_").toString
+    val dir = tempRoot("graft_nv_store_").toString
     Dedup.gramDfIndex(docs.filter(col("doc_id") % 5 =!= 0),
         "doc_id", "text", 3)
       .write.mode("overwrite").parquet(dir)

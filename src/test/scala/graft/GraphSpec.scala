@@ -65,7 +65,7 @@ class GraphSpec extends SparkSpecBase {
 
   test("superseded checkpoints are freed; only the result's blocks remain") {
     // drain any leftovers from other tests so the count below is ours
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    Harness.reset(spark)
     // 7 iterations → checkpoints at 2, 4, 6, 7; everything but the
     // final (returned) one must have its blocks dropped, and the
     // edge/node caches must be gone too
@@ -197,7 +197,7 @@ class GraphSpec extends SparkSpecBase {
 
   test("edge store lifecycle: round-trip, staleness on source growth, " +
       "and a crash mid-build reads as absent") {
-    val root = java.nio.file.Files.createTempDirectory("graft_estore")
+    val root = tempRoot("graft_estore")
     val path = root.resolve("bb").toString
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("a", "b")
     // a crash between the edges write and the manifest write must read

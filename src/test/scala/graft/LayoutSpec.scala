@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 class LayoutSpec extends SparkSpecBase {
 
   test("writeClustered gives every file a disjoint key range") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_layout").toString
+    val dir = tempRoot("graft_layout").toString
     Layout.writeClustered(
       Tables.orders(spark, sf), dir, Seq("o_orderdate"), numFiles = 4)
     val ranges = spark.read.parquet(dir)
@@ -33,8 +33,8 @@ class LayoutSpec extends SparkSpecBase {
   test("z-order bounds every file in BOTH dimensions — the linear layout can't") {
     val o = Tables.orders(spark, sf)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    val zDir = java.nio.file.Files.createTempDirectory("graft_z").toString
-    val linDir = java.nio.file.Files.createTempDirectory("graft_lin").toString
+    val zDir = tempRoot("graft_z").toString
+    val linDir = tempRoot("graft_lin").toString
     Layout.writeZOrdered(o, zDir, Seq("o_custkey", "o_totalprice"), 8)
     Layout.writeClustered(o, linDir, Seq("o_custkey"), 8)
     def boxes(dir: String): Array[(Double, Double)] =

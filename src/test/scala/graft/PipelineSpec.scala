@@ -10,7 +10,7 @@ import java.nio.file.Files
   * the streaming AvailableNow form surviving a replay. */
 class PipelineSpec extends SparkSpecBase {
 
-  private def tmp(): String = Files.createTempDirectory("graft_pipe").toString
+  private def tmp(): String = tempRoot("graft_pipe").toString
 
   test("daily fact load: overlapping re-runs never duplicate") {
     val wh = tmp()
@@ -55,7 +55,7 @@ class PipelineSpec extends SparkSpecBase {
 
   test("streaming AvailableNow load is exactly-once across replays") {
     val wh = tmp(); val ckpt1 = tmp(); val ckpt2 = tmp()
-    val srcDir = Files.createTempDirectory("graft_pipe_src")
+    val srcDir = tempRoot("graft_pipe_src")
     Tables.events(spark, sf).limit(200)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
       .coalesce(1).write.parquet(srcDir.resolve("f1").toString)

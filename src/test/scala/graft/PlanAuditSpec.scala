@@ -422,8 +422,7 @@ class PlanAuditSpec extends SparkSpecBase {
     import org.apache.spark.sql.functions._
     // the store must come from PARQUET (the persisted posture): a
     // size-estimated in-plan store could flip the broadcast decision
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_audit_store_").toString
+    val dir = tempRoot("graft_audit_store_").toString
     val store = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text")).filter(col("doc_id") < 60)
     graft.operators.Dedup.writeMinhashStore(store, "doc_id", "text", dir)
@@ -472,8 +471,7 @@ class PlanAuditSpec extends SparkSpecBase {
     import org.apache.spark.sql.functions._
     // parquet-backed store, the incremental-probe discipline: a
     // size-estimated in-plan store could flip the broadcast decision
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_audit_ivf_").toString
+    val dir = tempRoot("graft_audit_ivf_").toString
     val store = Tables.embeddings(spark, sf)
       .filter(col("vec_id") < 100).select(col("vec_id"), col("embedding"))
     graft.operators.Similarity.writeIvfStore(
@@ -534,8 +532,7 @@ class PlanAuditSpec extends SparkSpecBase {
     // the semantic twin: assigned-once frame, cell-scoped intra pairs
     // (centroids via a scratch store read — the public surface)
     val e = Tables.embeddings(spark, sf)
-    val vdir = java.nio.file.Files
-      .createTempDirectory("graft_audit_gate_").toString
+    val vdir = tempRoot("graft_audit_gate_").toString
     graft.operators.Similarity.writeIvfStore(
       e.filter(col("vec_id") < 100).select(col("vec_id"), col("embedding")),
       "vec_id", "embedding", vdir, numCells = 8, kmeansIters = 1)

@@ -412,7 +412,7 @@ class RandomizedLosslessnessSpec extends SparkSpecBase {
           if (r.nextInt(6) == 0) None else Some(r.nextInt(9).toLong)
         }.toDF("v")
       }
-      val dir = java.nio.file.Files.createTempDirectory("graft_fold_eq")
+      val dir = tempRoot("graft_fold_eq")
       val cm = dir.resolve("cm").toString
       val hist = dir.resolve("hist").toString
       batches.zipWithIndex.foreach { case (b, i) =>

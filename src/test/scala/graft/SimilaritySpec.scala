@@ -150,7 +150,7 @@ class SimilaritySpec extends SparkSpecBase {
   }
 
   test("IVF store lifecycle: write, probe, append admitted, re-probe flags them") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_store_spec")
+    val dir = tempRoot("ivf_store_spec")
       .toString
     val e = Tables.embeddings(spark, sf)
     val store = e.filter(col("vec_id") < 100)
@@ -186,8 +186,7 @@ class SimilaritySpec extends SparkSpecBase {
       "stale, and the grown-store probe answers from the gatelog " +
       "pointer stamp") {
     import graft.operators.Stores
-    val dir = java.nio.file.Files
-      .createTempDirectory("ivf_chk_").toString
+    val dir = tempRoot("ivf_chk_").toString
     val e = Tables.embeddings(spark, sf)
     val store = e.filter(col("vec_id") < 100)
       .select(col("vec_id"), col("embedding"))
@@ -213,7 +212,7 @@ class SimilaritySpec extends SparkSpecBase {
 
   test("semanticIntraBatchFlags keeps the min id of a within-batch " +
       "copy pair under the index's frozen centroids") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_intra_spec")
+    val dir = tempRoot("ivf_intra_spec")
       .toString
     val e = Tables.embeddings(spark, sf)
     val store = e.filter(col("vec_id") < 100)
@@ -228,7 +227,7 @@ class SimilaritySpec extends SparkSpecBase {
         .select((col("vec_id") + 6000).as("vec_id"), col("embedding")))
       .unionByName(e.filter(col("vec_id") === 201)
         .select((col("vec_id") + 7000).as("vec_id"), col("embedding")))
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    Harness.reset(spark)
     val flags = Similarity.semanticIntraBatchFlags(batch, "embedding",
         idx.centroids, "vec_id", 0.999)
       .collect().map(_.getLong(0)).toSet
@@ -653,8 +652,7 @@ class SimilaritySpec extends SparkSpecBase {
     // the two paths drifting
     val e = Tables.embeddings(spark, sf).limit(200)
     val q = e.filter(col("vec_id") < 80)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ssweep_store").toString
+    val dir = tempRoot("graft_ssweep_store").toString
     Similarity.writeIvfStore(e, "vec_id", "embedding", dir,
       numCells = 4, kmeansIters = 1)
     val fromStore = Similarity.ivfRecallSweepSampled(
@@ -675,8 +673,7 @@ class SimilaritySpec extends SparkSpecBase {
       "sweep on an unappended index, and tracks appended rows") {
     val e = Tables.embeddings(spark, sf).limit(100)
     val q = e.filter(col("vec_id") < 8)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sweep_store").toString
+    val dir = tempRoot("graft_sweep_store").toString
     Similarity.writeIvfStore(e, "vec_id", "embedding", dir,
       numCells = 4, kmeansIters = 1)
     val store = Similarity.readIvfStore(spark, dir)
@@ -709,8 +706,7 @@ class SimilaritySpec extends SparkSpecBase {
     // overload's centroid collect must cast before reading longs
     val intIds = Seq((0, Seq(1.0, 0.0)), (1, Seq(0.0, 1.0)),
       (2, Seq(0.9, 0.1)), (3, Seq(0.1, 0.9))).toDF("id", "v")
-    val idir = java.nio.file.Files
-      .createTempDirectory("graft_sweep_int").toString
+    val idir = tempRoot("graft_sweep_int").toString
     Similarity.writeIvfStore(intIds, "id", "v", idir,
       numCells = 2, kmeansIters = 0)
     val ints = Similarity.ivfRecallSweep(

@@ -12,7 +12,7 @@ class SinksSpec extends SparkSpecBase {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_sink").toString
+    tempRoot("graft_sink").toString
 
   private def macroDaily(rows: (Int, Int, Int, Double, Double)*): DataFrame =
     rows.toSeq.toDF("year", "month", "day", "oil_price", "gold_price")

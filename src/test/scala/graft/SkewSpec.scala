@@ -54,7 +54,7 @@ class SkewSpec extends SparkSpecBase {
       val joined = left.join(right, Seq("k"))
       // run THIS QueryExecution (count() would plan its own) so the
       // adaptive plan finalizes before we inspect it
-      joined.queryExecution.toRdd.count()
+      Harness.drain(joined)
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"AQE did not mark the hot partition as skewed:\n$plan")

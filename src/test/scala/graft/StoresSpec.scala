@@ -64,7 +64,7 @@ class StoresSpec extends SparkSpecBase {
       "one generation; a gatelog holds the pointer pair alone") {
     import spark.implicits._
     import graft.operators.{CountMin, Dedup}
-    val root = java.nio.file.Files.createTempDirectory("graft_layout")
+    val root = tempRoot("graft_layout")
     val cm = root.resolve("cm").toString
     CountMin.foldIntoStore((1L to 40L).toDF("v"), "v", cm, 4, 32,
       batchId = Some(0L))
@@ -89,7 +89,7 @@ class StoresSpec extends SparkSpecBase {
   }
 
   test("a root of bare Parquet files with no pointer reads as absent") {
-    val root = java.nio.file.Files.createTempDirectory("graft_bare")
+    val root = tempRoot("graft_bare")
       .resolve("hist").toString
     spark.range(3).toDF("bucket").write.parquet(root)
     assert(!Stores.payloadExists(spark, root))
@@ -100,7 +100,7 @@ class StoresSpec extends SparkSpecBase {
       "is refused") {
     import spark.implicits._
     import graft.streaming.IncrementalLoad
-    val root = java.nio.file.Files.createTempDirectory("graft_nomarker")
+    val root = tempRoot("graft_nomarker")
     (1L to 20L).toDF("v").coalesce(1)
       .write.parquet(root.resolve("in/b1").toString)
     def stream = spark.readStream.schema("v BIGINT")

@@ -11,7 +11,7 @@ class StreamingSpec extends SparkSpecBase {
   /** The file stream source needs a directory; stage the single
     * events.parquet into one. */
   private lazy val eventsDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream")
+    val dir = tempRoot("graft_stream", perSuite = true)
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -117,7 +117,7 @@ class StreamingSpec extends SparkSpecBase {
     // batch 1: the full events file advances the watermark to
     // max(ts) − 1h; batch 2: one event a year in the past — it must
     // NOT resurrect or contradict an already-emitted session
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess_late")
+    val dir = tempRoot("graft_sess_late")
     Tables.events(spark, sf)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"))
@@ -160,7 +160,7 @@ class StreamingSpec extends SparkSpecBase {
     // two micro-batches via maxFilesPerTrigger=1: batch 1 advances the
     // watermark to ~max(ts) - 10min; batch 2 is one event far in the
     // past → its window is below the watermark and must be dropped.
-    val dir = java.nio.file.Files.createTempDirectory("graft_late")
+    val dir = tempRoot("graft_late")
     val base = Tables.events(spark, sf)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"))
@@ -269,7 +269,7 @@ class StreamingSpec extends SparkSpecBase {
       "of an earlier ADMITTED doc (the index grows mid-stream)") {
     import spark.implicits._
     import graft.operators.Dedup
-    val root = java.nio.file.Files.createTempDirectory("graft_sgate")
+    val root = tempRoot("graft_sgate")
     val storePath = root.resolve("store").toString
     val admittedPath = root.resolve("admitted").toString
     val corpus = Tables.documents(spark, sf)
@@ -315,7 +315,7 @@ class StreamingSpec extends SparkSpecBase {
       "micro-batch admit only the min key (intra-batch self-probe)") {
     import spark.implicits._
     import graft.operators.Dedup
-    val root = java.nio.file.Files.createTempDirectory("graft_intragate")
+    val root = tempRoot("graft_intragate")
     val storePath = root.resolve("store").toString
     val admittedPath = root.resolve("admitted").toString
     val corpus = Tables.documents(spark, sf)
@@ -351,7 +351,7 @@ class StreamingSpec extends SparkSpecBase {
   test("streaming semantic gate: two copies arriving in ONE " +
       "micro-batch admit only the min id (intra-batch self-probe)") {
     import graft.operators.Similarity
-    val root = java.nio.file.Files.createTempDirectory("graft_intravgate")
+    val root = tempRoot("graft_intravgate")
     val storePath = root.resolve("store").toString
     val admittedPath = root.resolve("admitted").toString
     val e = Tables.embeddings(spark, sf)
@@ -385,7 +385,7 @@ class StreamingSpec extends SparkSpecBase {
   test("streaming semantic gate: a later micro-batch rejects a copy of an " +
       "earlier ADMITTED vector (the vector index grows mid-stream)") {
     import graft.operators.Similarity
-    val root = java.nio.file.Files.createTempDirectory("graft_vgate")
+    val root = tempRoot("graft_vgate")
     val storePath = root.resolve("store").toString
     val admittedPath = root.resolve("admitted").toString
     val e = Tables.embeddings(spark, sf)
@@ -437,7 +437,7 @@ class StreamingSpec extends SparkSpecBase {
     // EVERY file aged past the sweep horizon (a genuinely dead run
     // stopped writing, so its whole tree is old — the sweep requires
     // this, because a single fresh file marks the root as live)
-    val stale = java.nio.file.Files.createTempDirectory(tag)
+    val stale = tempRoot(tag)
     java.nio.file.Files.createDirectories(stale.resolve("in/a"))
     java.nio.file.Files.createDirectories(stale.resolve("store"))
     java.nio.file.Files.write(stale.resolve("in/a/part-0.parquet"),
@@ -448,7 +448,7 @@ class StreamingSpec extends SparkSpecBase {
     // a long-lived run with ONE recent write inside an otherwise aged
     // tree must be judged live (the paused-JVM / slow-drain case the
     // root-mtime heuristic got wrong)
-    val paused = java.nio.file.Files.createTempDirectory(tag)
+    val paused = tempRoot(tag)
     java.nio.file.Files.createDirectories(paused.resolve("ckpt"))
     java.nio.file.Files.write(paused.resolve("ckpt/offsets.0"),
       Array[Byte](1))
@@ -456,7 +456,7 @@ class StreamingSpec extends SparkSpecBase {
     java.nio.file.Files.setLastModifiedTime(paused.resolve("ckpt"), aged)
     // ckpt/offsets.0 keeps its fresh mtime — the live signal
     // a concurrent LIVE run's root: same tag, recent mtime
-    val live = java.nio.file.Files.createTempDirectory(tag)
+    val live = tempRoot(tag)
     val df = Seq((1L, "a b c d"), (2L, "e f g h")).toDF("doc_id", "text")
     val (_, root) = IncrementalLoad.stageTwoFileStream(
       df, col("doc_id") < 2L, tag)
@@ -467,12 +467,9 @@ class StreamingSpec extends SparkSpecBase {
     assert(java.nio.file.Files.exists(live),
       "a live (recent) sibling root was swept")
     assert(java.nio.file.Files.exists(root.resolve("in")))
-    // leave exactly nothing behind ourselves
+    // the wire's own root is not a tempRoot: leave nothing behind
     IncrementalLoad.cleanStaging(root, Seq("in"))
-    IncrementalLoad.cleanStaging(paused, Seq("ckpt"))
     java.nio.file.Files.deleteIfExists(root)
-    java.nio.file.Files.deleteIfExists(paused)
-    java.nio.file.Files.deleteIfExists(live)
   }
 
   test("stageTwoFileStream routes NULL-split rows to the second half: " +
@@ -508,39 +505,22 @@ class StreamingSpec extends SparkSpecBase {
       "accounting and the caller thread's job properties") {
     import spark.implicits._
     import graft.streaming.IncrementalLoad
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val key = "graft.streamingSpec"
-    val tag = java.util.UUID.randomUUID().toString
-    // the description of every tagged job; the listener bus is
-    // asynchronous, so a separately tagged fence job is awaited last
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val fenced = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = Option(e.properties)
-        p.map(_.getProperty(key)).orNull match {
-          case `tag` => descs.add(p.map(_.getProperty(
-            "spark.job.description")).getOrElse(""))
-          case "fence" => fenced.countDown()
-          case _ =>
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, tag)
-      // Count-Min wire over two staged halves (7 + 5 rows)
-      val vs = (1L to 12L).map(i => (i, i % 5)).toDF("id", "v")
+    // Count-Min wire over two staged halves (7 + 5 rows)
+    val vs = (1L to 12L).map(i => (i, i % 5)).toDF("id", "v")
+    var q: org.apache.spark.sql.streaming.StreamingQuery = null
+    // only jobs tagged from this thread are recorded, so the micro-batch
+    // jobs must inherit the caller's properties to show up
+    val jobs = Harness.recordJobs(spark) {
       val (stream, root) = IncrementalLoad.stageTwoFileStream(vs,
         col("id") <= 7L, "graft_rebound_cm")
-      val q = IncrementalLoad.streamingCountMinFold(spark, stream, "v",
+      q = IncrementalLoad.streamingCountMinFold(spark, stream, "v",
         root.resolve("store").toString, root.resolve("ckpt").toString,
         depth = 2, width = 8)
       IncrementalLoad.awaitDrained(q, root, Seq("in", "ckpt", "store"),
         120000L)
+      java.nio.file.Files.deleteIfExists(root)
       // a gate wire, whose micro-batch thread sets its own job labels
-      val groot = java.nio.file.Files.createTempDirectory("graft_rebound_gate")
+      val groot = tempRoot("graft_rebound_gate")
       val storePath = groot.resolve("store").toString
       graft.operators.Dedup.writeMinhashStore(
         Seq((1L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text"),
@@ -555,22 +535,14 @@ class StreamingSpec extends SparkSpecBase {
       IncrementalLoad.awaitDrained(gate, groot,
         Seq("store", "admitted", "ckpt"), 120000L)
       IncrementalLoad.cleanStaging(gin, Seq("in"))
-      Seq(root, gin, groot).foreach(java.nio.file.Files.deleteIfExists)
-      sc.setLocalProperty(key, "fence")
-      sc.parallelize(Seq(1), 1).count()
-      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      // perfbench's streaming.input_rows reads these figures
-      assert(q.recentProgress.map(_.numInputRows).sum == 12L,
-        q.recentProgress.map(_.numInputRows).mkString(", "))
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
+      java.nio.file.Files.deleteIfExists(gin)
     }
-    // the micro-batch jobs inherit the caller's tag (only tagged jobs
-    // are recorded), and the labels the gate sets on the micro-batch
-    // thread still reach them
-    import scala.jdk.CollectionConverters._
-    val labels = descs.asScala.toSeq
+    // perfbench's streaming.input_rows reads these figures
+    assert(q.recentProgress.map(_.numInputRows).sum == 12L,
+      q.recentProgress.map(_.numInputRows).mkString(", "))
+    // the labels the gate sets on the micro-batch thread still reach
+    // the tagged jobs
+    val labels = jobs.map(_.description)
     assert(labels.exists(_.startsWith("neardup gate gen=")),
       s"no tagged gate admit job: $labels")
   }
@@ -579,7 +551,7 @@ class StreamingSpec extends SparkSpecBase {
       "removes its staging") {
     import graft.streaming.IncrementalLoad
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val root = java.nio.file.Files.createTempDirectory("graft_undrained")
+    val root = tempRoot("graft_undrained")
     java.nio.file.Files.createDirectories(root.resolve("in"))
     java.nio.file.Files.write(root.resolve("in/part-0"), Array[Byte](1))
     val input = MemoryStream[Long](
@@ -600,14 +572,13 @@ class StreamingSpec extends SparkSpecBase {
     assert(!java.nio.file.Files.exists(root.resolve("in")) &&
       !java.nio.file.Files.exists(root.resolve("ckpt")),
       "the staging of an undrained stream survived")
-    java.nio.file.Files.deleteIfExists(root)
   }
 
   test("streaming Count-Min fold: the drained store equals the batch grid " +
       "over the concatenated stream") {
     import spark.implicits._
     import graft.operators.CountMin
-    val root = java.nio.file.Files.createTempDirectory("graft_scms")
+    val root = tempRoot("graft_scms")
     // the leak check below diffs against this snapshot: the session is
     // shared across suites, so blocks cached by earlier (or, under
     // parallel execution, concurrent) suites are not this test's leak
@@ -647,7 +618,7 @@ class StreamingSpec extends SparkSpecBase {
       "folding instead of skipping its first batches as phantom replays") {
     import spark.implicits._
     import graft.operators.CountMin
-    val root = java.nio.file.Files.createTempDirectory("graft_cms2")
+    val root = tempRoot("graft_cms2")
     val storePath = root.resolve("store").toString
     val b1 = (1L to 400L).map(_ % 37).toDF("v")
     val b2 = (1L to 300L).map(i => (i * 7) % 41).toDF("v")
@@ -681,7 +652,7 @@ class StreamingSpec extends SparkSpecBase {
       "foreachBatch id is a no-op, later ids still fold") {
     import spark.implicits._
     import graft.operators.{Audit, CountMin, QuantileSketch}
-    val root = java.nio.file.Files.createTempDirectory("graft_replay")
+    val root = tempRoot("graft_replay")
     val b1 = (1L to 100L).map(_ % 11).toDF("v")
     val b2 = (1L to 80L).map(i => (i * 3) % 13).toDF("v")
     // Count-Min: fold 0, fold 1, replay 1 (must not double-count),
@@ -738,7 +709,7 @@ class StreamingSpec extends SparkSpecBase {
     import spark.implicits._
     import graft.operators.QuantileSketch
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val root = java.nio.file.Files.createTempDirectory("graft_sqs")
+    val root = tempRoot("graft_sqs")
     val b1 = (1L to 300L).map(i => (i, (i * 31 % 997).toDouble))
       .toDF("key", "v")
     val b2 = (301L to 700L).map(i => (i, (i * 31 % 997).toDouble))
@@ -780,7 +751,7 @@ class StreamingSpec extends SparkSpecBase {
       "one and its PSI against the reference matches the batch PSI") {
     import graft.operators.Audit
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val root = java.nio.file.Files.createTempDirectory("graft_sdrift")
+    val root = tempRoot("graft_sdrift")
     def buckets(df: org.apache.spark.sql.DataFrame) =
       df.select(least(lit(4L),
         floor(length(col("text")).cast("double") / lit(150.0))
@@ -829,7 +800,7 @@ class StreamingSpec extends SparkSpecBase {
   test("streaming token-histogram fold scores JS against a reference " +
       "from the kilobyte store, equal to the all-batch value") {
     import graft.operators.Audit
-    val root = java.nio.file.Files.createTempDirectory("graft_sjs")
+    val root = tempRoot("graft_sjs")
     // token stream as hashed buckets (the q232 discipline: the store's
     // bucket column is long)
     def tokens(df: org.apache.spark.sql.DataFrame) =
@@ -907,7 +878,7 @@ class StreamingSpec extends SparkSpecBase {
       ("k", t(1, 2), 20.0),
       ("k", t(2, 3), 7.0), ("k", t(2, 9), 3.0),
       ("k", t(3, 4), 30.0))
-    val root = java.nio.file.Files.createTempDirectory("graft_holt")
+    val root = tempRoot("graft_holt")
     val (b1, b2) = rows.splitAt(3)
     b1.toDF("event_type", "ts", "value").coalesce(1)
       .write.parquet(root.resolve("in/b1").toString)
@@ -939,7 +910,7 @@ class StreamingSpec extends SparkSpecBase {
       "uncommitted creation and the batch re-folds cleanly") {
     import spark.implicits._
     import graft.operators.{CountMin, QuantileSketch}
-    val root = java.nio.file.Files.createTempDirectory("graft_crash")
+    val root = tempRoot("graft_crash")
     val b1 = (1L to 100L).map(_ % 11).toDF("v")
     // simulate a creation fold that crashed BETWEEN the params write
     // and the cells write (the commit point): params present, no cells
@@ -972,7 +943,7 @@ class StreamingSpec extends SparkSpecBase {
       "not with a Parquet read error") {
     import spark.implicits._
     import graft.operators.{CountMin, QuantileSketch}
-    val root = java.nio.file.Files.createTempDirectory("graft_foldkind")
+    val root = tempRoot("graft_foldkind")
     val cm = root.resolve("cm").toString
     CountMin.foldIntoStore((1L to 50L).toDF("v"), "v", cm, 4, 32)
     val qs = root.resolve("qs").toString
@@ -994,7 +965,7 @@ class StreamingSpec extends SparkSpecBase {
       "leaves the committed history intact and the batch re-folds") {
     import spark.implicits._
     import graft.operators.{Audit, CountMin, Stores}
-    val root = java.nio.file.Files.createTempDirectory("graft_midcrash")
+    val root = tempRoot("graft_midcrash")
     val b1 = (1L to 100L).map(_ % 11).toDF("v")
     val b2 = (1L to 80L).map(i => (i * 3) % 13).toDF("v")
     val cm = root.resolve("cm").toString
@@ -1046,7 +1017,7 @@ class StreamingSpec extends SparkSpecBase {
   test("an uncommitted gate generation is invisible to non-gate store " +
       "readers until its batch commits") {
     import graft.operators.{Dedup, Stores}
-    val root = java.nio.file.Files.createTempDirectory("graft_uncommitted")
+    val root = tempRoot("graft_uncommitted")
     val storePath = root.resolve("store").toString
     val corpus = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text")).filter(col("doc_id") < 40)
@@ -1081,7 +1052,7 @@ class StreamingSpec extends SparkSpecBase {
       "micro-batch is silently skipped as a phantom replay") {
     import spark.implicits._
     import graft.operators.Dedup
-    val root = java.nio.file.Files.createTempDirectory("graft_offsetgate")
+    val root = tempRoot("graft_offsetgate")
     val storePath = root.resolve("store").toString
     val corpus = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text")).filter(col("doc_id") < 40)
@@ -1129,7 +1100,7 @@ class StreamingSpec extends SparkSpecBase {
       "batches") {
     import spark.implicits._
     import graft.operators.Dedup
-    val root = java.nio.file.Files.createTempDirectory("graft_owncheck")
+    val root = tempRoot("graft_owncheck")
     val storePath = root.resolve("store").toString
     val ckpt = root.resolve("ckpt").toString
     val corpus = Tables.documents(spark, sf)
@@ -1177,7 +1148,7 @@ class StreamingSpec extends SparkSpecBase {
       "generations excluded, manifest-last crash window") {
     import spark.implicits._
     import graft.operators.Dedup
-    val root = java.nio.file.Files.createTempDirectory("graft_compact")
+    val root = tempRoot("graft_compact")
     val storePath = root.resolve("store").toString
     val newPath = root.resolve("compacted").toString
     val corpus = Tables.documents(spark, sf)
@@ -1272,7 +1243,7 @@ class StreamingSpec extends SparkSpecBase {
       "pre-compaction admissions") {
     import spark.implicits._
     import graft.operators.Dedup
-    val root = java.nio.file.Files.createTempDirectory("graft_handoff")
+    val root = tempRoot("graft_handoff")
     val store1 = root.resolve("store1").toString
     val store2 = root.resolve("store2").toString
     val corpus = Tables.documents(spark, sf)
@@ -1345,7 +1316,7 @@ class StreamingSpec extends SparkSpecBase {
     import spark.implicits._
     import graft.operators.Dedup
     val St = graft.operators.Stores
-    val root = java.nio.file.Files.createTempDirectory("graft_oploop")
+    val root = tempRoot("graft_oploop")
     val store1 = root.resolve("store1").toString
     val store2 = root.resolve("store2").toString
     val corpus = Tables.documents(spark, sf)
@@ -1420,7 +1391,7 @@ class StreamingSpec extends SparkSpecBase {
       "fails loudly") {
     import spark.implicits._
     import graft.operators.{Dedup, Stores}
-    val root = java.nio.file.Files.createTempDirectory("graft_gateslot")
+    val root = tempRoot("graft_gateslot")
     val corpus = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text")).filter(col("doc_id") < 40)
     val novel = "zebra quark lantern voyage ember crystal meadow pylon"
@@ -1520,7 +1491,7 @@ class StreamingSpec extends SparkSpecBase {
       "fails loudly") {
     import spark.implicits._
     import graft.operators.{CountMin, Stores}
-    val root = java.nio.file.Files.createTempDirectory("graft_foldslot")
+    val root = tempRoot("graft_foldslot")
     val df = Seq("a", "b", "c").toDF("v")
     df.coalesce(1).write.parquet(root.resolve("in/b1").toString)
     def stream = spark.readStream.schema(df.schema)
@@ -1579,7 +1550,7 @@ class StreamingSpec extends SparkSpecBase {
       "a fresh base root under the FROZEN centroids — same rows, same " +
       "probe verdicts, uncommitted generations excluded") {
     import graft.operators.Similarity
-    val root = java.nio.file.Files.createTempDirectory("graft_vcompact")
+    val root = tempRoot("graft_vcompact")
     val storePath = root.resolve("store").toString
     val newPath = root.resolve("compacted").toString
     val all = Tables.embeddings(spark, sf)
@@ -1633,7 +1604,7 @@ class StreamingSpec extends SparkSpecBase {
       "log past a folded batch re-delivers it as a no-op") {
     import spark.implicits._
     import graft.operators.CountMin
-    val root = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    val root = tempRoot("graft_ckpt")
     val b1 = (1L to 400L).map(_ % 37).toDF("v")
     val b2 = (1L to 300L).map(i => (i * 7) % 41).toDF("v")
     b1.coalesce(1).write.parquet(root.resolve("in/b1").toString)
@@ -1686,7 +1657,7 @@ class StreamingSpec extends SparkSpecBase {
       "desynced index") {
     import spark.implicits._
     import graft.operators.{Dedup, Stores}
-    val root = java.nio.file.Files.createTempDirectory("graft_gatereplay")
+    val root = tempRoot("graft_gatereplay")
     val storePath = root.resolve("store").toString
     val admittedPath = root.resolve("admitted").toString
     val corpus = Tables.documents(spark, sf)
@@ -1767,7 +1738,7 @@ class StreamingSpec extends SparkSpecBase {
       "no duplicated index vectors") {
     import spark.implicits._
     import graft.operators.{Similarity, Stores}
-    val root = java.nio.file.Files.createTempDirectory("graft_vgatereplay")
+    val root = tempRoot("graft_vgatereplay")
     val storePath = root.resolve("store").toString
     val admittedPath = root.resolve("admitted").toString
     val e = Tables.embeddings(spark, sf)

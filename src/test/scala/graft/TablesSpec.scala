@@ -27,7 +27,7 @@ class TablesSpec extends SparkSpecBase {
 
   test("a Spark-written directory: first data file, Spark's stored schema") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_footer").toString
+    val dir = tempRoot("graft_footer").toString
     val tagged = new MetadataBuilder().putString("comment", "kept").build()
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
       .select(col("k"), col("v").as("v", tagged))
